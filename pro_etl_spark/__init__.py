@@ -16,176 +16,6 @@ Design rules (SURVEY.md §2.10, §4):
 
 from pro_etl_spark.registry import QUERIES, ORACLES, register  # noqa: F401
 
-#: The driver grades only the first 50 keys of ``queries()`` per
-#: round. Rotation is SELF-ADVANCING (see ``_rotated``): keys already
-#: present in any CORRECTNESS_r*.json drop behind the never-sampled
-#: backlog, so each round's official sample burns 50 fresh keys.
-#: The two static lists below are the historical round-6 window and
-#: the hand-reviewed round-7 queue head — kept as a stable priority
-#: prefix WITHIN the backlog (and as the loud-failure guard against
-#: silently renaming a queued operator).
-_R06_WINDOW = [
-    "sessionize",
-    "ann_hybrid_rrf",
-    "fn_try_cast",
-    "funnel_attribution",
-    "join_null_safe",
-    "mm_scene_cuts",
-    "stream_stream_left_outer",
-    "window_cumulative_distinct",
-    "window_first_last",
-    "join_asof_tolerance",
-    "join_fuzzy",
-    "fn_datetime_parts",
-    "fn_levenshtein",
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "dedup_canonical_by_quality",
-    "funnel_conversion",
-    "window_rolling_24h",
-    "agg_histogram",
-    "fn_winsorize",
-    "run_observed_metrics",
-    "rollup_two_level",
-    "agg_weighted_avg",
-    "window_gap_fill",
-    "window_interpolate",
-    "agg_mode",
-    "agg_corr",
-    "profile_columns",
-    "anomaly_mad",
-    "unpivot_measures",
-    "agg_incremental",
-    "agg_zscore_outliers",
-    "window_share_of_total",
-    "window_percent_rank",
-    "agg_collect_set_sorted",
-    "agg_approx_topk",
-    "join_cross",
-    "agg_bitmap_distinct",
-    "join_bloom_runtime",
-    "agg_distinct_overlap",
-    "fn_variant",
-    "fn_url_canon",
-    "fn_bitwise",
-    "fn_date_arith",
-    "fn_collation",
-    "minhash_containment",
-    "dedup_minhash_estimate",
-    "text_lm_score",
-    "text_quality_classifier",
-    "stream_late_drop",
-]
-
-#: Never-officially-graded keys that do not fit in the r06 window —
-#: registered right after it so they are the natural r07 window head
-#: (~2 more rounds at 50/round clears the backlog).
-_R07_QUEUE = [
-    "pq_encode",
-    "ann_pq_adc",
-    "ann_ivfpq_topk",
-    "ann_range_search",
-    "embed_quantize_sq8",
-    "mm_chunk_dedup",
-    "layout_bloom_filter",
-    "sink_json",
-    "join_temporal",
-    "merge_cdc_apply",
-    "sql_market_share",
-    "graph_triangles",
-    "retention_cohorts",
-    "window_ewma",
-    "dq_expectations",
-    "join_asof_forward",
-    "pivot_event_counts",
-    "dup_span_profile",
-    "corpus_mix_weights",
-    "text_bm25",
-    "ann_sparse_topk",
-    "sql_top_supplier",
-    "sql_waiting_orders",
-    "sql_customer_distribution",
-    "sql_volume_shipping",
-    "bpe_pair_counts",
-    "fn_mask",
-    "sql_pricing_summary",
-    "sql_revenue_forecast",
-    "join_interval_overlap",
-    "stream_foreach_batch",
-    "sample_per_group",
-    "join_asof_nearest",
-    "sql_min_cost_supplier",
-    "sql_product_profit",
-    "sql_important_stock",
-    "sql_shipmode_priority",
-    "sql_parts_supplier",
-    "sql_promotion_suppliers",
-    "udf_map_in_arrow",
-    "corpus_ngrams",
-    "agg_salted_twophase",
-    "join_salted",
-    "stream_custom_source",
-    "pca_power_top1",
-    "agg_moments",
-    "agg_linear_fit",
-    "agg_gini",
-    "dedup_minhash_shingle",
-    "sql_group_order_all",
-    "sql_with_ties",
-    "agg_argminmax",
-    "events_ohlc",
-    "fn_regexp_extract_all",
-    "text_cooccurrence",
-    "ann_recall_eval",
-    "mm_audio_energy",
-    "sample_importance",
-    "stream_topk_state",
-    "set_except_all",
-    "window_rolling_median",
-    "interval_concurrency",
-    "agg_hll_merge",
-    "anomaly_cusum",
-    "ab_ttest",
-    "ann_mrr_eval",
-    "join_dynamic_partition_pruning",
-    "pack_bestfit",
-    "graph_jaccard_suggest",
-    "sink_manifest_commit",
-    "ann_matryoshka_eval",
-    "dedup_lsh_eval",
-    "window_drawdown",
-    "basket_affinity",
-    "text_rouge2",
-    "rfm_segmentation",
-    "text_rake_keyphrases",
-    "events_peaks",
-    "window_hampel",
-    "fn_luhn",
-    "stream_session_state",
-    "text_embed_hash",
-    "sink_snapshot_time_travel",
-    "graph_kcore",
-    "stream_custom_sink",
-    "survival_km",
-    "markov_transitions",
-    "pareto_abc",
-    "fn_binary_codec",
-    "scan_file_metadata",
-    "text_compression_ratio",
-    "corpus_source_drift",
-    "events_autocorr",
-    "events_benford",
-    "user_streaks",
-    # round-6 additions, never officially graded yet
-    "bpe_train_merges",
-    "skew_key_profile",
-    "text_readability",
-    "pipeline_data_funnel",
-    "events_ks_test",
-    "events_chi_square",
-    "window_holt",
-]
-
 
 def load_all() -> None:
     """Import every operator module so registration side effects run."""
@@ -282,32 +112,24 @@ def _officially_failed(records=None) -> list:
 
 
 def _rotated(mapping, records=None):
-    """Reorder a registry dict: officially-FAILED keys first (their
-    latest driver record is red, so a fix is re-graded the very next
-    round), then never-officially-sampled keys (prior manual windows
-    preserved as a stable prefix among them, so the round-7 queue
-    keeps its reviewed order), then the already-green keys in
-    registration order. Self-advancing: when the driver writes a
-    round's CORRECTNESS file, the next round's front-50 automatically
-    becomes failed keys + the next backlog slice.
+    """Reorder a registry dict: officially-FAILED keys first, then
+    never-officially-sampled keys, then the already-green keys, each
+    group in registration order.
 
-    Raises if a queue key is missing from QUERIES — a renamed or
-    dropped operator must fail loudly here, not silently shrink the
-    officially graded sample.
+    The driver grades only the first 50 keys of ``queries()`` per
+    round, so the order decides what gets graded. A key whose latest
+    record is red goes first so that a fix is re-graded the very next
+    round instead of waiting behind keys that are already green or
+    never sampled; never-sampled keys come next so that every round
+    grades keys the records know nothing about yet.
     """
-    front = _R06_WINDOW + _R07_QUEUE
-    missing = [k for k in front if k not in QUERIES]
-    if missing:
-        raise KeyError(f"grading-window keys not registered: {missing}")
     if records is None:
         records = _official_records()
     seen = _officially_sampled(records)
     failed = [k for k in _officially_failed(records) if k in mapping]
-    ordered = {k: None for k in front}
-    ordered.update((k, None) for k in mapping)
-    fresh = [k for k in ordered if k not in seen and k in mapping]
     out = {k: mapping[k] for k in failed}
-    out.update((k, mapping[k]) for k in fresh if k not in out)
+    fresh = [k for k in mapping if k not in seen and k not in out]
+    out.update((k, mapping[k]) for k in fresh)
     out.update((k, v) for k, v in mapping.items() if k not in out)
     return out
 

@@ -22,46 +22,61 @@ TABLES = (
 )
 
 
-#: per-dataset memo dicts registered by operator modules (trained
-#: model state: corpus counts, k-means centroids, PQ codebooks, PCA
-#: axes, BPE merges, streaming fixture journals …). Every entry is
-#: keyed by a tuple CONTAINING the dataset dir, so
-#: ``invalidate_dataset`` can evict one dataset's artifacts. Modules
-#: append their dicts at import time: ``DATASET_MEMOS.append(_MY_MEMO)``.
-DATASET_MEMOS: list = []
+#: every per-dataset artifact memoized by ``dataset_memo``, keyed
+#: ``(applicationId, dataset dir, tag)``
+_MEMOIZED: dict = {}
+
+
+def dataset_memo(spark: SparkSession, d, tag, build):
+    """Return the artifact memoized under ``(application, d, tag)``,
+    calling ``build()`` to make it on the first request only.
+
+    This is the engine's one reuse mechanism for per-dataset state
+    within a session: trained model state (corpus counts, k-means
+    centroids, PQ codebooks, PCA axes, BPE merges, substring probes),
+    analyzed DataFrames shared by several queries, parsed literal-model
+    Columns, streaming fixture journals and resolved parquet schemas.
+    ``tag`` names the artifact and may be a tuple such as
+    ``("pq_arr", s)``; ``d`` is the dataset dir the artifact derives
+    from, or None for one that derives from no dataset. ``build`` may
+    itself call ``dataset_memo`` for the artifacts it depends on.
+
+    Staleness contract: a memoized artifact never re-checks the
+    filesystem — a count() or footer read per plan construction is
+    exactly the eager-action class scripts/lazy_audit.py bans. If a
+    dataset dir is REWRITTEN within one session, call
+    ``invalidate_dataset(spark, d)``; until then every artifact of
+    ``d`` stays as it was first built.
+    """
+    key = (spark.sparkContext.applicationId, d, tag)
+    if key not in _MEMOIZED:
+        _MEMOIZED[key] = build()
+    return _MEMOIZED[key]
 
 
 def invalidate_dataset(spark: SparkSession, sf_dir: str) -> None:
     """Evict every memoized artifact derived from ``sf_dir`` — call
     this if a dataset directory is REWRITTEN within one session.
 
-    The engine trains bounded model state once per (application,
-    dataset) — corpus counts (`similarity._k_cells` / `_srp_bits`),
-    centroids, codebooks, PCA axes — and caches hot derived tables.
-    Those memos deliberately never re-check the filesystem (a count()
-    per plan construction is exactly the eager-action class
-    scripts/lazy_audit.py bans), so overwriting a dataset dir mid-
-    session would otherwise leave the Spark side training against the
-    OLD corpus while the SQL oracles recompute from the new one. This
-    is the documented invalidation point: drop the memo entries, clear
-    the Spark cache, refresh the file listing so subsequent scans
-    re-list, and re-register this dataset's temp views (whose pinned
-    schemas would otherwise go stale) if ``register_views`` had been
-    called for it.
+    Every ``dataset_memo`` artifact is kept until this is called, so
+    overwriting a dataset dir mid-session would otherwise leave the
+    Spark side training against the OLD corpus while the SQL oracles
+    recompute from the new one. This is the documented invalidation
+    point: drop the dataset's memo entries, clear the Spark cache,
+    refresh the file listing so subsequent scans re-list, and
+    re-register this dataset's temp views (whose pinned schemas would
+    otherwise go stale) if ``register_views`` had been called for it.
 
     Scope note (deliberate coarseness): ``spark.catalog.clearCache()``
     evicts cached frames for EVERY dataset in the session, not just
     ``sf_dir`` — cached plans don't expose their source path, so
     per-dataset eviction isn't reliably possible, and a rewrite is a
     rare maintenance event where re-warming other datasets' caches is
-    the cheap, safe cost. The MEMO eviction, by contrast, is precise:
-    only keys mentioning ``sf_dir`` drop.
+    the cheap, safe cost. The memo eviction, by contrast, is precise:
+    only artifacts of ``sf_dir`` drop.
     """
-    for memo in DATASET_MEMOS:
-        for key in [
-            k for k in memo if isinstance(k, tuple) and sf_dir in k
-        ]:
-            del memo[key]
+    for key in [k for k in _MEMOIZED if k[1] == sf_dir]:
+        del _MEMOIZED[key]
     spark.catalog.clearCache()
     for name in TABLES:
         try:
@@ -93,26 +108,21 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-#: resolved RAW parquet schema per (application, dataset, table) —
-#: with an explicit schema, ``spark.read`` skips footer inference,
-#: which otherwise fires one tiny Spark job per fresh read. That job
-#: is metadata-sized but it made every plan CONSTRUCTION an action
-#: (353 of 517 queries showed exactly this 1 job in the round-9
-#: lazy audit), and at 100 TB re-reading footers per constructed
-#: query is pure waste. Registered in DATASET_MEMOS: a rewritten
-#: dataset dir needs ``invalidate_dataset`` like every other memo.
-_SCHEMA_MEMO: dict = {}
-DATASET_MEMOS.append(_SCHEMA_MEMO)
-
-
-def _read_memoized(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+# Raw parquet schemas are memoized per (application, dataset, table):
+# with an explicit schema, ``spark.read`` skips footer inference,
+# which otherwise fires one tiny Spark job per fresh read. That job
+# is metadata-sized but it made every plan CONSTRUCTION an action
+# (353 of 517 queries showed exactly this 1 job in the round-9
+# lazy audit), and at 100 TB re-reading footers per constructed
+# query is pure waste.
+def _read_memoized(
+    spark: SparkSession, sf_dir: str, name: str, read_inferring=None
+) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
+    schema = dataset_memo(
+        spark, sf_dir, ("schema", name),
+        lambda: (read_inferring or spark.read.parquet)(path).schema,
+    )
     return spark.read.schema(schema).parquet(path)
 
 
@@ -134,29 +144,27 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     The session timezone is pinned to UTC (registry.py) so the NTZ→LTZ
     cast is a re-tag, not a wall-clock shift, and matches DuckDB's naive
     µs TIMESTAMP read of the same file."""
-    from pyspark.sql import functions as F
 
-    path = f"{sf_dir}/events.parquet"
-    key = (spark.sparkContext.applicationId, sf_dir, "events")
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is not None:
-        # the nanosAsLong conf (if it was needed) is already set from
-        # the first resolution — explicit schema skips re-inference
-        return normalize_events_ts(spark.read.schema(schema).parquet(path))
-    try:
-        df = spark.read.parquet(path)
-    except Exception as e:
-        # Retry ONLY the TIMESTAMP(NANOS)-footer failure under the
-        # legacy conf; anything else (missing path, corrupt footer,
-        # permissions) re-raises unchanged — retrying those would mask
-        # the first error as the retry's and leak the conf session-wide.
-        msg = str(e)
-        if "nanosAsLong" not in msg and "TIMESTAMP(NANOS" not in msg:
-            raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    _SCHEMA_MEMO[key] = df.schema
-    return normalize_events_ts(df)
+    def read_inferring(path):
+        try:
+            return spark.read.parquet(path)
+        except Exception as e:
+            # Retry ONLY the TIMESTAMP(NANOS)-footer failure under the
+            # legacy conf; anything else (missing path, corrupt footer,
+            # permissions) re-raises unchanged — retrying those would
+            # mask the first error as the retry's and leak the conf
+            # session-wide.
+            msg = str(e)
+            if "nanosAsLong" not in msg and "TIMESTAMP(NANOS" not in msg:
+                raise
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            return spark.read.parquet(path)
+
+    # once the schema is memoized, the nanosAsLong conf (if it was
+    # needed) is already set and the explicit schema skips re-inference
+    return normalize_events_ts(
+        _read_memoized(spark, sf_dir, "events", read_inferring)
+    )
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

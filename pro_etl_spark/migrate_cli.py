@@ -219,8 +219,16 @@ def read_mapping_csv(spark: SparkSession, path: str) -> DataFrame:
     filtering all see identical keys. First-wins order is
     (file path, in-partition row id): exact row order within each file
     for unsplit small files — the mapping contract — and deterministic
-    file order if a glob ever matches several."""
-    m = spark.read.schema(CSV_SCHEMA).option("header", True).csv(path)
+    file order if a glob ever matches several. Quoting is RFC 4180, as
+    the reference's pandas reader has it: a doubled quote inside a
+    quoted field is one literal quote (Spark's default escape is a
+    backslash, which kept both quotes)."""
+    m = (
+        spark.read.schema(CSV_SCHEMA)
+        .option("header", True)
+        .option("escape", '"')
+        .csv(path)
+    )
     m = m.withColumn("_file", F.col("_metadata.file_path")).withColumn(
         "ord", F.monotonically_increasing_id()
     )

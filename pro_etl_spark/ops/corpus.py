@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, SparkSession, Window
 from pyspark.sql import DataFrame
 
-from pro_etl_spark.io import load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.dedup import (
     _CLUSTERS_CTE,
     _LSH_PAIRS_CTE,
@@ -1507,14 +1507,6 @@ SUBSTR_PROBE_CAP = 1_000_000
 #: regardless of document length, and safe × 32 concurrent tasks
 _SUBSTR_CHUNK = 100_000
 
-#: collected probe list per (app, dataset) — bounded (eval-set-sized)
-#: driver model state, memoized so repeat constructions stay lazy
-_SUBSTR_PROBES_MEMO: dict = {}
-
-from pro_etl_spark.io import DATASET_MEMOS as _DATASET_MEMOS  # noqa: E402
-
-_DATASET_MEMOS.append(_SUBSTR_PROBES_MEMO)
-
 
 @register(
     "decontaminate_substring",
@@ -1588,9 +1580,8 @@ def decontaminate_substring(spark: SparkSession, d: str) -> DataFrame:
     docs = load(spark, d, "documents")
     min_len = SUBSTR_PROBE_START + SUBSTR_PROBE_LEN - 1
     L = SUBSTR_PROBE_LEN
-    key = (spark.sparkContext.applicationId, d)
-    probes = _SUBSTR_PROBES_MEMO.get(key)
-    if probes is None:
+
+    def collect_probes() -> list:
         probes = sorted(
             r.probe
             for r in docs.where(
@@ -1614,7 +1605,9 @@ def decontaminate_substring(spark: SparkSession, d: str) -> DataFrame:
                 "longer holds at this corpus/eval ratio — shrink the "
                 "probe set or raise the cap deliberately"
             )
-        _SUBSTR_PROBES_MEMO[key] = probes
+        return probes
+
+    probes = dataset_memo(spark, d, "substr_probes", collect_probes)
 
     # polynomial window hash over code points (utf-32 decode matches
     # Spark's code-point substring semantics on every plane); uint64

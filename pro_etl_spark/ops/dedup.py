@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from pro_etl_spark.io import DATASET_MEMOS, load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.hashing import DUCK_HASH60, hash60
 from pro_etl_spark.registry import register
 
@@ -36,11 +36,6 @@ MAX_BUCKET = 64
 SIMHASH_BITS = 32
 SIMHASH_MAX_HAMMING = 3
 COSINE_THRESHOLD = 0.8
-
-#: converged cluster labelings memoized per (Spark application, dataset)
-#: — see ``dedup_clusters``
-_CLUSTERS_MEMO: dict = {}
-DATASET_MEMOS.append(_CLUSTERS_MEMO)
 
 #: Sampled certification (round 10): the EXACT pairwise truth
 #: baselines behind the recall-certification keys (`dedup_lsh_eval`,
@@ -305,27 +300,10 @@ def _minhash_perms(th60: Column) -> Column:
     )
 
 
-#: shared-builder DataFrame memos (r13): the cached token/shingle/pair
-#: tables were REBUILT as fresh DataFrame objects by every consumer —
-#: the data was cached (CacheManager matches the plan), but each
-#: consumer re-paid Catalyst ANALYSIS of the full builder subtree
-#: (measured: constructing the shingle-LSH pair plan alone is ~1.0 s,
-#: and pipeline_data_funnel spent 4.1 s of its bench row in pure
-#: construction, zero jobs). A DataFrame is immutable, so handing
-#: every consumer the SAME object is semantically identical and pays
-#: the analysis once per session per dataset — the same pattern as
-#: ``_CLUSTERS_MEMO``. Evicted by ``io.invalidate_dataset``.
-_DF_MEMO: dict = {}
-DATASET_MEMOS.append(_DF_MEMO)
-
-
-def _df_memo(spark: SparkSession, d: str, tag: str, build):
-    key = (spark.sparkContext.applicationId, d, tag)
-    df = _DF_MEMO.get(key)
-    if df is None:
-        df = build()
-        _DF_MEMO[key] = df
-    return df
+# Shared builder DataFrames go through ``io.dataset_memo``: every
+# consumer gets the SAME immutable DataFrame object, so the builder
+# subtree is analyzed once per session per dataset, not once per
+# consumer (constructing the shingle-LSH pair plan alone is ~1.0 s).
 
 
 def _token_table(spark: SparkSession, d: str) -> DataFrame:
@@ -338,7 +316,7 @@ def _token_table(spark: SparkSession, d: str) -> DataFrame:
     evaluate it once per (token, permutation) — 16× the hashing for
     MinHash, 32× for SimHash (measured: sf0.1 LSH 5.1 s → 3.3 s). At
     100 TB this is the persisted tokenization table next to the corpus."""
-    return _df_memo(
+    return dataset_memo(
         spark, d, "token_table",
         lambda: (
             load(spark, d, "documents")
@@ -543,7 +521,7 @@ def dedup_minhash_lsh(spark: SparkSession, d: str) -> DataFrame:
         # pipeline_clean_corpus, and graph_pagerank in the same session
         # — Spark's CacheManager matches the identical plan, so LSH
         # runs once per dataset (at 100 TB this is the persisted pair
-        # table). _df_memo (r13) additionally hands every consumer the
+        # table). dataset_memo additionally hands every consumer the
         # same DataFrame object, so the pair PLAN is analyzed once too.
         return (
             sized.where(jac >= JACCARD_THRESHOLD)
@@ -551,7 +529,7 @@ def dedup_minhash_lsh(spark: SparkSession, d: str) -> DataFrame:
             .cache()
         )
 
-    return _df_memo(spark, d, "minhash_lsh_pairs", build)
+    return dataset_memo(spark, d, "minhash_lsh_pairs", build)
 
 
 #: near-containment threshold (|A∩B| / min|A|,|B|): higher than the
@@ -627,7 +605,7 @@ def _simhash_table(spark: SparkSession, d: str) -> DataFrame:
     interpreted vote-fold runs once per session per dataset and all
     three SimHash operators (fingerprints, blocked pairs, Hamming-LSH)
     read the cached result instead of re-folding per join side."""
-    return _df_memo(
+    return dataset_memo(
         spark, d, "simhash_table",
         lambda: (
             _token_table(spark, d)
@@ -855,14 +833,12 @@ def dedup_clusters(spark: SparkSession, d: str) -> DataFrame:
     cache matching — memoizing the driver loop's output avoids running
     LSH + propagation twice per sweep.
     """
-    memo_key = (spark.sparkContext.applicationId, d, "unigram")
-    cached = _CLUSTERS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    pairs = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
-    result = _cc_min_label(pairs)
-    _CLUSTERS_MEMO[memo_key] = result
-    return result
+    return dataset_memo(
+        spark, d, "clusters_unigram",
+        lambda: _cc_min_label(
+            dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
+        ),
+    )
 
 
 def _cc_min_label(pairs: DataFrame) -> DataFrame:
@@ -1005,7 +981,7 @@ def corpus_table(spark: SparkSession, d: str) -> DataFrame:
     2 of 32 cores."""
     par = spark.sparkContext.defaultParallelism
     e = load(spark, d, "embeddings")
-    return _df_memo(
+    return dataset_memo(
         spark, d, "corpus_table",
         lambda: (
             e.select(
@@ -1265,7 +1241,7 @@ def _shingle_table(spark: SparkSession, d: str) -> DataFrame:
             )
         )
 
-    return _df_memo(
+    return dataset_memo(
         spark, d, "shingle_table",
         lambda: (
             load(spark, d, "documents")
@@ -1370,10 +1346,10 @@ def dedup_minhash_shingle_lsh(spark: SparkSession, d: str) -> DataFrame:
             .cache()
         )
 
-    # _df_memo (r13): analyzing this pair plan alone cost ~1.0 s and it
+    # dataset_memo: analyzing this pair plan alone cost ~1.0 s and it
     # is embedded by pipeline_data_funnel, the shingle clusters/eval
     # keys and graph loops — one shared DataFrame object pays it once.
-    return _df_memo(spark, d, "shingle_lsh_pairs", build)
+    return dataset_memo(spark, d, "shingle_lsh_pairs", build)
 
 
 @register(
@@ -1552,14 +1528,12 @@ def dedup_shingle_clusters(spark: SparkSession, d: str) -> DataFrame:
     (one keyed shuffle per round, checkpointed lineage), same
     recursive-CTE oracle — only the pair generator differs. Memoized
     per (session, dataset) like its unigram twin."""
-    memo_key = (spark.sparkContext.applicationId, d, "shingle")
-    cached = _CLUSTERS_MEMO.get(memo_key)
-    if cached is not None:
-        return cached
-    pairs = dedup_minhash_shingle_lsh(spark, d).select("doc_a", "doc_b")
-    result = _cc_min_label(pairs)
-    _CLUSTERS_MEMO[memo_key] = result
-    return result
+    return dataset_memo(
+        spark, d, "clusters_shingle",
+        lambda: _cc_min_label(
+            dedup_minhash_shingle_lsh(spark, d).select("doc_a", "doc_b")
+        ),
+    )
 
 
 @register(

@@ -34,15 +34,24 @@ DAMPING = 0.85
 ROUNDS = 5
 _DEC30 = "decimal(38,30)"
 
+#: the undirected LSH pair graph as a directed edge list, for the oracles
+#: built on ``_LSH_PAIRS_CTE``. DuckDB inlines a plain CTE at every
+#: reference, and the unrolled-round oracles reference their edge list
+#: and their previous round several times each, so every round would
+#: re-derive the whole chain below it (the plan doubles per round and
+#: ran the tests out of memory). MATERIALIZED evaluates each once; it
+#: changes how DuckDB evaluates the oracle, never what it returns.
+_SYM_EDGES_CTE = """
+    , edges AS MATERIALIZED (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL SELECT doc_b, doc_a FROM pairs
+    )"""
+
 
 def _oracle_sql() -> str:
     """Unroll ROUNDS PageRank updates as chained CTEs on top of the
     LSH pair CTE (shared with the dedup family)."""
-    sql = _LSH_PAIRS_CTE + f"""
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), deg AS (
+    sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + f""", deg AS (
       SELECT src, COUNT(*) AS d FROM edges GROUP BY src
     ), nodes AS (
       SELECT DISTINCT src AS node FROM edges
@@ -53,7 +62,7 @@ def _oracle_sql() -> str:
     )"""
     prev = "r0"
     for i in range(1, ROUNDS + 1):
-        sql += f""", r{i} AS (
+        sql += f""", r{i} AS MATERIALIZED (
       SELECT n.node,
              (1 - {DAMPING}) / (SELECT n FROM nn)
              + {DAMPING} * CAST(SUM(CAST(p.r / deg.d AS DECIMAL(38,30)))
@@ -368,19 +377,15 @@ def _lpa_oracle() -> str:
     chained CTEs on the LSH pair graph — count neighbor labels, take
     the (cnt DESC, label ASC) winner per node — mirroring the Spark
     loop's deterministic tiebreak exactly."""
-    sql = _LSH_PAIRS_CTE + """
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), l0 AS (
+    sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + """, l0 AS (
       SELECT DISTINCT src AS node, src AS label FROM edges
     )"""
     for i in range(1, LPA_ROUNDS + 1):
-        sql += f""", c{i} AS (
+        sql += f""", c{i} AS MATERIALIZED (
       SELECT e.dst AS node, p.label, COUNT(*) AS cnt
       FROM edges e JOIN l{i - 1} p ON p.node = e.src
       GROUP BY e.dst, p.label
-    ), l{i} AS (
+    ), l{i} AS MATERIALIZED (
       SELECT node, label FROM (
         SELECT node, label,
                ROW_NUMBER() OVER (PARTITION BY node
@@ -464,18 +469,14 @@ def _bfs_oracle() -> str:
     round keeps the per-node MIN of (previous distance, any neighbor's
     distance + 1) — pure integer math, deterministic seeds (the
     BFS_SEEDS smallest node ids)."""
-    sql = _LSH_PAIRS_CTE + f"""
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), d0 AS (
+    sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + f""", d0 AS MATERIALIZED (
       SELECT node, 0 AS dist FROM (
         SELECT DISTINCT src AS node FROM edges ORDER BY node
         LIMIT {BFS_SEEDS}
       )
     )"""
     for i in range(1, BFS_ROUNDS + 1):
-        sql += f""", d{i} AS (
+        sql += f""", d{i} AS MATERIALIZED (
       SELECT node, MIN(dist) AS dist FROM (
         SELECT node, dist FROM d{i - 1}
         UNION ALL
@@ -585,29 +586,25 @@ def _ppr_oracle() -> str:
     ((85·m) div (100·deg) per edge) and teleports 15% of the TOTAL
     round mass back to the seed set — all integral division, so
     rounds are bit-exact cross-engine."""
-    sql = _LSH_PAIRS_CTE + f"""
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), deg AS (
+    sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + f""", deg AS (
       SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src
     ), seeds AS (
       SELECT node FROM (
         SELECT DISTINCT src AS node FROM edges ORDER BY node
         LIMIT {BFS_SEEDS}
       )
-    ), m0 AS (
+    ), m0 AS MATERIALIZED (
       SELECT node, CAST(1000000 // {BFS_SEEDS} AS BIGINT) AS m FROM seeds
     )"""
     for i in range(1, PPR_ROUNDS + 1):
-        sql += f""", spread{i} AS (
+        sql += f""", spread{i} AS MATERIALIZED (
       SELECT e.dst AS node,
              SUM((85 * p.m) // (100 * d.deg)) AS m
       FROM edges e
       JOIN m{i - 1} p ON p.node = e.src
       JOIN deg d ON d.node = e.src
       GROUP BY e.dst
-    ), m{i} AS (
+    ), m{i} AS MATERIALIZED (
       SELECT COALESCE(s.node, sd.node) AS node,
              COALESCE(s.m, 0)
              + CASE WHEN sd.node IS NOT NULL
@@ -704,7 +701,7 @@ def _modularity_oracle() -> str:
     from pro_etl_spark.registry import ORACLES
 
     return _LSH_PAIRS_CTE + f"""
-    , lpa AS ({ORACLES["graph_label_propagation"]}),
+    , lpa AS MATERIALIZED ({ORACLES["graph_label_propagation"]}),
     m AS (SELECT COUNT(*) AS m FROM pairs),
     deg AS (
       SELECT node, COUNT(*) AS deg FROM (
@@ -812,11 +809,8 @@ def graph_modularity(spark: SparkSession, d: str) -> DataFrame:
 @register(
     "graph_assortativity",
     oracle=_LSH_PAIRS_CTE
-    + """
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), deg AS (
+    + _SYM_EDGES_CTE
+    + """, deg AS (
       SELECT src AS node, COUNT(*) AS d FROM edges GROUP BY src
     ), xy AS (
       SELECT da.d AS x, db.d AS y
@@ -906,8 +900,8 @@ def _hits_oracle() -> str:
     the id-oriented LSH pair digraph (doc_a < doc_b by construction,
     so orientation is deterministic)."""
     sql = _LSH_PAIRS_CTE + """
-    , e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs),
-    nodes AS (
+    , e AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM pairs),
+    nodes AS MATERIALIZED (
       SELECT src AS node FROM e UNION SELECT dst FROM e
     ), h0 AS (
       SELECT node, CAST(1.0 AS DOUBLE) AS h FROM nodes
@@ -920,17 +914,17 @@ def _hits_oracle() -> str:
     # referenced exactly once, so the unrolled chain stays linear.
     prev = "h0"
     for i in range(1, HITS_ROUNDS + 1):
-        sql += f""", a{i}d AS (
+        sql += f""", a{i}d AS MATERIALIZED (
       SELECT e.dst AS node, SUM(CAST(p.h AS DECIMAL(38,30))) AS s
       FROM e JOIN {prev} p ON p.node = e.src GROUP BY e.dst
-    ), a{i} AS (
+    ), a{i} AS MATERIALIZED (
       SELECT node, CAST(s AS DOUBLE)
                    / CAST(SUM(s) OVER () AS DOUBLE) AS a
       FROM a{i}d
-    ), h{i}d AS (
+    ), h{i}d AS MATERIALIZED (
       SELECT e.src AS node, SUM(CAST(a.a AS DECIMAL(38,30))) AS s
       FROM e JOIN a{i} a ON a.node = e.dst GROUP BY e.src
-    ), h{i} AS (
+    ), h{i} AS MATERIALIZED (
       SELECT node, CAST(s AS DOUBLE)
                    / CAST(SUM(s) OVER () AS DOUBLE) AS h
       FROM h{i}d
@@ -1038,18 +1032,14 @@ def _closeness_oracle() -> str:
     """Per-landmark BFS unrolled as chained CTEs (the _bfs_oracle
     pattern with a landmark column), then harmonic-sum per node with
     1/d floor-quantized to integer micros."""
-    sql = _LSH_PAIRS_CTE + f"""
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), d0 AS (
+    sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + f""", d0 AS MATERIALIZED (
       SELECT node AS lm, node, 0 AS dist FROM (
         SELECT DISTINCT src AS node FROM edges ORDER BY node
         LIMIT {CLOSENESS_LANDMARKS}
       )
     )"""
     for i in range(1, CLOSENESS_ROUNDS + 1):
-        sql += f""", d{i} AS (
+        sql += f""", d{i} AS MATERIALIZED (
       SELECT lm, node, MIN(dist) AS dist FROM (
         SELECT lm, node, dist FROM d{i - 1}
         UNION ALL

@@ -14,7 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pro_etl_spark.io import DATASET_MEMOS, load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.dedup import (
     _CC_TAIL_CTE,
     _cc_min_label,
@@ -513,10 +513,8 @@ def _emb_table(spark: SparkSession, d: str) -> DataFrame:
     exactly this). At 100 TB the corpus arrives with thousands of
     splits and this reshape is a no-op by comparison; partition by
     compute cost, not bytes, for vector work."""
-    from pro_etl_spark.ops.dedup import _df_memo
-
     par = spark.sparkContext.defaultParallelism
-    return _df_memo(
+    return dataset_memo(
         spark, d, "emb_table",
         lambda: (
             load(spark, d, "embeddings")
@@ -543,11 +541,13 @@ def _sqdist(a, b):
     )
 
 
-#: corpus row count memoized per (application, dataset) — one tiny
-#: count() job at quantizer-TRAINING time (the same train-once step
-#: that already collects the centroid model state)
-_N_VEC_MEMO: dict = {}
-DATASET_MEMOS.append(_N_VEC_MEMO)
+def _n_vec(spark: SparkSession, d: str) -> int:
+    """Corpus row count, memoized per (application, dataset) — one tiny
+    count() job at quantizer-TRAINING time (the same train-once step
+    that already collects the centroid model state)."""
+    return dataset_memo(
+        spark, d, "n_vec", lambda: load(spark, d, "embeddings").count()
+    )
 
 
 def _k_cells(spark: SparkSession, d: str) -> int:
@@ -558,21 +558,11 @@ def _k_cells(spark: SparkSession, d: str) -> int:
     (same integer count, same double sqrt/ceil), so every oracle in
     the k-means family stays value-exact at every SF. The count runs
     once per (application, dataset) as part of quantizer training —
-    bounded model-state work, like the centroid collect it precedes.
-
-    Staleness contract: the memo deliberately never re-checks the
-    filesystem (a count() per plan construction is the eager-action
-    class scripts/lazy_audit.py bans). If a dataset dir is REWRITTEN
-    within one session, call ``io.invalidate_dataset(spark, d)`` —
-    the registered eviction point for this memo and every other
-    per-dataset model artifact (centroids, codebooks, PCA axes)."""
+    bounded model-state work, like the centroid collect it precedes
+    (``io.dataset_memo`` states when it goes stale)."""
     import math
 
-    key = (spark.sparkContext.applicationId, d)
-    n = _N_VEC_MEMO.get(key)
-    if n is None:
-        n = load(spark, d, "embeddings").count()
-        _N_VEC_MEMO[key] = n
+    n = _n_vec(spark, d)
     return max(K_CELLS, math.ceil(math.sqrt(n))) if n else K_CELLS
 
 
@@ -602,12 +592,6 @@ def _kmeans_centroids(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-#: trained coarse-quantizer centroids memoized per (application,
-#: dataset) — model state, not data (K_CELLS × 64 doubles)
-_KM_CB_MEMO: dict = {}
-DATASET_MEMOS.append(_KM_CB_MEMO)
-
-
 def _km_centroid_rows(spark: SparkSession, d: str):
     """The trained coarse quantizer as driver-side model state: a
     cid-sorted list of ``(cid, [64 floats])``, collected ONCE per
@@ -617,30 +601,26 @@ def _km_centroid_rows(spark: SparkSession, d: str):
     past the point where a literal expression is comfortable (~1e4
     cells) the natural swap is a broadcast-DataFrame argmin join, same
     plan shape, kept literal here for cross-engine value exactness)."""
-    key = (spark.sparkContext.applicationId, d)
-    rows = _KM_CB_MEMO.get(key)
-    if rows is None:
-        rows = sorted(
+    return dataset_memo(
+        spark, d, "km_centroids",
+        lambda: sorted(
             (r["cid"], [float(v) for v in r["cemb"]])
             for r in _kmeans_centroids(spark, d).collect()
-        )
-        _KM_CB_MEMO[key] = rows
-    return rows
+        ),
+    )
 
 
 def _km_centroids_arr(spark: SparkSession, d: str):
     """Literal ``array<struct<cid,cemb>>`` of the trained coarse
     quantizer (cid-sorted), for in-row argmin assignment and probe
     ranking. Built as one ``F.expr`` parse (see ``_dbl_arr_sql``),
-    memoized per (application, dataset) — see ``_CB_EXPR_MEMO``
-    (defined below; resolved at call time): the ⌈√N⌉×64-double parse
-    cost ~0.5 s per consuming key at sf0.1."""
-    key = (spark.sparkContext.applicationId, d, "km_arr")
-    col = _CB_EXPR_MEMO.get(key)
-    if col is None:
-        col = _cb_arr_expr(_km_centroid_rows(spark, d))
-        _CB_EXPR_MEMO[key] = col
-    return col
+    memoized per (application, dataset) like every parsed literal model
+    (see ``_pq_codebook_arr``): the ⌈√N⌉×64-double parse cost ~0.5 s
+    per consuming key at sf0.1."""
+    return dataset_memo(
+        spark, d, "km_arr",
+        lambda: _cb_arr_expr(_km_centroid_rows(spark, d)),
+    )
 
 
 def _km_centroids_df(spark: SparkSession, d: str) -> DataFrame:
@@ -678,14 +658,6 @@ def _km_centroids_df(spark: SparkSession, d: str) -> DataFrame:
     return spark.createDataFrame(data, schema)
 
 
-#: assignment DataFrame memoized per (application, dataset): the
-#: DataFrame object is immutable and its .cache() is session-level, so
-#: handing every consumer the SAME object also spares re-analyzing the
-#: assignment subtree per consuming query.
-_KM_ASSIGN_MEMO: dict = {}
-DATASET_MEMOS.append(_KM_ASSIGN_MEMO)
-
-
 def _kmeans_assignment(spark: SparkSession, d: str) -> DataFrame:
     """One-Lloyd-iteration assignment ``(vec_id, cell, dist)`` — shared
     by ``ivf_kmeans_assign``, ``dedup_embedding_kmeans`` and the
@@ -696,30 +668,30 @@ def _kmeans_assignment(spark: SparkSession, d: str) -> DataFrame:
     size): same struct(dist, cid) argmin and tie-break as ``_assign``,
     one BroadcastNestedLoopJoin of a single model row instead of a
     ⌈√N⌉×64-literal expression tree in every consumer's plan."""
-    memo_key = (spark.sparkContext.applicationId, d)
-    memo = _KM_ASSIGN_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    best = F.array_min(
-        F.transform(
-            F.col("carr"),
-            lambda c: F.struct(
-                _sqdist(F.col("emb"), c["cemb"]).alias("dist"),
-                c["cid"].alias("cid"),
-            ),
+
+    def build() -> DataFrame:
+        best = F.array_min(
+            F.transform(
+                F.col("carr"),
+                lambda c: F.struct(
+                    _sqdist(F.col("emb"), c["cemb"]).alias("dist"),
+                    c["cid"].alias("cid"),
+                ),
+            )
         )
-    )
-    out = (
-        _emb_table(spark, d)
-        .crossJoin(F.broadcast(_km_centroids_df(spark, d)))
-        .select("vec_id", best.alias("b"))
-        .select(
-            "vec_id", F.col("b.cid").alias("cell"), F.col("b.dist").alias("dist")
+        return (
+            _emb_table(spark, d)
+            .crossJoin(F.broadcast(_km_centroids_df(spark, d)))
+            .select("vec_id", best.alias("b"))
+            .select(
+                "vec_id",
+                F.col("b.cid").alias("cell"),
+                F.col("b.dist").alias("dist"),
+            )
+            .cache()
         )
-        .cache()
-    )
-    _KM_ASSIGN_MEMO[memo_key] = out
-    return out
+
+    return dataset_memo(spark, d, "km_assignment", build)
 
 
 def _assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
@@ -1219,15 +1191,17 @@ _PQ_ALL_CTES = (
 )
 
 
-#: trained PQ codebooks memoized per (Spark application, dataset) —
-#: model state, not data
-_PQ_CB_MEMO: dict = {}
-DATASET_MEMOS.append(_PQ_CB_MEMO)
-
-
 def _pq_codebook_rows(spark: SparkSession, d: str, s: int):
-    """Subspace ``s``'s trained codebook as driver-side model state:
-    a sorted list of ``(cid, [PQ_SUBDIM floats])``.
+    """Subspace ``s``'s trained codebook as driver-side model state: a
+    sorted list of ``(cid, [PQ_SUBDIM floats])``. All PQ_M codebooks
+    are trained together once per (application, dataset)."""
+    return dataset_memo(
+        spark, d, "pq_codebooks", lambda: _train_pq_codebooks(spark, d)
+    )[s]
+
+
+def _train_pq_codebooks(spark: SparkSession, d: str) -> dict:
+    """Every subspace's codebook, keyed by subspace.
 
     Training (seed with the first PQ_K vectors, one Lloyd iteration
     over the TRAIN_N sample — the same bounded-sample posture as the
@@ -1247,79 +1221,73 @@ def _pq_codebook_rows(spark: SparkSession, d: str, s: int):
     struct(dist, cid) minimum over cid-sorted centroids as ``_assign``,
     means fold members in vec_id order, and collected doubles
     round-trip IEEE-exactly through literals."""
-    key = (spark.sparkContext.applicationId, d)
-    books = _PQ_CB_MEMO.get(key)
-    if books is None:
-        seed_rows = sorted(
-            (r["vec_id"], [float(v) for v in r["emb"]])
-            for r in _emb_table(spark, d)
-            .where(F.col("vec_id") < PQ_K)
-            .collect()
-        )
-        if not seed_rows:  # 0-row corpus: nothing to train
-            books = {sub: [] for sub in range(PQ_M)}
-            _PQ_CB_MEMO[key] = books
-            return books[s]
-        per_s = []
-        for sub in range(PQ_M):
-            lo, hi = sub * PQ_SUBDIM, (sub + 1) * PQ_SUBDIM
-            seeds_lit = F.expr(
-                "array("
-                + ",".join(
-                    f"named_struct('cid', CAST({cid} AS BIGINT), "
-                    f"'cemb', {_dbl_arr_sql(emb[lo:hi])})"
-                    for cid, emb in seed_rows
-                )
-                + ")"
+    seed_rows = sorted(
+        (r["vec_id"], [float(v) for v in r["emb"]])
+        for r in _emb_table(spark, d)
+        .where(F.col("vec_id") < PQ_K)
+        .collect()
+    )
+    if not seed_rows:  # 0-row corpus: nothing to train
+        return {sub: [] for sub in range(PQ_M)}
+    per_s = []
+    for sub in range(PQ_M):
+        lo, hi = sub * PQ_SUBDIM, (sub + 1) * PQ_SUBDIM
+        seeds_lit = F.expr(
+            "array("
+            + ",".join(
+                f"named_struct('cid', CAST({cid} AS BIGINT), "
+                f"'cemb', {_dbl_arr_sql(emb[lo:hi])})"
+                for cid, emb in seed_rows
             )
-            sv = F.slice(F.col("emb"), lo + 1, PQ_SUBDIM)
-            best = F.array_min(
-                F.transform(
-                    seeds_lit,
-                    lambda c: F.struct(
-                        _sqdist(sv, c["cemb"]).alias("dist"),
-                        c["cid"].alias("cid"),
-                    ),
-                )
-            )
-            per_s.append(
-                F.struct(
-                    F.lit(sub).alias("s"),
-                    best["cid"].alias("cid"),
-                    sv.alias("sv"),
-                )
-            )
-        assigned = (
-            _emb_table(spark, d)
-            .where(F.col("vec_id") < TRAIN_N)
-            .select("vec_id", F.explode(F.array(*per_s)).alias("x"))
-            .select("vec_id", "x.s", "x.cid", "x.sv")
+            + ")"
         )
-        means = assigned.groupBy("s", "cid").agg(
-            F.array_sort(
-                F.collect_list(F.struct("vec_id", F.col("sv").alias("emb")))
-            ).alias("ms")
-        )
-        trained = means.select(
-            "s",
-            "cid",
+        sv = F.slice(F.col("emb"), lo + 1, PQ_SUBDIM)
+        best = F.array_min(
             F.transform(
-                F.sequence(F.lit(1), F.lit(PQ_SUBDIM)),
-                lambda dim: F.aggregate(
-                    F.col("ms"),
-                    F.lit(0.0),
-                    lambda acc, m: acc + F.element_at(m["emb"], dim),
-                )
-                / F.size("ms"),
-            ).alias("cemb"),
+                seeds_lit,
+                lambda c: F.struct(
+                    _sqdist(sv, c["cemb"]).alias("dist"),
+                    c["cid"].alias("cid"),
+                ),
+            )
         )
-        books = {sub: [] for sub in range(PQ_M)}
-        for r in trained.collect():
-            books[r["s"]].append((r["cid"], [float(v) for v in r["cemb"]]))
-        for sub in books:
-            books[sub].sort()
-        _PQ_CB_MEMO[key] = books
-    return books[s]
+        per_s.append(
+            F.struct(
+                F.lit(sub).alias("s"),
+                best["cid"].alias("cid"),
+                sv.alias("sv"),
+            )
+        )
+    assigned = (
+        _emb_table(spark, d)
+        .where(F.col("vec_id") < TRAIN_N)
+        .select("vec_id", F.explode(F.array(*per_s)).alias("x"))
+        .select("vec_id", "x.s", "x.cid", "x.sv")
+    )
+    means = assigned.groupBy("s", "cid").agg(
+        F.array_sort(
+            F.collect_list(F.struct("vec_id", F.col("sv").alias("emb")))
+        ).alias("ms")
+    )
+    trained = means.select(
+        "s",
+        "cid",
+        F.transform(
+            F.sequence(F.lit(1), F.lit(PQ_SUBDIM)),
+            lambda dim: F.aggregate(
+                F.col("ms"),
+                F.lit(0.0),
+                lambda acc, m: acc + F.element_at(m["emb"], dim),
+            )
+            / F.size("ms"),
+        ).alias("cemb"),
+    )
+    books = {sub: [] for sub in range(PQ_M)}
+    for r in trained.collect():
+        books[r["s"]].append((r["cid"], [float(v) for v in r["cemb"]]))
+    for sub in books:
+        books[sub].sort()
+    return books
 
 
 def _dbl_arr_sql(vals) -> str:
@@ -1356,28 +1324,20 @@ def _cb_arr_expr(rows):
     )
 
 
-#: parsed literal-model Column expressions memoized per (application,
-#: dataset, kind): the centroid/codebook literals are thousands of
-#: doubles, and re-PARSING the ~60 KB expression text on every query
-#: construction was measured at ~0.5-0.8 s per k-means-family key at
-#: sf0.1 (r13 — construction, not execution, dominated these keys'
-#: bench rows). A Column is an immutable expression tree, safe to
-#: reuse across queries within one session; the memo keys on the same
-#: (appId, dataset) grain as the model rows it wraps and is evicted by
-#: ``io.invalidate_dataset`` with every other model artifact.
-_CB_EXPR_MEMO: dict = {}
-DATASET_MEMOS.append(_CB_EXPR_MEMO)
-
-
 def _pq_codebook_arr(spark: SparkSession, d: str, s: int):
     """Literal ``array<struct<cid,cemb>>`` of subspace ``s``'s trained
-    codebook (cid-sorted), for in-row argmin encoding."""
-    key = (spark.sparkContext.applicationId, d, "pq_arr", s)
-    col = _CB_EXPR_MEMO.get(key)
-    if col is None:
-        col = _cb_arr_expr(_pq_codebook_rows(spark, d, s))
-        _CB_EXPR_MEMO[key] = col
-    return col
+    codebook (cid-sorted), for in-row argmin encoding.
+
+    Parsed literal-model Columns are memoized per (application,
+    dataset): the centroid/codebook literals are thousands of doubles,
+    and re-PARSING the ~60 KB expression text on every query
+    construction was measured at ~0.5-0.8 s per k-means-family key at
+    sf0.1. A Column is an immutable expression tree, safe to reuse
+    across queries within one session."""
+    return dataset_memo(
+        spark, d, ("pq_arr", s),
+        lambda: _cb_arr_expr(_pq_codebook_rows(spark, d, s)),
+    )
 
 
 def _pq_model_df(spark: SparkSession, d: str) -> DataFrame:
@@ -1421,20 +1381,18 @@ def _pq_model_df(spark: SparkSession, d: str) -> DataFrame:
 
 def _pq_codebook_map(spark: SparkSession, d: str, s: int):
     """Literal ``map<cid, cemb>`` of subspace ``s``'s trained codebook,
-    for ADC code → sub-centroid lookup."""
-    key = (spark.sparkContext.applicationId, d, "pq_map", s)
-    col = _CB_EXPR_MEMO.get(key)
-    if col is not None:
-        return col
-    rows = _pq_codebook_rows(spark, d, s)
-    if not rows:
-        col = F.expr(f"CAST(map() AS {_CB_MAP_T})")
-    else:
+    for ADC code → sub-centroid lookup (memoized like
+    ``_pq_codebook_arr``)."""
+
+    def build():
+        rows = _pq_codebook_rows(spark, d, s)
+        if not rows:
+            return F.expr(f"CAST(map() AS {_CB_MAP_T})")
         cids = ",".join(f"CAST({cid} AS BIGINT)" for cid, _ in rows)
         arrs = ",".join(_dbl_arr_sql(emb) for _, emb in rows)
-        col = F.expr(f"map_from_arrays(array({cids}), array({arrs}))")
-    _CB_EXPR_MEMO[key] = col
-    return col
+        return F.expr(f"map_from_arrays(array({cids}), array({arrs}))")
+
+    return dataset_memo(spark, d, ("pq_map", s), build)
 
 
 @register(
@@ -1808,8 +1766,6 @@ def embed_quantize_sq8(spark: SparkSession, d: str) -> DataFrame:
 #: dyadic 1/8 = 1/sqrt(64) so v0 is unit-norm with no sqrt involved
 PCA_ITERS = 3
 _PCA_V0 = 0.125
-_PCA_MODEL_MEMO: dict = {}
-DATASET_MEMOS.append(_PCA_MODEL_MEMO)
 
 _PCA_DOT_V = """
   list_reduce(list_prepend(CAST(0 AS DOUBLE),
@@ -1829,7 +1785,10 @@ def _pca_oracle() -> str:
     at half-boundaries) — then add exactly as DECIMAL(38,0). Every
     derived quantity is IEEE double arithmetic in a fixed fold order,
     so the driver-loop Spark implementation reproduces the oracle
-    bit-for-bit."""
+    bit-for-bit. The round CTEs are MATERIALIZED: DuckDB inlines a
+    plain CTE at every reference, and a round referenced twice would
+    re-expand the whole chain below it (the unmaterialized top-2 chain
+    ran out of memory at 6 GB)."""
     parts = [
         """
     WITH e AS (
@@ -1843,7 +1802,7 @@ def _pca_oracle() -> str:
                            AS DECIMAL(38,0))) AS DOUBLE)
                / COUNT(*) / 1000000000000.0 AS m
       FROM e, dims GROUP BY dim
-    ), mu_t AS (SELECT list(m ORDER BY dim) AS mu FROM mu_long),
+    ), mu_t AS MATERIALIZED (SELECT list(m ORDER BY dim) AS mu FROM mu_long),
     v0_t AS (SELECT list_transform(range(1, 65), i -> 0.125) AS v FROM (SELECT 1))
     """
     ]
@@ -1851,7 +1810,7 @@ def _pca_oracle() -> str:
     for k in range(1, PCA_ITERS + 1):
         parts.append(
             f"""
-    , t{k} AS (
+    , t{k} AS MATERIALIZED (
       SELECT vec_id, {_PCA_DOT_V.format(x="emb", v="v")} AS t
       FROM e, mu_t, {prev}
     ), s{k}_long AS (
@@ -1861,12 +1820,14 @@ def _pca_oracle() -> str:
                   AS DOUBLE) / 1000000000000.0 AS s
       FROM e JOIN t{k} USING (vec_id), mu_t, dims
       GROUP BY dim
-    ), s{k}_t AS (SELECT list(s ORDER BY dim) AS sv FROM s{k}_long),
+    ), s{k}_t AS MATERIALIZED (
+      SELECT list(s ORDER BY dim) AS sv FROM s{k}_long
+    ),
     n{k}_t AS (
       SELECT sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
                list_transform(sv, x -> x * x)), (acc, v) -> acc + v)) AS nrm
       FROM s{k}_t
-    ), v{k}_t AS (
+    ), v{k}_t AS MATERIALIZED (
       SELECT list_transform(sv, x -> x / nrm) AS v FROM s{k}_t, n{k}_t
     )
     """
@@ -1893,10 +1854,8 @@ def _pca_corpus(spark: SparkSession, d: str) -> DataFrame:
     aggregate and the final scoring pass ran on 1 of 32 cores. Values
     untouched: the per-dim sums are floor-quantized exact integers
     (order-independent) and every per-row quantity is row-local."""
-    from pro_etl_spark.ops.dedup import _df_memo
-
     par = spark.sparkContext.defaultParallelism
-    return _df_memo(
+    return dataset_memo(
         spark, d, "pca_corpus",
         lambda: (
             load(spark, d, "embeddings")
@@ -1911,15 +1870,17 @@ def _pca_corpus(spark: SparkSession, d: str) -> DataFrame:
 
 
 def _pca_model(spark: SparkSession, d: str):
+    """The trained top-1 model (mu, v), once per (application,
+    dataset)."""
+    return dataset_memo(spark, d, "pca", lambda: _train_pca(spark, d))
+
+
+def _train_pca(spark: SparkSession, d: str):
     """Train (mu, v) by PCA_ITERS power-iteration rounds — the
     kmeans_train pattern applied to linear algebra: each round is two
     distributed passes (per-row score fold, per-dim DECIMAL sums of
     t·centered) plus an O(64) driver normalization; the model state
     collected per round is 64 doubles, independent of corpus size."""
-    key = (spark.sparkContext.applicationId, d)
-    model = _PCA_MODEL_MEMO.get(key)
-    if model is not None:
-        return model
     # cached: the training loop re-reads this corpus 1 + PCA_ITERS
     # times (mu pass + one s pass per round) and the scoring query
     # reads it once more — without the cache every pass re-scans the
@@ -1985,9 +1946,7 @@ def _pca_model(spark: SparkSession, d: str):
             acc += x * x
         nrm = acc**0.5
         v = [x / nrm for x in s]
-    model = (mu, v)
-    _PCA_MODEL_MEMO[key] = model
-    return model
+    return mu, v
 
 
 @register("pca_power_top1", oracle=_pca_oracle())
@@ -2695,15 +2654,9 @@ def _srp_bits_of(n: int) -> int:
 
 
 def _srp_bits(spark: SparkSession, d: str) -> int:
-    """Corpus-adaptive active bits per band (memoized corpus count —
-    the same bounded model-state count, staleness contract, and
-    ``io.invalidate_dataset`` eviction point as ``_k_cells``)."""
-    key = (spark.sparkContext.applicationId, d)
-    n = _N_VEC_MEMO.get(key)
-    if n is None:
-        n = load(spark, d, "embeddings").count()
-        _N_VEC_MEMO[key] = n
-    return _srp_bits_of(n)
+    """Corpus-adaptive active bits per band (the memoized corpus count
+    of ``_k_cells``)."""
+    return _srp_bits_of(_n_vec(spark, d))
 
 
 _SRP_BITS_SQL = (
@@ -3769,7 +3722,7 @@ def _pca2_oracle() -> str:
     )"""
     prev = "w0_t"
     for k in range(1, PCA_ITERS + 1):
-        sql += f""", u{k} AS (
+        sql += f""", u{k} AS MATERIALIZED (
       SELECT vec_id, {_PCA_DOT_V.format(x="emb", v="w")} AS t
       FROM e, mu_t, {prev}
     ), z{k}_long AS (
@@ -3779,20 +3732,21 @@ def _pca2_oracle() -> str:
                   AS DOUBLE) / 1000000000000.0 AS s
       FROM e JOIN u{k} USING (vec_id), mu_t, dims
       GROUP BY dim
-    ), z{k}_t AS (SELECT list(s ORDER BY dim) AS sv FROM z{k}_long),
-    p{k}_t AS (
+    ), z{k}_t AS MATERIALIZED (
+      SELECT list(s ORDER BY dim) AS sv FROM z{k}_long
+    ), p{k}_t AS MATERIALIZED (
       SELECT list_reduce(list_prepend(CAST(0 AS DOUBLE),
                list_transform(range(1, 65), i -> v[i] * sv[i])),
                (acc, x) -> acc + x) AS proj
       FROM z{k}_t, {v1}
-    ), o{k}_t AS (
+    ), o{k}_t AS MATERIALIZED (
       SELECT list_transform(range(1, 65), i -> sv[i] - proj * v[i]) AS ov
       FROM z{k}_t, p{k}_t, {v1}
     ), m{k}_t AS (
       SELECT sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
                list_transform(ov, x -> x * x)), (acc, x) -> acc + x)) AS nrm
       FROM o{k}_t
-    ), w{k}_t AS (
+    ), w{k}_t AS MATERIALIZED (
       SELECT list_transform(ov, x -> x / nrm) AS w FROM o{k}_t, m{k}_t
     )"""
         prev = f"w{k}_t"
@@ -3806,14 +3760,16 @@ def _pca2_oracle() -> str:
 
 
 def _pca2_model(spark: SparkSession, d: str):
+    """The trained top-2 model (mu, v1, v2), once per (application,
+    dataset)."""
+    return dataset_memo(spark, d, "pca2", lambda: _train_pca2(spark, d))
+
+
+def _train_pca2(spark: SparkSession, d: str):
     """(mu, v1, v2): reuse the top-1 model, then PCA_ITERS deflated
     power rounds — identical distributed passes, plus an O(64) driver
     Gram-Schmidt per round (projection fold, subtract, normalize) in
     the SAME dim order as the oracle's list arithmetic."""
-    key = (spark.sparkContext.applicationId, d, "pca2")
-    model = _PCA_MODEL_MEMO.get(key)
-    if model is not None:
-        return model
     mu, v1 = _pca_model(spark, d)
     e = _pca_corpus(spark, d)
     w = list(_PCA2_W0)
@@ -3854,9 +3810,7 @@ def _pca2_model(spark: SparkSession, d: str):
             acc += x * x
         nrm = acc**0.5
         w = [x / nrm for x in o]
-    model = (mu, v1, w)
-    _PCA_MODEL_MEMO[key] = model
-    return model
+    return mu, v1, w
 
 
 @register("pca_power_top2", oracle=_pca2_oracle())

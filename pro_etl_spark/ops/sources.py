@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StringType, StructField, StructType
 
-from pro_etl_spark.io import DATASET_MEMOS, load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.migration import MAPPING_SQL, mapping_df, reconciliation
 from pro_etl_spark.registry import register
 
@@ -930,7 +930,6 @@ def sink_json(spark: SparkSession, d: str) -> DataFrame:
 #: per micro-batch → at least 3 real batches before the source runs dry
 STREAM_N = 120
 STREAM_ROWS_PER_READ = 40
-_STREAM_SRC_MEMO: dict = {}
 
 
 @register(
@@ -984,9 +983,7 @@ def stream_custom_source(spark: SparkSession, d: str) -> DataFrame:
         def simpleStreamReader(self, schema):
             return _SeqStreamReader()
 
-    key = (spark.sparkContext.applicationId,)
-    out_dir = _STREAM_SRC_MEMO.get(key)
-    if out_dir is None:
+    def run() -> str:
         if not getattr(spark, "_pro_etl_seq_stream_registered", False):
             spark.dataSource.register(SeqStreamSource)
             spark._pro_etl_seq_stream_registered = True
@@ -1020,7 +1017,10 @@ def stream_custom_source(spark: SparkSession, d: str) -> DataFrame:
             _time.sleep(0.5)
         q.stop()
         q.awaitTermination()
-        _STREAM_SRC_MEMO[key] = out_dir
+        return out_dir
+
+    # the synthetic source reads no dataset: one run per application
+    out_dir = dataset_memo(spark, None, "stream_src_journal", run)
 
     journal = spark.read.parquet(out_dir).dropDuplicates(["seq_id"])
     return journal.groupBy((F.col("seq_id") % 4).alias("shard")).agg(
@@ -1207,10 +1207,6 @@ def sink_snapshot_time_travel(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.parquet(*files)
 
 
-_STREAM_SINK_MEMO: dict = {}
-DATASET_MEMOS.append(_STREAM_SINK_MEMO)
-
-
 @register(
     "stream_custom_sink",
     oracle="""
@@ -1251,9 +1247,7 @@ def stream_custom_sink(spark: SparkSession, d: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    key = (spark.sparkContext.applicationId, d)
-    out_dir = _STREAM_SINK_MEMO.get(key)
-    if out_dir is None:
+    def run() -> str:
         out_dir = tempfile.mkdtemp(prefix="pro_etl_stream_sink_")
 
         class _Msg(WriterCommitMessage):
@@ -1343,7 +1337,9 @@ def stream_custom_sink(spark: SparkSession, d: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_SINK_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = dataset_memo(spark, d, "stream_sink_journal", run)
     back = spark.read.schema(
         "event_id bigint, ts string, event_type string, value double"
     ).json(f"{out_dir}/batch_*.jsonl")

@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from pro_etl_spark.io import DATASET_MEMOS, load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.registry import register
 
 DECV = "decimal(18,6)"
@@ -299,12 +299,6 @@ def stream_stream_left_outer(spark: SparkSession, d: str) -> DataFrame:
     ).select("click_id", "error_id", "user_id", "click_ts", "error_ts")
 
 
-#: one streaming run per (session, dataset) — queries may be invoked
-#: repeatedly in a sweep; the memory-sink table is already materialized
-_RUNNING_TOTALS_MEMO: dict = {}
-DATASET_MEMOS.append(_RUNNING_TOTALS_MEMO)
-
-
 @register(
     "stream_running_totals",
     oracle="""
@@ -341,13 +335,13 @@ def stream_running_totals(spark: SparkSession, d: str) -> DataFrame:
     """
     from pro_etl_spark import streaming_jobs as SJ
 
-    key = (spark.sparkContext.applicationId, d)
-    table = _RUNNING_TOTALS_MEMO.get(key)
-    if table is None:
+    # one streaming run per (application, dataset): a sweep may invoke
+    # the query repeatedly, and the run's output is already materialized
+    def run() -> str:
         import shutil
         import tempfile
 
-        table = f"rt_state_{abs(hash(key)) % 10**9}"
+        table = f"rt_state_{abs(hash(d)) % 10**9}"
         # file-source streams need a directory basePath; stage the
         # single events file into one (a real deployment streams from
         # an arrival directory already)
@@ -357,7 +351,9 @@ def stream_running_totals(spark: SparkSession, d: str) -> DataFrame:
         SJ.run_to_memory(
             SJ.running_totals_exact_stream(ev), table, output_mode="update"
         )
-        _RUNNING_TOTALS_MEMO[key] = table
+        return table
+
+    table = dataset_memo(spark, d, "rt_state", run)
     emitted = spark.table(table)
     # n_events strictly increases per user, so max_by(n_events) = final state
     return emitted.groupBy("user_id").agg(
@@ -366,8 +362,6 @@ def stream_running_totals(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-_TOPK_STATE_MEMO: dict = {}
-DATASET_MEMOS.append(_TOPK_STATE_MEMO)
 TOPK_STATE_K = 3
 
 
@@ -402,13 +396,11 @@ def stream_topk_state(spark: SparkSession, d: str) -> DataFrame:
     final state by keeping each user's max-n_seen emission."""
     from pro_etl_spark import streaming_jobs as SJ
 
-    key = (spark.sparkContext.applicationId, d)
-    table = _TOPK_STATE_MEMO.get(key)
-    if table is None:
+    def run() -> str:
         import shutil
         import tempfile
 
-        table = f"topk_state_{abs(hash(key)) % 10**9}"
+        table = f"topk_state_{abs(hash(d)) % 10**9}"
         src_dir = tempfile.mkdtemp(prefix="pro_etl_topk_")
         shutil.copy(f"{d}/events.parquet", f"{src_dir}/events.parquet")
         ev = SJ.read_events_stream(spark, src_dir)
@@ -417,7 +409,9 @@ def stream_topk_state(spark: SparkSession, d: str) -> DataFrame:
             table,
             output_mode="update",
         )
-        _TOPK_STATE_MEMO[key] = table
+        return table
+
+    table = dataset_memo(spark, d, "topk_state", run)
     emitted = spark.table(table)
     # final state = each user's max-n_seen emission; a window-max filter
     # (one user shuffle) rather than a self-join of the memory view —
@@ -428,10 +422,6 @@ def stream_topk_state(spark: SparkSession, d: str) -> DataFrame:
         .where(F.col("n_seen") == F.col("mx"))
         .select("user_id", "rank", "micros", "event_id")
     )
-
-
-_SESSION_STATE_MEMO: dict = {}
-DATASET_MEMOS.append(_SESSION_STATE_MEMO)
 
 
 @register(
@@ -489,12 +479,10 @@ def stream_session_state(spark: SparkSession, d: str) -> DataFrame:
     final rows, never re-emitted."""
     from pro_etl_spark import streaming_jobs as SJ
 
-    key = (spark.sparkContext.applicationId, d)
-    table = _SESSION_STATE_MEMO.get(key)
-    if table is None:
+    def run() -> str:
         import tempfile
 
-        table = f"sess_state_{abs(hash(key)) % 10**9}"
+        table = f"sess_state_{abs(hash(d)) % 10**9}"
         full = load(spark, d, "events")
         cut = full.agg(
             F.expr("percentile_approx(unix_micros(ts), 0.8)")
@@ -531,7 +519,9 @@ def stream_session_state(spark: SparkSession, d: str) -> DataFrame:
         )
         out = SJ.session_state_stream(stream, gap_min=5)
         SJ.run_to_memory(out, table, output_mode="append")
-        _SESSION_STATE_MEMO[key] = table
+        return table
+
+    table = dataset_memo(spark, d, "sess_state", run)
     emitted = spark.table(table)
     return emitted.select(
         F.timestamp_micros(F.col("session_start_us")).alias("session_start"),
@@ -619,10 +609,6 @@ def stream_late_drop(spark: SparkSession, d: str) -> DataFrame:
 
 # --- foreachBatch upsert sink ----------------------------------------
 
-_FOREACH_BATCH_MEMO: dict = {}
-DATASET_MEMOS.append(_FOREACH_BATCH_MEMO)
-
-
 @register(
     "stream_foreach_batch",
     oracle="""
@@ -657,9 +643,8 @@ def stream_foreach_batch(spark: SparkSession, d: str) -> DataFrame:
     the journal grows by |active users| per batch and compacts with
     one more keyed window — the incremental-merge cost model, never a
     full-state rewrite per batch."""
-    key = (spark.sparkContext.applicationId, d)
-    out_dir = _FOREACH_BATCH_MEMO.get(key)
-    if out_dir is None:
+
+    def run() -> str:
         import os
         import shutil
         import tempfile
@@ -714,7 +699,9 @@ def stream_foreach_batch(spark: SparkSession, d: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _FOREACH_BATCH_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = dataset_memo(spark, d, "fb_journal", run)
 
     journal = spark.read.parquet(out_dir)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
@@ -731,10 +718,6 @@ def stream_foreach_batch(spark: SparkSession, d: str) -> DataFrame:
 
 
 # --- dropDuplicatesWithinWatermark (real run) -------------------------
-
-_DEDUP_WM_MEMO: dict = {}
-DATASET_MEMOS.append(_DEDUP_WM_MEMO)
-
 
 @register(
     "stream_dedup_watermark",
@@ -765,9 +748,8 @@ def stream_dedup_watermark(spark: SparkSession, d: str) -> DataFrame:
 
     Scale: one keyed state store, bounded by the lateness horizon —
     the production dedup for at-least-once sources."""
-    key = (spark.sparkContext.applicationId, d)
-    out_dir = _DEDUP_WM_MEMO.get(key)
-    if out_dir is None:
+
+    def run() -> str:
         import os
         import shutil
         import tempfile
@@ -813,7 +795,9 @@ def stream_dedup_watermark(spark: SparkSession, d: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _DEDUP_WM_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = dataset_memo(spark, d, "ddw_out", run)
 
     return (
         spark.read.parquet(out_dir)

@@ -21,7 +21,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.functions import pandas_udf
 
-from pro_etl_spark.io import DATASET_MEMOS, load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.dedup import _LSH_PAIRS_CTE
 from pro_etl_spark.ops.hashing import DUCK_HASH60, hash60  # noqa: F401 (re-export)
 from pro_etl_spark.registry import register
@@ -1462,11 +1462,6 @@ def bpe_pair_counts(spark: SparkSession, d: str) -> DataFrame:
 
 BPE_MERGES = 3
 
-#: one training run per (session, dataset) — repeated sweep calls
-#: reuse the learned merge table
-_BPE_TRAIN_MEMO: dict = {}
-DATASET_MEMOS.append(_BPE_TRAIN_MEMO)
-
 
 def _bpe_apply_merge(syms, a_sym: str, b_sym: str):
     """Greedy left-to-right application of one merge rule (a b)->ab to
@@ -1588,12 +1583,12 @@ def bpe_train_merges(spark: SparkSession, d: str) -> DataFrame:
     lineage is truncated (lazy localCheckpoint) so round k shuffles
     the merged vocab, not a k-deep re-derivation. The oracle unrolls
     the identical rounds as chained CTEs with the same deterministic
-    (cnt DESC, pair ASC) tiebreak."""
-    key = (spark.sparkContext.applicationId, d)
-    memo = _BPE_TRAIN_MEMO.get(key)
-    if memo is None:
+    (cnt DESC, pair ASC) tiebreak. One training run per (application,
+    dataset): repeated sweep calls reuse the learned merge table."""
+
+    def train() -> list:
         vocab = _bpe_vocab(spark, d)
-        memo = []
+        merges = []
         for rnd in range(1, BPE_MERGES + 1):
             pairs = vocab.where(F.size("syms") >= 2).select(
                 F.explode(
@@ -1615,15 +1610,17 @@ def bpe_train_merges(spark: SparkSession, d: str) -> DataFrame:
             if not best:
                 break  # vocabulary exhausted (degenerate corpus)
             b = best[0]
-            memo.append((rnd, b["pair"], int(b["cnt"])))
+            merges.append((rnd, b["pair"], int(b["cnt"])))
             a_sym, b_sym = b["pair"].split(" ")
             merged = _bpe_apply_merge(F.col("syms"), a_sym, b_sym)
             vocab = vocab.select(merged.alias("syms"), "freq").localCheckpoint(
                 eager=False
             )
-        _BPE_TRAIN_MEMO[key] = memo
+        return merges
+
     return spark.createDataFrame(
-        memo, "round long, pair string, n_occurrences long"
+        dataset_memo(spark, d, "bpe_merges", train),
+        "round long, pair string, n_occurrences long",
     )
 
 

@@ -40,11 +40,20 @@ def spark():
     yield s
 
 
+#: DuckDB bounds for the oracle connection: an oracle whose plan blows
+#: up fails its own test with an out-of-memory error instead of growing
+#: the shared pytest process until the kernel kills the whole run
+DUCK_MEMORY_LIMIT = "4GB"
+DUCK_THREADS = 4
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb
 
-    con = duckdb.connect()
+    con = duckdb.connect(
+        config={"memory_limit": DUCK_MEMORY_LIMIT, "threads": DUCK_THREADS}
+    )
     from pro_etl_spark.io import TABLES
 
     for t in TABLES:

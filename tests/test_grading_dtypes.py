@@ -133,10 +133,8 @@ def test_grading_window_order_is_pinned():
     is self-advancing (pro_etl_spark._rotated) and FAILED-FIRST: keys
     whose latest official record is red lead the window (a fix is
     re-graded next round), then never-sampled backlog keys, then the
-    already-green keys. Pin those invariants plus the hand-reviewed
-    round-7 queue keeping priority among the fresh keys."""
+    already-green keys. Pin those invariants."""
     from pro_etl_spark import (
-        _R07_QUEUE,
         _official_records,
         _officially_failed,
         _officially_sampled,
@@ -162,16 +160,6 @@ def test_grading_window_order_is_pinned():
             "already-green keys leaked ahead of backlog keys in the "
             "official window"
         )
-        # the reviewed r7 queue heads the backlog right after the
-        # failed block, in order (minus keys already fronted)
-        fresh_queue = [
-            k for k in _R07_QUEUE if k not in seen and k not in failed
-        ]
-        tail = keys[len(failed) : len(failed) + len(fresh_queue)]
-        assert tail == fresh_queue
-    # every queue key must still exist (loud-failure rename guard)
-    missing = [k for k in _R07_QUEUE if k not in keys]
-    assert not missing
 
 
 def test_rotation_fronts_failed_keys_synthetic(tmp_path):

@@ -50,31 +50,39 @@ def test_k_cells_rewrite_needs_invalidate(spark, tmp_dataset):
 
 
 def test_invalidate_evicts_all_registered_memos(spark, tmp_dataset):
-    """Every registered memo keyed on the dataset is evicted, and keys
-    for OTHER datasets survive."""
+    """Every artifact memoized for the dataset is evicted, nested builds
+    included, and artifacts of OTHER datasets (or of none) survive."""
     from pro_etl_spark import io as pio
 
-    sentinel_other = ("appX", "/some/other/ds")
-    for memo in pio.DATASET_MEMOS:
-        memo[("appX", tmp_dataset)] = "stale"
-        memo[("appX", tmp_dataset, "variant")] = "stale"
-        memo[sentinel_other] = "keep"
+    memo, other = pio.dataset_memo, "/some/other/ds"
+    memo(spark, tmp_dataset, ("t", 1),
+         lambda: ("stale", memo(spark, tmp_dataset, "t", lambda: "stale")))
+    memo(spark, other, "t", lambda: "keep")
+    memo(spark, None, "t", lambda: "keep")
+    assert memo(spark, tmp_dataset, "t", lambda: "rebuilt") == "stale"
     pio.invalidate_dataset(spark, tmp_dataset)
-    for memo in pio.DATASET_MEMOS:
-        assert ("appX", tmp_dataset) not in memo
-        assert ("appX", tmp_dataset, "variant") not in memo
-        assert memo.pop(sentinel_other) == "keep"
+    assert memo(spark, tmp_dataset, "t", lambda: "fresh") == "fresh"
+    assert memo(spark, tmp_dataset, ("t", 1), lambda: "fresh") == "fresh"
+    assert memo(spark, other, "t", lambda: "rebuilt") == "keep"
+    assert memo(spark, None, "t", lambda: "rebuilt") == "keep"
+    for key in [k for k in pio._MEMOIZED if k[2] in ("t", ("t", 1))]:
+        del pio._MEMOIZED[key]
 
 
-def test_memo_registry_covers_model_state_dicts():
-    """The similarity model-state memos (the ADVICE r8 subjects) are
-    registered for eviction."""
-    from pro_etl_spark import io as pio
-    from pro_etl_spark.ops import similarity as sim
+def test_memo_keys_are_built_only_in_io():
+    """Every memo goes through ``io.dataset_memo``, so
+    ``invalidate_dataset`` reaches all of them: no module but io.py
+    builds a key from the application id."""
+    import pathlib
 
-    for memo in (sim._N_VEC_MEMO, sim._KM_CB_MEMO, sim._PQ_CB_MEMO,
-                 sim._PCA_MODEL_MEMO):
-        assert any(memo is m for m in pio.DATASET_MEMOS)
+    import pro_etl_spark
+
+    root = pathlib.Path(pro_etl_spark.__file__).parent
+    users = [
+        str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+        if "sparkContext.applicationId" in p.read_text(encoding="utf-8")
+    ]
+    assert users == ["io.py"]
 
 
 def test_view_memo_is_session_scoped(spark):
@@ -104,19 +112,3 @@ def test_view_memo_is_session_scoped(spark):
     assert pio._REGISTERED_VIEWS[spark] == sf_a
     assert pio._REGISTERED_VIEWS[s2] == sf_b
     assert spark.sql("SELECT count(*) AS n FROM events").collect()[0].n == 1000
-
-
-def test_substr_probe_memo_registered_for_eviction():
-    """The decontaminate_substring probe memo (round 11) is dataset
-    state like the similarity models: a rewritten dataset dir must not
-    keep serving stale probes after invalidate_dataset."""
-    import pro_etl_spark
-
-    # load the full registry BEFORE touching ops.corpus: its composed
-    # oracles read other modules' ORACLES entries at import time, so a
-    # bare corpus import in a fresh process KeyErrors
-    pro_etl_spark.get_queries()
-    from pro_etl_spark import io as pio
-    from pro_etl_spark.ops import corpus
-
-    assert any(corpus._SUBSTR_PROBES_MEMO is m for m in pio.DATASET_MEMOS)

@@ -4,7 +4,8 @@ delta XML + log CSV out, found/total summary) driven through
 example edge cases (SURVEY §5.1): a fully-valid row, a false-flag row,
 an empty delivery_day (→ '-3D' default), an invalid delivery_day
 (advisory Not OK but still transformed), a duplicated key
-(first-row-wins) and an unknown non-ASCII id (anti path)."""
+(first-row-wins), an RFC 4180 doubled quote inside a quoted field and
+an unknown non-ASCII id (anti path)."""
 
 from __future__ import annotations
 
@@ -100,7 +101,7 @@ FIXTURE_XML = textwrap.dedent("""\
 
 FIXTURE_CSV = textwrap.dedent("""\
     current_customer_id,new_customer_id,new_source_id,new_store_id,new_store_name,mandatory_reference,delivery_day
-    1001,N1001,SRC9,ST9,New Store Nine,TRUE,-2D
+    1001,N1001,SRC9,ST9,"Nya ""City""\",TRUE,-2D
     1002,N1002,SRC9,ST9,New Store Nine,false,
     1003,N1003,SRC9,ST9,New Store Nine,,-12D
     1003,DUPE,SRC8,ST8,Dupe Store,,-4D
@@ -202,7 +203,9 @@ def test_delta_xml_document(spark, cli_out):
 
     a1 = attrs(custs["N1001"])
     assert a1["MEK_Store_Id"] == ("string", "ST9")
-    assert a1["MEK_Store_Name"] == ("string", "New Store Nine")
+    # RFC 4180: a doubled quote in a quoted field is one literal quote,
+    # as the reference's pandas reader parses it
+    assert a1["MEK_Store_Name"] == ("string", 'Nya "City"')
     assert a1["MEK_DataAreaID"] == ("string", "SRC9")
     assert a1["MEK_DefaultDeliveryday"] == ("string", "-2D")
     assert a1["MEK_CustomerOrderNumberMandatory"] == ("boolean", "true")

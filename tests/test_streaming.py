@@ -17,7 +17,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from pro_etl_spark import streaming_jobs as SJ
-from pro_etl_spark.io import load
+from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.streaming import (
     click_error_interval_join,
     dedup_events,
@@ -271,14 +271,15 @@ def test_foreach_batch_ran_multiple_real_batches(spark):
     twice: the append-only journal then holds more rows than the
     compacted result (each batch re-emits its users' latest)."""
     import pro_etl_spark
-    from pro_etl_spark.ops import streaming as S
 
     res = pro_etl_spark.get_queries()["stream_foreach_batch"](
         spark, "/root/testdata/sf0.001"
     )
     n_final = res.count()
-    key = (spark.sparkContext.applicationId, "/root/testdata/sf0.001")
-    journal_dir = S._FOREACH_BATCH_MEMO[key]
+    journal_dir = dataset_memo(
+        spark, SF, "fb_journal",
+        lambda: pytest.fail("stream_foreach_batch memoized no journal"),
+    )
     n_journal = spark.read.parquet(journal_dir).count()
     assert n_final > 0
     assert n_journal > n_final  # >1 batch appended overlapping user sets
