@@ -43,11 +43,10 @@ from pyspark.sql.types import (
 
 from pro_etl_spark import xml_io
 from pro_etl_spark.ops.migration import (
-    DELIVERY_RE,
-    REASON_INVALID,
+    REASON_INVALID,  # noqa: F401 (part of this module's log vocabulary)
     REASON_NOT_FOUND,
-    REASON_OK,
     apply_migration,
+    reconcile,
 )
 
 def run_ts_text() -> str:
@@ -240,50 +239,6 @@ def read_mapping_csv(spark: SparkSession, path: str) -> DataFrame:
         m.withColumn("rn", F.row_number().over(w))
         .where("rn = 1")
         .drop("rn", "ord", "_file")
-    )
-
-
-def reconcile(mapping: DataFrame, customers: DataFrame) -> DataFrame:
-    """The OK / Not OK / Not-found log (migrate.py:103-104, 259-266) —
-    semi side validated, anti side flagged, one broadcast plan."""
-    # inputs arrive normalized (trimmed) from read_mapping_csv — one
-    # normalization point keeps log, transform, and strict filter in
-    # agreement on the same keys/values
-    delivery = F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D"))
-    # 100 TB posture (same as ops.migration.reconciliation): Spark can't
-    # broadcast the preserved side of an outer join, so semi-filter the
-    # corpus by the broadcast key set first (narrow scan of the big
-    # side), then left-join the mapping against the now-small match set.
-    keys = mapping.select(F.col("current_customer_id").alias("_k"))
-    matched = (
-        customers.join(F.broadcast(keys), customers["id"] == keys["_k"], "left_semi")
-        .select(F.col("id").alias("_cid"))
-    )
-    j = mapping.join(
-        F.broadcast(matched),
-        mapping["current_customer_id"] == matched["_cid"],
-        "left",
-    )
-    missing = (
-        F.col("current_customer_id").isNull()
-        | F.col("new_customer_id").isNull()
-        | F.col("new_source_id").isNull()
-        | F.col("new_store_id").isNull()
-        | F.col("new_store_name").isNull()
-    )
-    return j.select(
-        F.col("current_customer_id").alias("current_id"),
-        F.col("new_customer_id").alias("new_id"),
-        F.when(F.col("_cid").isNull(), "Not OK")
-        .when(missing, "Not OK")
-        .when(~delivery.rlike(DELIVERY_RE), "Not OK")
-        .otherwise("OK")
-        .alias("status"),
-        F.when(F.col("_cid").isNull(), REASON_NOT_FOUND)
-        .when(missing, "Missing values! Please check CSV input file")
-        .when(~delivery.rlike(DELIVERY_RE), REASON_INVALID)
-        .otherwise(REASON_OK)
-        .alias("reason"),
     )
 
 

@@ -965,6 +965,45 @@ DUCK_DOT = """
 """
 
 
+def cosine(
+    a_emb: str = "q_emb",
+    a_nrm: str = "q_nrm",
+    b_emb: str = "embedding",
+    b_nrm: str = "nrm",
+) -> Column:
+    """Exact cosine of two (embedding, norm) column pairs: the ``dot``
+    fold over the product of the cached norms — the oracle's
+    ``DUCK_DOT / (a.nrm * b.nrm)``. The defaults score a query frame's
+    ``q_emb``/``q_nrm`` against ``corpus_table`` columns."""
+    return dot(F.col(a_emb), F.col(b_emb)) / (F.col(a_nrm) * F.col(b_nrm))
+
+
+def cosine_pairs(
+    a: DataFrame, b: DataFrame, block: str, threshold: float
+) -> DataFrame:
+    """Blocked cosine self-join of two ``corpus_table``-shaped frames:
+    pairs sharing the ``block`` column with ``vec_a < vec_b`` and
+    cosine ≥ ``threshold``, as ``(vec_a, vec_b, cosine)`` rounded to 6
+    places. The only shuffle key is the block, so the quadratic work is
+    Σ|block|²; ``a`` may be a spread copy of ``b`` (see
+    ``_pair_spread``)."""
+    cos = cosine("a.embedding", "a.nrm", "b.embedding", "b.nrm")
+    return (
+        a.alias("a")
+        .join(
+            b.alias("b"),
+            (F.col(f"a.{block}") == F.col(f"b.{block}"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .where(cos >= threshold)
+        .select(
+            F.col("a.vec_id").alias("vec_a"),
+            F.col("b.vec_id").alias("vec_b"),
+            F.round(cos, 6).alias("cosine"),
+        )
+    )
+
+
 def corpus_table(spark: SparkSession, d: str) -> DataFrame:
     """Cached (vec_id, label, embedding, nrm) corpus — the shared
     materialization barrier for every cosine operator (ANN brute/IVF,
@@ -1028,38 +1067,16 @@ def dedup_embedding_cosine(spark: SparkSession, d: str) -> DataFrame:
     e = _cert_sample(
         spark, d, corpus_table(spark, d), "vec_id", "embeddings"
     )
-    # r13 (ADVICE r12 correction): the r12 "sized projection" did NOT
-    # achieve a single dot evaluation — predicate pushdown re-inlines
-    # the cos ≥ τ filter into the SortMergeJoin condition, so the
-    # 64-wide fold runs once per label-blocked candidate inside the
-    # join plus once per SURVIVOR in the output projection, with or
-    # without an intermediate projection; reverted to the plain filter
-    # form (identical arithmetic, simpler plan). The r12 _pair_spread
-    # on vec_id was likewise dead: this is an EQUI-join on label, so
-    # the join's own ENSURE_REQUIREMENTS label exchange immediately
-    # discarded the vec_id spread (one extra shuffle for nothing) and,
-    # being AQE-coalescible, re-serialized the quadratic loop onto one
-    # task. Spreading on the JOIN KEY fixes both: the explicit-count
-    # label repartition is exempt from coalescing and is reused as the
-    # join's distribution, so per-label pair loops run on one task per
-    # label (the best the label-blocking allows without salting).
-    a = _pair_spread(e, "label").alias("a")
-    b = e.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(cos >= COSINE_THRESHOLD)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
+    # Spread on the JOIN KEY, not vec_id: this is an equi-join on
+    # label, so the join's own label exchange would discard a vec_id
+    # spread (one extra shuffle) and AQE would coalesce the quadratic
+    # loop onto one task. The explicit-count label repartition is
+    # exempt from coalescing and is reused as the join's distribution,
+    # so per-label pair loops run one task per label. The cos ≥ τ
+    # filter is pushed into the join condition either way, so the fold
+    # runs once per candidate and once per survivor.
+    return cosine_pairs(
+        _pair_spread(e, "label"), e, "label", COSINE_THRESHOLD
     )
 
 

@@ -700,13 +700,16 @@ def graph_personalized_pagerank(spark: SparkSession, d: str) -> DataFrame:
 def _modularity_oracle() -> str:
     from pro_etl_spark.registry import ORACLES
 
+    # mp materializes the pair list once: DuckDB inlines a plain CTE at
+    # each of its four references below, re-deriving the whole LSH chain
     return _LSH_PAIRS_CTE + f"""
-    , lpa AS MATERIALIZED ({ORACLES["graph_label_propagation"]}),
-    m AS (SELECT COUNT(*) AS m FROM pairs),
+    , mp AS MATERIALIZED (SELECT doc_a, doc_b FROM pairs),
+    lpa AS MATERIALIZED ({ORACLES["graph_label_propagation"]}),
+    m AS (SELECT COUNT(*) AS m FROM mp),
     deg AS (
       SELECT node, COUNT(*) AS deg FROM (
-        SELECT doc_a AS node FROM pairs
-        UNION ALL SELECT doc_b FROM pairs
+        SELECT doc_a AS node FROM mp
+        UNION ALL SELECT doc_b FROM mp
       ) GROUP BY node
     ), comm AS (
       SELECT l.community,
@@ -716,7 +719,7 @@ def _modularity_oracle() -> str:
       GROUP BY l.community
     ), intra AS (
       SELECT la.community, COUNT(*) AS intra_edges
-      FROM pairs p
+      FROM mp p
       JOIN lpa la ON la.doc_id = p.doc_a
       JOIN lpa lb ON lb.doc_id = p.doc_b
       WHERE la.community = lb.community

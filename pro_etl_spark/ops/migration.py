@@ -32,6 +32,7 @@ DELIVERY_RE = r"^-[1-9]D$"
 REASON_OK = "Found in source XML file"
 REASON_INVALID = "Invalid value! Please check CSV input file (delivery_day)"
 REASON_NOT_FOUND = "Not found in source XML"
+REASON_MISSING = "Missing values! Please check CSV input file"
 
 
 def mapping_df(spark: SparkSession, d: str) -> DataFrame:
@@ -124,49 +125,87 @@ MAPPING_DEDUP_SQL = """
 """
 
 
-def reconciliation(spark: SparkSession, d: str) -> DataFrame:
-    """mapping → dedup first-wins → validate → broadcast-join corpus →
-    status/reason log (the whole of migrate.py:108-270 as one plan)."""
-    m = mapping_df(spark, d)
+def first_wins(m: DataFrame) -> DataFrame:
+    """One mapping row per ``current_customer_id``: the first by
+    ``(ord, new_store_id)`` (J4)."""
     w = Window.partitionBy("current_customer_id").orderBy("ord", "new_store_id")
-    m = (
+    return (
         m.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .drop("rn", "ord")
     )
-    m = m.withColumn(
-        "delivery_final",
-        F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D")),
-    ).withColumn("delivery_valid", F.col("delivery_final").rlike(DELIVERY_RE))
 
-    corpus = load(spark, d, "customer").select(
-        F.col("c_custkey").cast("string").alias("id")
+
+def reconcile(mapping: DataFrame, customers: DataFrame) -> DataFrame:
+    """The OK / Not OK / Not-found log (migrate.py:103-104, 259-266) —
+    semi side validated, anti side flagged, one broadcast plan."""
+    # the CLI's inputs arrive normalized (trimmed) from
+    # migrate_cli.read_mapping_csv — one normalization point keeps log,
+    # transform, and strict filter in agreement on the same keys/values
+    delivery = F.coalesce(F.nullif(F.col("delivery_day"), F.lit("")), F.lit("-3D"))
+    # 100 TB posture: Spark can't broadcast the preserved side of an
+    # outer join, so semi-filter the corpus by the broadcast key set
+    # first (narrow scan of the big side), then left-join the mapping
+    # against the now-small match set.
+    keys = mapping.select(F.col("current_customer_id").alias("_k"))
+    matched = (
+        customers.join(F.broadcast(keys), customers["id"] == keys["_k"], "left_semi")
+        .select(F.col("id").alias("_cid"))
     )
-    # 100 TB posture: a plain mapping-LEFT-JOIN-corpus would have to
-    # shuffle the huge corpus (Spark cannot broadcast the preserved
-    # side of an outer join). Instead: (1) broadcast the small key set
-    # into a semi-join that filters the corpus to matched ids — a
-    # narrow, shuffle-free scan of the big side; (2) left-join the
-    # mapping against that now-tiny id set, broadcast on the right.
-    keys = m.select("current_customer_id")
-    matched_ids = corpus.join(
-        F.broadcast(keys), corpus.id == keys.current_customer_id, "left_semi"
+    j = mapping.join(
+        F.broadcast(matched),
+        mapping["current_customer_id"] == matched["_cid"],
+        "left",
     )
-    joined = m.join(
-        F.broadcast(matched_ids), m.current_customer_id == matched_ids.id, "left"
+    missing = (
+        F.col("current_customer_id").isNull()
+        | F.col("new_customer_id").isNull()
+        | F.col("new_source_id").isNull()
+        | F.col("new_store_id").isNull()
+        | F.col("new_store_name").isNull()
     )
-    return joined.select(
+    return j.select(
         F.col("current_customer_id").alias("current_id"),
         F.col("new_customer_id").alias("new_id"),
-        F.when(F.col("id").isNull(), "Not OK")
-        .when(~F.col("delivery_valid"), "Not OK")
+        F.when(F.col("_cid").isNull(), "Not OK")
+        .when(missing, "Not OK")
+        .when(~delivery.rlike(DELIVERY_RE), "Not OK")
         .otherwise("OK")
         .alias("status"),
-        F.when(F.col("id").isNull(), REASON_NOT_FOUND)
-        .when(~F.col("delivery_valid"), REASON_INVALID)
+        F.when(F.col("_cid").isNull(), REASON_NOT_FOUND)
+        .when(missing, REASON_MISSING)
+        .when(~delivery.rlike(DELIVERY_RE), REASON_INVALID)
         .otherwise(REASON_OK)
         .alias("reason"),
     )
+
+
+def reconciliation(spark: SparkSession, d: str) -> DataFrame:
+    """mapping → dedup first-wins → ``reconcile`` against the customer
+    ids (the whole of migrate.py:108-270 as one plan)."""
+    corpus = load(spark, d, "customer").select(
+        F.col("c_custkey").cast("string").alias("id")
+    )
+    return reconcile(first_wins(mapping_df(spark, d)), corpus)
+
+
+#: the log's status/reason rules over ``mapping m LEFT JOIN customer c``
+#: — the oracle twin of ``reconcile``
+_MISSING_SQL = """(m.current_customer_id IS NULL OR m.new_customer_id IS NULL
+          OR m.new_source_id IS NULL OR m.new_store_id IS NULL
+          OR m.new_store_name IS NULL)"""
+_LOG_SQL = f"""
+    CASE WHEN c.c_custkey IS NULL THEN 'Not OK'
+         WHEN {_MISSING_SQL} THEN 'Not OK'
+         WHEN NOT regexp_matches(COALESCE(NULLIF(m.delivery_day, ''), '-3D'),
+                                 '^-[1-9]D$') THEN 'Not OK'
+         ELSE 'OK' END AS status,
+    CASE WHEN c.c_custkey IS NULL THEN '{REASON_NOT_FOUND}'
+         WHEN {_MISSING_SQL} THEN '{REASON_MISSING}'
+         WHEN NOT regexp_matches(COALESCE(NULLIF(m.delivery_day, ''), '-3D'),
+                                 '^-[1-9]D$') THEN '{REASON_INVALID}'
+         ELSE '{REASON_OK}' END AS reason
+"""
 
 
 @register(
@@ -176,14 +215,7 @@ def reconciliation(spark: SparkSession, d: str) -> DataFrame:
     + f"""
     SELECT m.current_customer_id AS current_id,
            m.new_customer_id AS new_id,
-           CASE WHEN c.c_custkey IS NULL THEN 'Not OK'
-                WHEN NOT regexp_matches(COALESCE(NULLIF(m.delivery_day, ''), '-3D'),
-                                        '^-[1-9]D$') THEN 'Not OK'
-                ELSE 'OK' END AS status,
-           CASE WHEN c.c_custkey IS NULL THEN '{REASON_NOT_FOUND}'
-                WHEN NOT regexp_matches(COALESCE(NULLIF(m.delivery_day, ''), '-3D'),
-                                        '^-[1-9]D$') THEN '{REASON_INVALID}'
-                ELSE '{REASON_OK}' END AS reason
+           {_LOG_SQL}
     FROM mapping m
     LEFT JOIN customer c ON m.current_customer_id = CAST(c.c_custkey AS VARCHAR)
     """,
@@ -391,10 +423,7 @@ def migration_transform(spark: SparkSession, d: str) -> DataFrame:
     from pro_etl_spark.ops.nested import nested_customers
 
     nested = nested_customers(spark, d).drop("key")
-    m = mapping_df(spark, d)
-    w = Window.partitionBy("current_customer_id").orderBy("ord", "new_store_id")
-    m = m.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn", "ord")
-    out = apply_migration(nested, m)
+    out = apply_migration(nested, first_wins(mapping_df(spark, d)))
     attr = lambda name: F.get(  # noqa: E731
         F.filter(F.col("custom_attributes"), lambda a: a["name"] == name), 0
     )["value"]
@@ -427,14 +456,7 @@ def migration_transform(spark: SparkSession, d: str) -> DataFrame:
     + MAPPING_DEDUP_SQL
     + f"""
     , log AS (
-      SELECT CASE WHEN c.c_custkey IS NULL THEN 'Not OK'
-                  WHEN NOT regexp_matches(COALESCE(NULLIF(m.delivery_day, ''), '-3D'),
-                                          '^-[1-9]D$') THEN 'Not OK'
-                  ELSE 'OK' END AS status,
-             CASE WHEN c.c_custkey IS NULL THEN '{REASON_NOT_FOUND}'
-                  WHEN NOT regexp_matches(COALESCE(NULLIF(m.delivery_day, ''), '-3D'),
-                                          '^-[1-9]D$') THEN '{REASON_INVALID}'
-                  ELSE '{REASON_OK}' END AS reason
+      SELECT {_LOG_SQL}
       FROM mapping m
       LEFT JOIN customer c ON m.current_customer_id = CAST(c.c_custkey AS VARCHAR)
     )

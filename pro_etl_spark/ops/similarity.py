@@ -1,18 +1,34 @@
-"""Similarity search over the ``embeddings`` table (BASELINE.json
-north-star): brute-force cosine top-k as the exact baseline, plus an
-IVF-style cell-probed variant as the scale path.
+"""Vector search over the ``embeddings`` table: exact cosine top-k,
+its candidate-pruned approximations (grid and k-means IVF cells,
+multi-probe, product quantization, IVF-PQ, binary codes, metadata
+filters), range search, blocked cosine near-dup joins, and the index
+evaluations (recall, MRR, nDCG, Matryoshka truncation) that compare
+them.
+
+Every search has the same shape: a broadcast query frame, a candidate
+set (the whole corpus, or the probed cells / buckets), an exact score
+per candidate, and a per-query top-k. Those steps are written once:
+
+- ``_queries`` / ``_query_frame``: the ``vec_id < N_QUERIES`` rows,
+  keyed by ``query_id``;
+- ``dedup.cosine``: the exact cosine Column (sequential ``dot`` fold
+  over the cached norms of ``dedup.corpus_table``);
+- ``_top_k`` and its oracle twin ``_topk_sql``: the ranking policy —
+  score order, ties to the smaller id, ``rank`` as bigint, the score
+  rounded to 6 places;
+- ``dedup.cosine_pairs``: the blocked cosine self-join of the near-dup
+  operators.
 
 Scale design: the query set is tiny and broadcast; the corpus never
-shuffles for brute force (narrow scan → per-partition partial top-k via
-window). The IVF variant prunes the corpus scan to the probed cell —
-at 100 TB the cells are the partition layout, so probing is partition
-pruning.
+shuffles for brute force (narrow scan → per-query top-k window). The
+cell-probed variants prune the candidate scan — at 100 TB the cells
+are the partition layout, so probing is partition pruning.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from pro_etl_spark.io import dataset_memo, load
 from pro_etl_spark.ops.dedup import (
@@ -21,12 +37,79 @@ from pro_etl_spark.ops.dedup import (
     COSINE_THRESHOLD,
     DUCK_DOT,
     corpus_table,
+    cosine,
+    cosine_pairs,
     dot,
 )
 from pro_etl_spark.registry import ORACLES, register
 
 N_QUERIES = 5  # vec_id < 5 are the query vectors
 TOP_K = 10
+
+
+def _queries(e: DataFrame, *cols) -> DataFrame:
+    """The query rows of ``e`` (``vec_id < N_QUERIES``), keyed by
+    ``query_id`` and carrying ``cols``."""
+    return e.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), *cols
+    )
+
+
+def _query_frame(e: DataFrame, *extra) -> DataFrame:
+    """Broadcast side of a cosine search over a ``corpus_table``-shaped
+    frame: ``query_id``, the ``q_emb``/``q_nrm`` operands of
+    ``cosine()``, then ``extra``."""
+    return _queries(
+        e,
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        *extra,
+    )
+
+
+def _top_k(
+    scored: DataFrame,
+    *extra: Column,
+    score: str = "cos",
+    out: str = "cosine",
+    desc: bool = True,
+) -> DataFrame:
+    """Per-query top-k of ``(query_id, neighbor_id, …, score)`` rows:
+    ``score`` descending (ascending for distances), ties to the smaller
+    ``neighbor_id``, at most TOP_K rows per query with a bigint
+    ``rank`` from 1. Output: ``query_id, neighbor_id, *extra``, the
+    score rounded to 6 places as ``out``, ``rank``."""
+    order = F.desc(score) if desc else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= TOP_K)
+        .select(
+            "query_id", "neighbor_id", *extra, F.round(score, 6).alias(out), "rank"
+        )
+    )
+
+
+def _topk_sql(
+    src: str,
+    extra: str = "",
+    score: str = "cos",
+    out: str = "cosine",
+    desc: bool = True,
+) -> str:
+    """Oracle twin of ``_top_k`` over the CTE ``src``; ``extra`` is a
+    comma-terminated select-list prefix for the columns between
+    ``neighbor_id`` and the score."""
+    order = f"{score} DESC" if desc else score
+    return f"""
+    SELECT query_id, neighbor_id, {extra}ROUND({score}, 6) AS {out},
+           CAST(rank AS BIGINT) AS rank
+    FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                   ORDER BY {order}, neighbor_id) AS rank
+      FROM {src}
+    ) WHERE rank <= {TOP_K}
+    """
 
 
 @register(
@@ -42,13 +125,7 @@ TOP_K = 10
                / (q.nrm * c.nrm) AS cos
       FROM e q JOIN e c ON q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored")}
     """,
 )
 def ann_cosine_topk(spark: SparkSession, d: str) -> DataFrame:
@@ -56,27 +133,12 @@ def ann_cosine_topk(spark: SparkSession, d: str) -> DataFrame:
     every corpus vector (JVM-side fold — no UDF), per-query top-k via
     window (deterministic tiebreak on neighbor id)."""
     e = corpus_table(spark, d)
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    scored = e.join(
+        F.broadcast(_query_frame(e)), F.col("query_id") != F.col("vec_id")
+    ).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), cosine().alias("cos")
     )
-    scored = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored)
 
 
 #: IVF-style coarse cell: quantize the first two dimensions. A real
@@ -84,26 +146,24 @@ def ann_cosine_topk(spark: SparkSession, d: str) -> DataFrame:
 #: deterministic and oracle-checkable while exercising the same plan
 #: shape (cell-pruned candidate scan → exact re-rank).
 #:
-#: SCALE FIX (round 10, closing the round-9 probe finding): the pitch
-#: is CORPUS-ADAPTIVE. The old fixed multiplier (×2 per dim) meant the
-#: occupied-cell count was a CONSTANT as N grew, so the per-cell work
-#: in this family was Θ(N²/C) — 257 s for `dedup_embedding_cosine_ivf`
-#: at the 10× layout, the single worst key in SCALEPROBE_r9. The
-#: multiplier is now M = max(2, ⌈2·N^(1/4)⌉), so cells per dim grow as
-#: N^(1/4) and occupied 2-D cells as √N — the same nlist ≈ √N
-#: discipline as the trained-cell path (``_K_CELLS_SQL``), keeping
-#: expected cell size ≈ √N and total pairwise work O(N·√N). The
-#: leading 2 calibrates for the synthetic embeddings' per-coordinate
-#: spread (unit vectors in 64-d ⇒ coords ~ N(0, 1/64)); any constant
-#: keeps the asymptotics. Both engines derive M from the same COUNT(*)
-#: through CEIL∘SQRT∘SQRT (sqrt is IEEE-correctly-rounded, so the
-#: integer M — and therefore every FLOOR cell id — is bit-identical
-#: cross-engine at every SF). The row stride 10⁶ keeps the 2-D→1-D
-#: packing collision-free up to |coord·M| < 5·10⁵ — HALF the stride,
-#: since cell indices can be negative: (i+1, j−10⁶) would alias (i, j)
-#: once |j| reaches the full stride (ADVICE r10). Unreachable here
-#: (M ≈ 2·N^¼, |coord| ≤ 1), but audit any pitch/stride change
-#: against the half-stride bound, not the stride itself.
+#: The pitch is CORPUS-ADAPTIVE: a fixed multiplier keeps the
+#: occupied-cell count constant as N grows, so the per-cell work of
+#: this family would be Θ(N²/C). The multiplier is
+#: M = max(2, ⌈2·N^(1/4)⌉), so cells per dim grow as N^(1/4) and
+#: occupied 2-D cells as √N — the same nlist ≈ √N discipline as the
+#: trained-cell path (``_K_CELLS_SQL``), keeping expected cell size
+#: ≈ √N and total pairwise work O(N·√N). The leading 2 calibrates for
+#: the synthetic embeddings' per-coordinate spread (unit vectors in
+#: 64-d ⇒ coords ~ N(0, 1/64)); any constant keeps the asymptotics.
+#: Both engines derive M from the same COUNT(*) through CEIL∘SQRT∘SQRT
+#: (sqrt is IEEE-correctly-rounded, so the integer M — and therefore
+#: every FLOOR cell id — is bit-identical cross-engine at every SF).
+#: The row stride 10⁶ keeps the 2-D→1-D packing collision-free up to
+#: |coord·M| < 5·10⁵ — HALF the stride, since cell indices can be
+#: negative: (i+1, j−10⁶) would alias (i, j) once |j| reaches the full
+#: stride. Unreachable here (M ≈ 2·N^¼, |coord| ≤ 1), but audit any
+#: pitch/stride change against the half-stride bound, not the stride
+#: itself.
 _GM_CTE = (
     "gm AS (SELECT GREATEST(2, CAST(CEIL(2.0 * SQRT(SQRT("
     "CAST(COUNT(*) AS DOUBLE)))) AS BIGINT)) AS gm FROM embeddings)"
@@ -155,13 +215,7 @@ def _cell(e, gm):
       FROM e q JOIN e c ON q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
                         AND q.cell = c.cell
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored")}
     """,
 )
 def ann_ivf_topk(spark: SparkSession, d: str) -> DataFrame:
@@ -177,31 +231,14 @@ def ann_ivf_topk(spark: SparkSession, d: str) -> DataFrame:
         .withColumn("cell", _cell(F.col("embedding"), F.col("gm")))
         .drop("gm")
     )
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("cell").alias("q_cell"),
+    q = _query_frame(e, F.col("cell").alias("q_cell"))
+    scored = e.join(
+        F.broadcast(q),
+        (F.col("query_id") != F.col("vec_id")) & (F.col("q_cell") == F.col("cell")),
+    ).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), cosine().alias("cos")
     )
-    scored = (
-        e.join(
-            F.broadcast(q),
-            (F.col("query_id") != F.col("vec_id")) & (F.col("q_cell") == F.col("cell")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored)
 
 
 @register(
@@ -234,36 +271,18 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, d: str) -> DataFrame:
     the near-dup regime; the documented recall trade is cross-cell
     borderline pairs.
 
-    SCALE FIX (round 10): the grid pitch is corpus-adaptive — occupied
-    cells grow as √N (``_GM_CTE`` / ``_grid_m``), so expected cell size
-    is ≈ √N and total pair work O(N·√N), not the Θ(N²/C) a fixed pitch
-    produced (SCALEPROBE_r9: 257 s at 10×, the registry's worst key).
-    Both engines derive the pitch from the same COUNT(*), keeping the
-    oracle pairing value-exact at every SF."""
+    The grid pitch is corpus-adaptive — occupied cells grow as √N
+    (``_GM_CTE`` / ``_grid_m``), so expected cell size is ≈ √N and
+    total pair work O(N·√N), not the Θ(N²/C) of a fixed pitch. Both
+    engines derive the pitch from the same COUNT(*), keeping the oracle
+    pairing value-exact at every SF."""
     e = (
         corpus_table(spark, d)
         .crossJoin(_grid_m(spark, d))
         .withColumn("cell", _cell(F.col("embedding"), F.col("gm")))
         .drop("gm")
     )
-    a = e.alias("a")
-    b = e.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(cos >= COSINE_THRESHOLD)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-    )
+    return cosine_pairs(e, e, "cell", COSINE_THRESHOLD)
 
 
 #: multi-probe neighborhood: the query's cell plus its 8 grid
@@ -306,13 +325,7 @@ def _cell_j(e, gm):
         ON CAST(c.ci * 1000000 + c.cj AS BIGINT) = p.pcell
        AND p.query_id <> c.vec_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored")}
     """,
 )
 def ann_ivf_multiprobe(spark: SparkSession, d: str) -> DataFrame:
@@ -343,15 +356,7 @@ def ann_ivf_multiprobe(spark: SparkSession, d: str) -> DataFrame:
         ]
     )
     probes = (
-        e.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "ci",
-            "cj",
-            F.explode(offsets).alias("o"),
-        )
+        _query_frame(e, "ci", "cj", F.explode(offsets).alias("o"))
         .select(
             "query_id",
             "q_emb",
@@ -369,19 +374,10 @@ def ann_ivf_multiprobe(spark: SparkSession, d: str) -> DataFrame:
             & (F.col("query_id") != F.col("vec_id")),
         )
         .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-                "cos"
-            ),
+            "query_id", F.col("vec_id").alias("neighbor_id"), cosine().alias("cos")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored)
 
 
 K_CELLS = 8  # coarse-quantizer centroid count FLOOR (seeds: vec_id < K)
@@ -700,8 +696,8 @@ def _assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
         # array_min over struct(dist, cid) — struct comparison is
         # field-order lexicographic, so this is exactly the oracle's
         # ORDER BY dist, cid tie-break. Fully narrow: no window, no
-        # shuffle of the corpus — the plan a 100 TB assignment needs
-        # (the old row_number() variant shuffled corpus × K rows).
+        # shuffle of the corpus (a row_number() argmin would shuffle
+        # corpus × K rows) — the plan a 100 TB assignment needs.
         carr = cents.agg(
             F.array_sort(F.collect_list(F.struct("cid", "cemb"))).alias("carr")
         )
@@ -758,33 +754,15 @@ def dedup_embedding_kmeans(spark: SparkSession, d: str) -> DataFrame:
     IVF trade, recoverable with multi-assignment); the oracle applies
     the identical blocking so the check stays value-exact.
 
-    SCALE FIX (round 8, closing the round-7 probe finding): the
-    per-cell self-join is O(Σ cell²), so the trained cell count now
+    The per-cell self-join is O(Σ cell²), so the trained cell count
     GROWS with the corpus — nlist = max(8, ⌈√N⌉) via ``_k_cells`` /
     ``_K_CELLS_SQL`` — keeping expected cell size ≈ √N and total
-    pairwise work O(N·√N) instead of the Θ(N²/8) that a fixed K=8
-    produced (SCALEPROBE_r7.json: 268.8 s at 10×). Both engines derive
-    K from the same COUNT(*), so the oracle pairing stays value-exact
-    at every SF."""
+    pairwise work O(N·√N) instead of the Θ(N²/8) of a fixed K=8. Both
+    engines derive K from the same COUNT(*), so the oracle pairing
+    stays value-exact at every SF."""
     cells = _kmeans_assignment(spark, d).select("vec_id", "cell")
     e = corpus_table(spark, d).join(cells, "vec_id")
-    a, b = e.alias("a"), e.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(cos >= IVF_COSINE_THRESHOLD)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-    )
+    return cosine_pairs(e, e, "cell", IVF_COSINE_THRESHOLD)
 
 
 @register(
@@ -805,13 +783,7 @@ def dedup_embedding_kmeans(spark: SparkSession, d: str) -> DataFrame:
       FROM j q JOIN j c ON q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
                         AND q.cell = c.cell
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored")}
     """,
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, d: str) -> DataFrame:
@@ -825,28 +797,14 @@ def ann_ivf_kmeans_topk(spark: SparkSession, d: str) -> DataFrame:
     a fixed grid degenerates (empty cells + one mega-cell)."""
     cells = _kmeans_assignment(spark, d).select("vec_id", "cell")
     e = corpus_table(spark, d).join(cells, "vec_id")
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("cell").alias("q_cell"),
-    )
+    q = _query_frame(e, F.col("cell").alias("q_cell"))
     scored = e.join(
         F.broadcast(q),
         (F.col("query_id") != F.col("vec_id")) & (F.col("q_cell") == F.col("cell")),
     ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cos"
-        ),
+        "query_id", F.col("vec_id").alias("neighbor_id"), cosine().alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored)
 
 
 NPROBE_KMEANS = 3  # probe the 3 nearest trained cells per query
@@ -882,13 +840,7 @@ NPROBE_KMEANS = 3  # probe the 3 nearest trained cells per query
       JOIN j c ON c.cell = p.pcell AND c.vec_id <> p.query_id
       JOIN raw q ON q.vec_id = p.query_id
     )
-    SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored")}
     """,
 )
 def ann_ivf_kmeans_multiprobe(spark: SparkSession, d: str) -> DataFrame:
@@ -902,11 +854,10 @@ def ann_ivf_kmeans_multiprobe(spark: SparkSession, d: str) -> DataFrame:
     equi-join, i.e. NPROBE partition lookups per query at scale."""
     cells = _kmeans_assignment(spark, d).select("vec_id", "cell")
     corpus = corpus_table(spark, d).join(cells, "vec_id")
-    q6 = _emb_table(spark, d).where(F.col("vec_id") < N_QUERIES)
     # probe list ranked in-row against the literal centroid model:
-    # array_sort on struct(pdist, cid) is the same (dist, cid)
-    # lexicographic tie-break the old window ranking applied — no
-    # crossJoin, no window, no shuffle for the probe build
+    # array_sort on struct(pdist, cid) is the oracle's (dist, cid)
+    # lexicographic tie-break — no crossJoin, no window, no shuffle for
+    # the probe build
     ranked = F.array_sort(
         F.transform(
             _km_centroids_arr(spark, d),
@@ -916,32 +867,18 @@ def ann_ivf_kmeans_multiprobe(spark: SparkSession, d: str) -> DataFrame:
             ),
         )
     )
-    probes = q6.select(
-        F.col("vec_id").alias("query_id"),
+    probes = _queries(
+        _emb_table(spark, d),
         F.explode(F.slice(ranked, 1, NPROBE_KMEANS)).alias("p"),
     ).select("query_id", F.col("p.cid").alias("pcell"))
-    qraw = corpus_table(spark, d).where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
     cand = corpus.join(
         F.broadcast(probes),
         (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("query_id")),
-    ).join(F.broadcast(qraw), "query_id")
+    ).join(F.broadcast(_query_frame(corpus_table(spark, d))), "query_id")
     scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cos"
-        ),
+        "query_id", F.col("vec_id").alias("neighbor_id"), cosine().alias("cos")
     )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rank")
-    )
+    return _top_k(scored)
 
 
 @register(
@@ -1449,6 +1386,38 @@ def pq_encode(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
+def _pq_decoded(spark: SparkSession, d: str) -> DataFrame:
+    """``pq_encode``'s codes plus each code's sub-centroid ``k{s}``,
+    looked up in the one-row broadcast model (``_pq_model_df``)."""
+    codes = pq_encode(spark, d)
+    return codes.crossJoin(F.broadcast(_pq_model_df(spark, d))).select(
+        *codes.columns,
+        *[
+            F.element_at(F.col(f"kmap{s}"), F.col(f"c{s}")).alias(f"k{s}")
+            for s in range(PQ_M)
+        ],
+    )
+
+
+def _pq_query_subs() -> list:
+    """The query's exact sub-vectors ``q{s}`` of the rounded ``emb``."""
+    return [
+        F.slice(F.col("emb"), s * PQ_SUBDIM + 1, PQ_SUBDIM).alias(f"q{s}")
+        for s in range(PQ_M)
+    ]
+
+
+def _adc() -> Column:
+    """Asymmetric distance: Σ_s ‖q{s} − k{s}‖², added left to right like
+    the oracle."""
+    return (
+        _sqdist(F.col("q0"), F.col("k0"))
+        + _sqdist(F.col("q1"), F.col("k1"))
+        + _sqdist(F.col("q2"), F.col("k2"))
+        + _sqdist(F.col("q3"), F.col("k3"))
+    )
+
+
 @register(
     "ann_pq_adc",
     oracle=f"""
@@ -1471,13 +1440,7 @@ def pq_encode(spark: SparkSession, d: str) -> DataFrame:
       JOIN k3 ON k3.cid = c.c3
       WHERE q.vec_id < {N_QUERIES} AND c.vec_id <> q.vec_id
     )
-    SELECT query_id, neighbor_id, ROUND(adist, 6) AS adist,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adist, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored", score="adist", out="adist", desc=False)}
     """,
 )
 def ann_pq_adc(spark: SparkSession, d: str) -> DataFrame:
@@ -1495,48 +1458,14 @@ def ann_pq_adc(spark: SparkSession, d: str) -> DataFrame:
     pass and only the per-query top-k window shuffles. Exactness:
     left-to-right addition of four deterministic folds, tie-break on
     neighbor_id."""
-    codes = pq_encode(spark, d)
-    # map lookups read the one-row broadcast model (r13, _pq_model_df)
-    codes = codes.crossJoin(F.broadcast(_pq_model_df(spark, d))).select(
-        *codes.columns,
-        *[
-            F.element_at(F.col(f"kmap{s}"), F.col(f"c{s}")).alias(f"k{s}")
-            for s in range(PQ_M)
-        ],
-    )
-    q = (
-        _emb_table(spark, d)
-        .where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            *[
-                F.slice(F.col("emb"), s * PQ_SUBDIM + 1, PQ_SUBDIM).alias(f"q{s}")
-                for s in range(PQ_M)
-            ],
-        )
-    )
+    q = _queries(_emb_table(spark, d), *_pq_query_subs())
     scored = (
-        codes.crossJoin(F.broadcast(q))
+        _pq_decoded(spark, d)
+        .crossJoin(F.broadcast(q))
         .where(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _sqdist(F.col("q0"), F.col("k0"))
-                + _sqdist(F.col("q1"), F.col("k1"))
-                + _sqdist(F.col("q2"), F.col("k2"))
-                + _sqdist(F.col("q3"), F.col("k3"))
-            ).alias("adist"),
-        )
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), _adc().alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "neighbor_id", F.round("adist", 6).alias("adist"), "rank"
-        )
-    )
+    return _top_k(scored, score="adist", out="adist", desc=False)
 
 
 @register(
@@ -1565,13 +1494,7 @@ def ann_pq_adc(spark: SparkSession, d: str) -> DataFrame:
       JOIN k3 ON k3.cid = c.c3
       WHERE q.vec_id < {N_QUERIES}
     )
-    SELECT query_id, neighbor_id, ROUND(adist, 6) AS adist,
-           CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adist, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored", score="adist", out="adist", desc=False)}
     """,
 )
 def ann_ivfpq_topk(spark: SparkSession, d: str) -> DataFrame:
@@ -1592,54 +1515,17 @@ def ann_ivfpq_topk(spark: SparkSession, d: str) -> DataFrame:
     structures reuse their operators' deterministic recipes, so every
     adist is bit-identical cross-engine."""
     cells = _kmeans_assignment(spark, d).select("vec_id", "cell")
-    pq = pq_encode(spark, d)
-    # map lookups read the one-row broadcast model (r13, _pq_model_df)
-    codes = pq.crossJoin(F.broadcast(_pq_model_df(spark, d))).select(
-        *pq.columns,
-        *[
-            F.element_at(F.col(f"kmap{s}"), F.col(f"c{s}")).alias(f"k{s}")
-            for s in range(PQ_M)
-        ],
+    corpus = _pq_decoded(spark, d).join(cells, "vec_id")
+    q = _queries(
+        _emb_table(spark, d).join(cells.withColumnRenamed("cell", "q_cell"), "vec_id"),
+        "q_cell",
+        *_pq_query_subs(),
     )
-    corpus = codes.join(cells, "vec_id")
-    q = (
-        _emb_table(spark, d)
-        .where(F.col("vec_id") < N_QUERIES)
-        .join(cells.withColumnRenamed("cell", "q_cell"), "vec_id")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "q_cell",
-            *[
-                F.slice(F.col("emb"), s * PQ_SUBDIM + 1, PQ_SUBDIM).alias(f"q{s}")
-                for s in range(PQ_M)
-            ],
-        )
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(q),
-            (F.col("cell") == F.col("q_cell"))
-            & (F.col("query_id") != F.col("vec_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                _sqdist(F.col("q0"), F.col("k0"))
-                + _sqdist(F.col("q1"), F.col("k1"))
-                + _sqdist(F.col("q2"), F.col("k2"))
-                + _sqdist(F.col("q3"), F.col("k3"))
-            ).alias("adist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "neighbor_id", F.round("adist", 6).alias("adist"), "rank"
-        )
-    )
+    scored = corpus.join(
+        F.broadcast(q),
+        (F.col("cell") == F.col("q_cell")) & (F.col("query_id") != F.col("vec_id")),
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), _adc().alias("adist"))
+    return _top_k(scored, score="adist", out="adist", desc=False)
 
 
 # --- radius (range) search -------------------------------------------
@@ -1679,16 +1565,9 @@ def ann_range_search(spark: SparkSession, d: str) -> DataFrame:
     variants (ann_ivf_*) apply unchanged when the radius is tight
     enough that probed cells bound the recall set."""
     e = corpus_table(spark, d)
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = dot(F.col("q_emb"), F.col("embedding")) / (
-        F.col("q_nrm") * F.col("nrm")
-    )
+    cos = cosine()
     return (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
+        e.join(F.broadcast(_query_frame(e)), F.col("query_id") != F.col("vec_id"))
         .where(cos >= RANGE_RADIUS)
         .select(
             "query_id",
@@ -2144,19 +2023,13 @@ def ann_matryoshka_eval(spark: SparkSession, d: str) -> DataFrame:
     ).withColumn(
         "tn", F.sqrt(dot(F.col("emb16"), F.col("emb16")))
     )
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb16").alias("q_emb"),
-        F.col("tn").alias("q_tn"),
-    )
+    q = _queries(e, F.col("emb16").alias("q_emb"), F.col("tn").alias("q_tn"))
     scored = e.join(
         F.broadcast(q), F.col("query_id") != F.col("vec_id")
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        (dot(F.col("q_emb"), F.col("emb16")) / (F.col("q_tn") * F.col("tn"))).alias(
-            "cos"
-        ),
+        cosine("q_emb", "q_tn", "emb16", "tn").alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     trunc = (
@@ -2251,13 +2124,7 @@ def dedup_semantic_keep(spark: SparkSession, d: str) -> DataFrame:
       FROM j q JOIN j c ON q.vec_id < {N_QUERIES} AND q.vec_id <> c.vec_id
                         AND q.cell = c.cell AND c.label = q.label
     )
-    SELECT query_id, neighbor_id, CAST(label AS INT) AS label,
-           ROUND(cos, 6) AS cosine, CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("scored", extra="CAST(label AS INT) AS label, ")}
     """,
 )
 def ann_filtered_topk(spark: SparkSession, d: str) -> DataFrame:
@@ -2276,12 +2143,8 @@ def ann_filtered_topk(spark: SparkSession, d: str) -> DataFrame:
     cells = _kmeans_assignment(spark, d).select("vec_id", "cell")
     # corpus_table already carries label (the metadata column)
     e = corpus_table(spark, d).join(cells, "vec_id")
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("cell").alias("q_cell"),
-        F.col("label").alias("q_label"),
+    q = _query_frame(
+        e, F.col("cell").alias("q_cell"), F.col("label").alias("q_label")
     )
     scored = e.join(
         F.broadcast(q),
@@ -2292,25 +2155,9 @@ def ann_filtered_topk(spark: SparkSession, d: str) -> DataFrame:
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         "label",
-        (
-            dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_nrm") * F.col("nrm"))
-        ).alias("cos"),
+        cosine().alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("label").cast("int").alias("label"),
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _top_k(scored, F.col("label").cast("int").alias("label"))
 
 
 @register(
@@ -2356,8 +2203,8 @@ def ann_hard_negatives(spark: SparkSession, d: str) -> DataFrame:
     prunes before the dot products."""
     cells = _kmeans_assignment(spark, d).select("vec_id", "cell")
     e = corpus_table(spark, d).join(cells, "vec_id")
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
+    q = _queries(
+        e,
         F.col("label").alias("query_label"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
@@ -2372,10 +2219,7 @@ def ann_hard_negatives(spark: SparkSession, d: str) -> DataFrame:
         F.col("query_label").cast("int").alias("query_label"),
         F.col("vec_id").alias("negative_id"),
         F.col("label").cast("int").alias("negative_label"),
-        (
-            dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_nrm") * F.col("nrm"))
-        ).alias("cos"),
+        cosine().alias("cos"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos"), F.asc("negative_id")
@@ -3044,22 +2888,9 @@ def dedup_srp_eval(spark: SparkSession, d: str) -> DataFrame:
     # sits in one (coalesced) partition and the per-pair dot-product
     # loop of the blocked truth join runs on a single task — see
     # dedup._pair_spread
-    a, b = _pair_spread(es, "vec_id").alias("a"), es.alias("b")
-    cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
-        F.col("a.nrm") * F.col("b.nrm")
-    )
-    truth = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(cos >= IVF_COSINE_THRESHOLD)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-    )
+    truth = cosine_pairs(
+        _pair_spread(es, "vec_id"), es, "label", IVF_COSINE_THRESHOLD
+    ).select("vec_a", "vec_b")
     srp = dedup_embedding_srp(spark, d).select("vec_a", "vec_b")
     hit = truth.join(srp, ["vec_a", "vec_b"], "left_semi")
     lab = e.select("vec_id", "label")
@@ -3503,13 +3334,7 @@ def _bq_pack(col_name: str, lo_dim: int, hi_dim: int):
         FROM cand
       ) WHERE rh <= {BQ_CAND}
     )
-    SELECT query_id, neighbor_id, CAST(hamming AS BIGINT) AS hamming,
-           ROUND(cos, 6) AS cosine, CAST(rank AS BIGINT) AS rank
-    FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM kept
-    ) WHERE rank <= {TOP_K}
+    {_topk_sql("kept", extra="CAST(hamming AS BIGINT) AS hamming, ")}
     """,
 )
 def ann_binary_quant(spark: SparkSession, d: str) -> DataFrame:
@@ -3540,13 +3365,7 @@ def ann_binary_quant(spark: SparkSession, d: str) -> DataFrame:
         _bq_pack("embedding", 0, 32).alias("lo"),
         _bq_pack("embedding", 32, 64).alias("hi"),
     )
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("lo").alias("q_lo"),
-        F.col("hi").alias("q_hi"),
-    )
+    q = _query_frame(e, F.col("lo").alias("q_lo"), F.col("hi").alias("q_hi"))
     cand = e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id")).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -3565,26 +3384,9 @@ def ann_binary_quant(spark: SparkSession, d: str) -> DataFrame:
         .where(F.col("rh") <= BQ_CAND)
         # the expensive fold runs AFTER the Hamming gate — 50 rows per
         # query, never the full corpus
-        .withColumn(
-            "cos",
-            dot(F.col("q_emb"), F.col("embedding"))
-            / (F.col("q_nrm") * F.col("nrm")),
-        )
+        .withColumn("cos", cosine())
     )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        kept.withColumn("rank", F.row_number().over(w_c).cast("long"))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("hamming").cast("long").alias("hamming"),
-            F.round("cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _top_k(kept, F.col("hamming").cast("long").alias("hamming"))
 
 
 # --- Johnson-Lindenstrauss random projection ------------------------------

@@ -1,27 +1,50 @@
 """Capture `.explain("formatted")` for named registered queries into
-plans/<tag>/<key>_<suffix>.txt — the before/after plan artifacts the
-optimization rounds commit next to OPTIMIZATION_r*.md.
+OUT_DIR/<key>_<suffix>.txt — before/after plan artifacts that diff
+cleanly.
 
 Usage:
-    python scripts/capture_plans.py SUFFIX KEY [KEY ...]
-    python scripts/capture_plans.py SUFFIX --all
+    python scripts/capture_plans.py OUT_DIR SUFFIX KEY [KEY ...]
+    python scripts/capture_plans.py OUT_DIR SUFFIX --all
 
-SUFFIX is typically "before" or "after"; the output dir is
-plans/r12/ (override with PLANS_DIR). Plans are built at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) so scan-node
+OUT_DIR is required: plans/ holds committed captures, so name a fresh
+directory. SUFFIX is typically "before" or "after". Plans are built at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) so scan-node
 statistics (PushedFilters / ReadSchema) match the bench scale.
+
+Expression ids (``vec_id#123L``), exchange ``plan_id``s and RDD ids
+(``MapPartitionsRDD[467]``) are session counters: they depend on every
+plan and job run earlier in the process, so each file renumbers them in
+order of first appearance. Two captures of the same plan are then
+byte-identical whatever ran before them.
 """
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+_COUNTERS = tuple(
+    re.compile(p) for p in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
+)
+
+
+def normalize(txt: str) -> str:
+    """Renumber expression, plan and RDD ids by first appearance."""
+    for pat in _COUNTERS:
+        seen: dict = {}
+
+        def renum(m, seen=seen):
+            return m.group(1) + str(seen.setdefault(m.group(2), len(seen)))
+
+        txt = pat.sub(renum, txt)
+    return txt
+
 
 def main() -> None:
-    suffix = sys.argv[1]
-    keys = sys.argv[2:]
-    out_dir = os.environ.get("PLANS_DIR", "plans/r12")
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out_dir, suffix, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
 
@@ -40,7 +63,7 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        txt = buf.getvalue()
+        txt = normalize(buf.getvalue())
         path = os.path.join(out_dir, f"{k}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)

@@ -181,6 +181,39 @@ def test_log_statuses(spark, cli_out):
     assert got["4123Ö47"] == ("Not OK", migrate_cli.REASON_NOT_FOUND)
 
 
+def test_reconcile_flags_missing_values(spark):
+    """A mapping row with a NULL mandatory column is "Missing values"
+    before the delivery-day rule, and not-found still wins over both —
+    the one ``reconcile`` the CLI and ``migration_reconciliation``
+    share."""
+    from pro_etl_spark.ops.migration import REASON_MISSING, reconcile
+
+    cols = (
+        "current_customer_id new_customer_id new_source_id new_store_id "
+        "new_store_name delivery_day"
+    )
+    mapping = spark.createDataFrame(
+        [
+            ("1", "N1", "S", "ST1", "Store", "-12D"),
+            ("2", "N2", "S", "ST2", None, "-12D"),
+            ("3", "N3", None, "ST3", "Store", "-3D"),
+            ("9", "N9", None, "ST9", "Store", "-3D"),
+        ],
+        ", ".join(f"{c} string" for c in cols.split()),
+    )
+    customers = spark.createDataFrame([("1",), ("2",), ("3",)], "id string")
+    got = {
+        r.current_id: (r.status, r.reason)
+        for r in reconcile(mapping, customers).collect()
+    }
+    assert got == {
+        "1": ("Not OK", migrate_cli.REASON_INVALID),
+        "2": ("Not OK", REASON_MISSING),
+        "3": ("Not OK", REASON_MISSING),
+        "9": ("Not OK", migrate_cli.REASON_NOT_FOUND),
+    }
+
+
 def test_delta_xml_document(spark, cli_out):
     root = ET.parse(cli_out["xml"]).getroot()
     assert root.tag == "enfinity"

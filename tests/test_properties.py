@@ -786,6 +786,50 @@ def test_filtered_topk_prefilter_semantics(spark):
         assert len(rs) == min(TOP_K, n_cand), (q, len(rs), n_cand)
 
 
+def test_top_k_ranking_contract(spark):
+    """The ranking policy every top-k search shares (``_top_k``), on
+    tied scores the oracle data rarely produces: at most TOP_K rows per
+    query, contiguous bigint ranks from 1, score order with ties won by
+    the smaller id, scores rounded to 6 places — for similarities
+    (descending) and distances (ascending)."""
+    from pyspark.sql.types import LongType
+
+    from pro_etl_spark.ops.similarity import TOP_K, _top_k
+
+    # query 0: 14 candidates with a 6-way tie across the TOP_K cut in
+    # both orders; query 1: fewer candidates than TOP_K
+    cands = (
+        [(0, n, 0.9) for n in (41, 40)]
+        + [(0, n, 0.5) for n in (17, 3, 29, 11, 8, 23)]
+        + [(0, n, 0.1234567) for n in (5, 2, 31, 12, 6, 50)]
+        + [(1, 9, 0.25), (1, 4, 0.25), (1, 7, -0.3333333)]
+    )
+    for score, out, desc in (("cos", "cosine", True), ("adist", "adist", False)):
+        df = spark.createDataFrame(
+            cands, f"query_id long, neighbor_id long, {score} double"
+        )
+        got = _top_k(df, score=score, out=out, desc=desc)
+        assert got.columns == ["query_id", "neighbor_id", out, "rank"]
+        assert isinstance(got.schema["rank"].dataType, LongType)
+        by_q = {}
+        for r in got.collect():
+            by_q.setdefault(r.query_id, []).append(r)
+        for q in (0, 1):
+            rs = sorted(by_q[q], key=lambda r: r.rank)
+            want = sorted(
+                (c for c in cands if c[0] == q),
+                key=lambda c: (-c[2] if desc else c[2], c[1]),
+            )[:TOP_K]
+            assert [r.rank for r in rs] == list(range(1, len(want) + 1))
+            assert [(r.neighbor_id, r[out]) for r in rs] == [
+                (c[1], round(c[2], 6)) for c in want
+            ], (score, q)
+        if desc:
+            assert [r.neighbor_id for r in sorted(by_q[0], key=lambda r: r.rank)] == [
+                40, 41, 3, 8, 11, 17, 23, 29, 2, 5,
+            ]
+
+
 def test_rolling_corr_bounds_and_warmup(spark):
     """corr_w must be NULL for warm-up rows (n_win < CORR_WIN) and in
     [-1, 1] (+rounding slack) otherwise; n_win never exceeds the
