@@ -12,7 +12,8 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
    migrate.py:79), first-row-wins dedup on the join key (J4)
 2. customer XML via Spark's native XML source with an **explicit
    schema** (arrays stay arrays even for single elements), normalized
-   to the canonical nested shape of SURVEY §1.5
+   to the canonical nested shape of SURVEY §1.5 — parsed **once** per
+   run and persisted, so steps 3 and 4 read the same scan
 3. validation (delivery-day regex + '-3D' default, null checks) and
    the OK / Not OK / Not-found reconciliation log (migrate.py:103-270)
 4. ``apply_migration`` — the full nested-document rewrite
@@ -20,10 +21,14 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
 5. sinks: one enveloped delta XML written as the reference's flat
    ``<output-dir>/<YYYY-MM-DD>/output-<uuid>.xml`` (migrate.py:286-293)
    + a log CSV in a sibling ``output-<uuid>-log/`` directory, and the
-   found/total summary on stdout (migrate.py:272)
+   found/total summary on stdout (migrate.py:272), observed on the log
+   write rather than counted by jobs of its own
 
 Scale: the mapping broadcasts; the corpus never shuffles; the document
 rewrite and XML record serialization are narrow Column expressions.
+The export is parsed once per run: the persisted scan trades memory
+for a second parse, and at corpus scale it spills to local disk
+(MEMORY_AND_DISK) rather than failing.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ import datetime
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql.types import (
     ArrayType,
     StringType,
@@ -269,27 +274,7 @@ def run(
     hdfs concat / S3 multipart compose) for a physical single file; no
     record byte ever moves through the driver.
     """
-    mapping = read_mapping_csv(spark, csv_path)
-    customers = read_customers_xml(spark, xml_path)
-
-    log = reconcile(F.broadcast(mapping), customers)
-    # the log feeds the CSV sink, the summary counts, and (in strict
-    # mode) the transform filter — persist so the reconciliation join
-    # runs once, not once per consumer
-    log = log.persist()
-    transform_input = mapping
-    if strict:
-        ok_keys = log.where(F.col("status") == "OK").select(
-            F.col("current_id").alias("_ok")
-        )
-        transform_input = mapping.join(
-            F.broadcast(ok_keys),
-            mapping["current_customer_id"] == ok_keys["_ok"],
-            "left_semi",
-        )
     run_ts = run_ts_text()
-    migrated = apply_migration(customers, transform_input, run_ts=run_ts)
-
     run_date = run_ts[:10]  # same clock read as the document timestamps
     run_id = uuid.uuid4().hex[:12]
     out_dir = f"{output_dir}/{run_date}"
@@ -314,26 +299,58 @@ def run(
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    if scale:
-        xml_out = f"{out_dir}/output-{run_id}-xml"
-        xml_out = xml_io.write_xml_document_manifest(
-            xml_io.customer_xml(migrated), xml_out,
-            root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
-        )
-    else:
-        xml_out = f"{out_dir}/output-{run_id}.xml"
-        xml_io.write_xml_document(
-            xml_io.customer_xml(migrated), xml_out,
-            root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
-        )
     log_out = f"{out_dir}/output-{run_id}-log"
-    log.coalesce(1).write.mode("overwrite").option("header", True).csv(log_out)
 
-    # log is persisted and already materialized by the CSV write above,
-    # so both counts are cache hits, not re-joins
-    total = log.count()
-    found = log.where(F.col("reason") != REASON_NOT_FOUND).count()
-    log.unpersist()
+    mapping = read_mapping_csv(spark, csv_path)
+    # one parse of the export serves both consumers: the log's
+    # semi-join and the document rewrite read this persisted scan
+    customers = read_customers_xml(spark, xml_path).persist()
+    try:
+        log = reconcile(F.broadcast(mapping), customers)
+        transform_input = mapping
+        if strict:
+            ok_keys = log.where(F.col("status") == "OK").select(
+                F.col("current_id").alias("_ok")
+            )
+            transform_input = mapping.join(
+                F.broadcast(ok_keys),
+                mapping["current_customer_id"] == ok_keys["_ok"],
+                "left_semi",
+            )
+        migrated = apply_migration(customers, transform_input, run_ts=run_ts)
+
+        if scale:
+            xml_out = xml_io.write_xml_document_manifest(
+                xml_io.customer_xml(migrated), f"{out_dir}/output-{run_id}-xml",
+                root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
+            )
+        else:
+            xml_out = f"{out_dir}/output-{run_id}.xml"
+            xml_io.write_xml_document(
+                xml_io.customer_xml(migrated), xml_out,
+                root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
+            )
+        # found/total ride on the log's one write instead of two more
+        # jobs. They are exact under task retry: CollectMetrics sits in
+        # the write's result stage, and Spark applies a result task's
+        # accumulator updates once per partition, whichever attempt wins.
+        summary = Observation()
+        (
+            log.coalesce(1)
+            .observe(
+                summary,
+                F.count(F.lit(1)).alias("total"),
+                F.count_if(F.col("reason") != REASON_NOT_FOUND).alias("found"),
+            )
+            .write.mode("overwrite")
+            .option("header", True)
+            .csv(log_out)
+        )
+        found, total = summary.get["found"], summary.get["total"]
+    finally:
+        # blocking: the cached blocks are freed before run returns, so
+        # no removal outlives the run and overlaps the caller's next job
+        customers.unpersist(blocking=True)
     print(f"{found}/{total} customers found in source XML")
     kind = "delta XML manifest" if scale else "delta XML"
     print(f"{kind}: {xml_out}")

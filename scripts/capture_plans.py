@@ -14,8 +14,11 @@ statistics (PushedFilters / ReadSchema) match the bench scale.
 Expression ids (``vec_id#123L``), exchange ``plan_id``s and RDD ids
 (``MapPartitionsRDD[467]``) are session counters: they depend on every
 plan and job run earlier in the process, so each file renumbers them in
-order of first appearance. Two captures of the same plan are then
-byte-identical whatever ran before them.
+order of first appearance. So are AQE query-stage ids (the
+``Arguments: N`` of a ``ShuffleQueryStage``, ``BroadcastQueryStage``,
+``TableCacheQueryStage`` or ``ResultQueryStage``), which a plan executed
+during construction numbers in stage completion order. Two captures of
+the same plan are then byte-identical whatever ran before them.
 """
 
 import os
@@ -25,12 +28,19 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _COUNTERS = tuple(
-    re.compile(p) for p in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
+    re.compile(p)
+    for p in (
+        r"(#)(\d+)",
+        r"(plan_id=)(\d+)",
+        r"(RDD\[)(\d+)",
+        r"(QueryStage\n(?:Output .*\n)?Arguments: )(\d+)",
+    )
 )
 
 
 def normalize(txt: str) -> str:
-    """Renumber expression, plan and RDD ids by first appearance."""
+    """Renumber expression, plan, RDD and query-stage ids by first
+    appearance."""
     for pat in _COUNTERS:
         seen: dict = {}
 

@@ -281,6 +281,13 @@ def test_strict_mode_excludes_invalid(spark, tmp_path):
     assert ids == {"N1001", "N1002"}  # N1003 (-12D) excluded under strict
     log = spark.read.option("header", True).csv(out["log"])
     assert log.count() == 4  # log unchanged: full trail
+    # the log is not persisted, so strict mode evaluates reconcile once
+    # for the filter and once for the CSV: both must agree with the
+    # default mode's log row for row
+    default = migrate_cli.run(spark, str(xml), str(csv), str(tmp_path / "default"))
+    default_log = spark.read.option("header", True).csv(default["log"])
+    assert sorted(log.collect()) == sorted(default_log.collect())
+    assert (out["found"], out["total"]) == (default["found"], default["total"])
 
 
 def test_group_not_duplicated(spark, cli_out):
@@ -358,3 +365,74 @@ def test_default_input_discovery(spark, tmp_path, capsys, monkeypatch):
     printed = capsys.readouterr().out
     assert f"discovered inputs: xml={inp / 'export.xml'}" in printed
     assert "3/4 customers found in source XML" in printed
+
+
+def _local_bytes_read(spark) -> int:
+    fs = spark._jvm.org.apache.hadoop.fs.FileSystem
+    return sum(
+        s.getBytesRead() for s in fs.getAllStatistics() if s.getScheme() == "file"
+    )
+
+
+def test_export_parsed_once(spark, tmp_path):
+    """One run reads the export once: the log's semi-join and the
+    document rewrite share one persisted scan, which the run releases.
+    The export (a few hundred customers: FIXTURE_XML's records under
+    fresh ids) dominates the bytes, so a second parse shows as a ~2x
+    read of the inputs."""
+    import re
+
+    head, rest = FIXTURE_XML.split("  <customer ", 1)
+    records, tail = ("  <customer " + rest).rsplit("</enfinity>", 1)
+    copies = [
+        re.sub(r'<customer id="(\d+)">', rf'<customer id="{k}-\1">', records)
+        for k in range(100)
+    ]
+    xml = tmp_path / "export.xml"
+    xml.write_text(head + "".join(copies) + "</enfinity>" + tail, encoding="utf-8")
+    csv = tmp_path / "mapping.csv"
+    csv.write_text(
+        FIXTURE_CSV
+        + "".join(f"{k}-1001,N{k},SRC9,ST9,Store,true,-2D\n" for k in range(100)),
+        encoding="utf-8",
+    )
+    input_bytes = xml.stat().st_size + csv.stat().st_size
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache.numCachedEntries()
+    migrate_cli.run(spark, str(xml), str(csv), str(tmp_path / "warm"))
+    read_before = _local_bytes_read(spark)
+    out = migrate_cli.run(spark, str(xml), str(csv), str(tmp_path / "out"))
+    read = _local_bytes_read(spark) - read_before
+
+    assert (out["found"], out["total"]) == ("100", "104")
+    assert read <= 1.2 * input_bytes, f"{read} bytes read for {input_bytes} of input"
+    assert cache.numCachedEntries() == cached_before  # the scan is released
+
+
+@pytest.mark.parametrize(
+    "xml_text, csv_text, found_total, reasons",
+    [
+        (FIXTURE_XML, FIXTURE_CSV.splitlines()[0] + "\n", ("0", "0"), []),
+        (
+            FIXTURE_XML.split("  <customer ", 1)[0] + "</enfinity>\n",
+            FIXTURE_CSV,
+            ("0", "4"),
+            ["Not found in source XML"] * 4,
+        ),
+    ],
+    ids=["header_only_mapping", "export_without_customers"],
+)
+def test_degenerate_inputs(spark, tmp_path, xml_text, csv_text, found_total, reasons):
+    """An empty mapping or an export with no <customer> still runs the
+    log write, so the observed found/total arrives instead of blocking,
+    and the delta document is empty."""
+    xml = tmp_path / "export.xml"
+    csv = tmp_path / "mapping.csv"
+    xml.write_text(xml_text, encoding="utf-8")
+    csv.write_text(csv_text, encoding="utf-8")
+    out = migrate_cli.run(spark, str(xml), str(csv), str(tmp_path / "out"))
+    assert (out["found"], out["total"]) == found_total
+    log = spark.read.option("header", True).csv(out["log"]).collect()
+    assert [r["reason"] for r in log] == reasons
+    assert ET.parse(out["xml"]).getroot().findall("customer") == []
