@@ -766,15 +766,70 @@ def dedup_simhash_lsh(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
+# --- the pair graph -------------------------------------------------------
+# Connected components below and every operator of ops.graph run on one
+# graph: the undirected graph whose edges are the (doc_a, doc_b) rows of
+# a verified pair table. These helpers and their SQL twins define it.
+
+
+def sym_edges(pairs: DataFrame) -> DataFrame:
+    """The pair graph as a directed edge list ``(src, dst)``: both
+    directions of every ``(doc_a, doc_b)`` pair, so a node's neighbors
+    are the ``dst`` of its ``src`` rows. SQL twin: ``_SYM_EDGES_CTE``."""
+    return pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).unionAll(
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    )
+
+
+def smallest_nodes(edges: DataFrame, k: int) -> DataFrame:
+    """The ``k`` smallest node ids of a ``sym_edges`` list (all of them
+    when there are fewer) as one ``node`` column: the deterministic
+    seed set of BFS, PPR and landmark closeness. SQL twin:
+    ``_smallest_nodes_sql``."""
+    return edges.select(F.col("src").alias("node")).distinct().orderBy("node").limit(k)
+
+
+def endpoint_degree(
+    pairs: DataFrame, node: str = "node", degree: str = "degree"
+) -> DataFrame:
+    """Per-node degree of the pair graph, ``(node, degree)`` under the
+    given names: the number of pairs each id is an endpoint of. Equal
+    to ``sym_edges(pairs).groupBy("src").count()`` (the SQL side's
+    ``GROUP BY src`` over ``_SYM_EDGES_CTE``) but aggregates one id
+    column instead of the two-column edge list."""
+    return (
+        pairs.select(F.col("doc_a").alias(node))
+        .unionAll(pairs.select(F.col("doc_b").alias(node)))
+        .groupBy(node)
+        .agg(F.count("*").alias(degree))
+    )
+
+
+#: SQL twin of ``sym_edges``, appended to a ``pairs`` CTE. DuckDB
+#: inlines a plain CTE at every reference, and the unrolled-round graph
+#: oracles reference their edge list and their previous round several
+#: times each, so every round would re-derive the whole chain below it
+#: (the plan doubles per round and ran the tests out of memory).
+#: MATERIALIZED evaluates it once; it changes how DuckDB evaluates the
+#: oracle, never what it returns.
+_SYM_EDGES_CTE = """
+    , edges AS MATERIALIZED (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL SELECT doc_b, doc_a FROM pairs
+    )"""
+
+
+def _smallest_nodes_sql(k: int) -> str:
+    """SQL twin of ``smallest_nodes`` over an ``edges`` CTE."""
+    return f"SELECT DISTINCT src AS node FROM edges ORDER BY node LIMIT {k}"
+
+
 #: connected-components tail appended to a pairs CTE: the labeling
 #: ``lp(node, cluster_id)`` via a recursive-CTE fixpoint — shared by
 #: the unigram and shingle cluster oracles.
-_CC_TAIL_CTE = """
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ), nodes AS (
+_CC_TAIL_CTE = _SYM_EDGES_CTE + """, nodes AS (
       SELECT DISTINCT src AS node FROM edges
     ), lp AS (
       -- fixpoint min-label propagation: every label reachable from a
@@ -854,8 +909,8 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
        pointer doubling: the distance to the component minimum halves
        every round, so convergence is O(log diameter) rounds, not
        O(diameter) — a 15-round cap covers diameters past 2¹⁵ (the
-       round-7 scale probe surfaced a >15-diameter chain in the sparse
-       embedding pair graph at sf0.1 that pure propagation missed).
+       sparse embedding pair graph at sf0.1 holds a chain longer than
+       15 hops, which 15 rounds of pure propagation cannot span).
 
     Two keyed shuffles per round over the pair-graph NODES only;
     lineage truncated with localCheckpoint so plans don't grow
@@ -865,35 +920,24 @@ def _cc_min_label(pairs: DataFrame) -> DataFrame:
     labeling is — one cheap agg over the checkpointed frame per round,
     not a join. Returns (doc_id, cluster_id, is_survivor), survivor =
     min id."""
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).toDF("src", "dst")
-    # lazy: the first round's convergence-probe collect materializes
-    # the edge RDD along with round 1 in ONE job (r12; the former
-    # eager checkpoint was a separate job per barrier — two jobs per
-    # round for one round's bytes)
-    edges = edges.localCheckpoint(eager=False)
+    # lazy: the first round's convergence-probe collect materializes the
+    # edge RDD along with round 1 in one job, where an eager checkpoint
+    # would be a job of its own
+    edges = sym_edges(pairs).localCheckpoint(eager=False)
 
     def label_sum(lbl: DataFrame):
         # DECIMAL(38) accumulator: immune to long overflow even with
         # billions of 64-bit ids (ANSI mode would throw on long sum)
         return lbl.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0] or 0
 
-    # r13: round 1 is FUSED into one aggregate. At init every label is
-    # the identity, so round 1's edge-propagation join degenerates to
-    # reading src directly: hop₁(n) = min(n, min{src: (src,n) ∈ edges})
-    # = groupBy(dst) MIN(least(dst, src)) over the symmetric edge list
-    # (every node appears as a dst, so the old nodes-DISTINCT init
-    # frame is subsumed too). That removes, per CC consumer, the
-    # separate labels-init exchange, round 1's two join exchanges, AND
-    # the former up-front convergence sum — a whole driver round-trip
-    # that could never fire: any nonempty edge list strictly lowers
-    # the label sum in round 1 (each edge's larger endpoint adopts the
-    # smaller id), so comparing sum₀ to sum₁ was a wasted job. Labels
-    # after fused round 1 are bit-identical to the old round-1 output;
-    # rounds 2+ and the fixpoint are untouched (same final labeling,
-    # oracle-checked). Empty graph: one extra (empty) round instead of
-    # the early exit — there is nothing to compute either way.
+    # Round 1 is one aggregate. Every label starts as the node itself,
+    # so the propagation join reads src directly: hop₁(n) = min(n,
+    # min{src: (src, n) ∈ edges}) = groupBy(dst) MIN(least(dst, src)),
+    # and since every node appears as a dst no separate init frame is
+    # needed. No convergence check runs before round 1: any nonempty
+    # edge list strictly lowers the label sum in it (each edge's larger
+    # endpoint adopts the smaller id). An empty graph runs one empty
+    # round.
     prev_sum = None
     labels = None
     changed = 1

@@ -1,23 +1,30 @@
-"""Graph analytics over the near-dup similarity graph: PageRank.
+"""Graph analytics over the near-dup pair graph: PageRank, personalized
+PageRank, HITS, label propagation (and the modularity of its
+communities), BFS distances, landmark closeness, k-core, triangles,
+degree distribution, degree assortativity and neighborhood-Jaccard
+link suggestions.
 
-Second iterative-algorithm family next to ``dedup_clusters``'
-connected components (same Pregel-style shape: bounded driver loop,
-one shuffle per round, no driver-side data). Nodes are the documents
-that appear in any MinHash-LSH near-dup pair; edges are the pairs,
-undirected. PageRank scores then rank each duplicate-cluster's
-members by connectivity — a principled "which copy is canonical"
-signal for dedup survivor selection, vs. the arbitrary min-id rule.
+Every operator reads the same graph as ``dedup_clusters``' connected
+components: nodes are the documents that appear in any MinHash-LSH
+near-dup pair, edges are the pairs, undirected. ``ops.dedup`` defines
+it once: ``sym_edges`` (both directions of every pair),
+``smallest_nodes`` (deterministic seeds) and ``endpoint_degree``, with
+the SQL twins ``_SYM_EDGES_CTE`` and ``_smallest_nodes_sql`` for the
+oracles. HITS alone iterates the id-oriented (doc_a < doc_b) digraph.
 
-Cross-engine exactness for an iterative float algorithm:
-- the per-node neighbor sum rides DECIMAL(38,30) (order-independent
-  exact addition) and is cast back to double once per round — the
-  same trick the aggregate family uses, applied per iteration;
-- the oracle unrolls the identical rounds as chained CTEs (standard
+Cross-engine exactness for the iterative algorithms (same Pregel-style
+shape as connected components: bounded driver loop, one shuffle per
+round, no driver-side data):
+- float neighbor sums ride DECIMAL(38,30) (order-independent exact
+  addition) and are cast back to double once per round — the same
+  trick the aggregate family uses, applied per iteration; PPR, BFS and
+  closeness stay in integer math;
+- the oracles unroll the identical rounds as chained CTEs (standard
   SQL forbids aggregation inside a recursive CTE member), so both
-  engines run literally the same 5 damped-sum updates.
+  engines run literally the same updates.
 
-Scale: each round is one shuffle keyed by node id (edges × ranks
-equi-join + groupBy). Round count is fixed and small; at 100 TB the
+Scale: each round is one shuffle keyed by node id (edges × state
+equi-join + groupBy). Round counts are fixed and small; at 100 TB the
 edge table is the persisted LSH output and each round is a co-located
 join when both sides are bucketed by node.
 """
@@ -27,25 +34,20 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from pro_etl_spark.ops.dedup import _LSH_PAIRS_CTE, dedup_minhash_lsh
+from pro_etl_spark.ops.dedup import (
+    _LSH_PAIRS_CTE,
+    _SYM_EDGES_CTE,
+    _smallest_nodes_sql,
+    dedup_minhash_lsh,
+    endpoint_degree,
+    smallest_nodes,
+    sym_edges,
+)
 from pro_etl_spark.registry import register
 
 DAMPING = 0.85
 ROUNDS = 5
 _DEC30 = "decimal(38,30)"
-
-#: the undirected LSH pair graph as a directed edge list, for the oracles
-#: built on ``_LSH_PAIRS_CTE``. DuckDB inlines a plain CTE at every
-#: reference, and the unrolled-round oracles reference their edge list
-#: and their previous round several times each, so every round would
-#: re-derive the whole chain below it (the plan doubles per round and
-#: ran the tests out of memory). MATERIALIZED evaluates each once; it
-#: changes how DuckDB evaluates the oracle, never what it returns.
-_SYM_EDGES_CTE = """
-    , edges AS MATERIALIZED (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    )"""
 
 
 def _oracle_sql() -> str:
@@ -87,10 +89,7 @@ def graph_pagerank(spark: SparkSession, d: str) -> DataFrame:
     ≥ 1, so there is no dangling-mass term; each round is
     contributions (rank/degree) shuffled to the neighbor and summed
     through DECIMAL for order independence."""
-    pairs = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d))
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     # the weighted edge list and node set are re-read every round (5
     # joins each): truncate their lineage once so each round shuffles
@@ -113,13 +112,11 @@ def graph_pagerank(spark: SparkSession, d: str) -> DataFrame:
         sums = contrib.groupBy("dst").agg(
             F.sum(F.col("c").cast(_DEC30)).cast("double").alias("s")
         )
-        # the edge list is SYMMETRIC (both directions of every LSH
-        # pair), so every node has an incoming edge and `sums` already
-        # covers the exact node set: the former `nodes ⋈ sums` inner
-        # join was an identity costing two exchanges per round (guide
-        # §2.4 — remove shuffles outright). The oracle's
-        # `nodes n JOIN edges e ON e.dst = n.node` reduces to the same
-        # set, so values are untouched.
+        # the edge list is symmetric, so every node has an incoming
+        # edge and `sums` already covers the exact node set: joining it
+        # back to `nodes` would cost two exchanges per round for an
+        # identity. The oracle's `nodes n JOIN edges e ON e.dst =
+        # n.node` reduces to the same set.
         r = sums.crossJoin(F.broadcast(nn)).select(
             F.col("dst").alias("node"),
             ((1 - DAMPING) / F.col("n") + DAMPING * F.col("s")).alias("r"),
@@ -173,9 +170,8 @@ def graph_triangles(spark: SparkSession, d: str) -> DataFrame:
     NOT all-pairs; both joins key on node ids, so at 100 TB the edge
     table bucketed by node makes them co-located. The coefficient
     2T/(deg·(deg-1)) is one exact int→double divide per node."""
-    pairs = dedup_minhash_lsh(spark, d).select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    )
+    lsh = dedup_minhash_lsh(spark, d)
+    pairs = lsh.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     e1 = pairs.select(F.col("a"), F.col("b"))
     e2 = pairs.select(F.col("a").alias("b2"), F.col("b").alias("c"))
     e3 = pairs.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
@@ -194,12 +190,7 @@ def graph_triangles(spark: SparkSession, d: str) -> DataFrame:
         .unionAll(tri.select(F.col("c").alias("doc_id")))
     )
     tcount = corners.groupBy("doc_id").agg(F.count("*").alias("n_triangles"))
-    deg = (
-        pairs.select(F.col("a").alias("doc_id"))
-        .unionAll(pairs.select(F.col("b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("degree"))
-    )
+    deg = endpoint_degree(lsh, "doc_id")
     t = F.coalesce(F.col("n_triangles"), F.lit(0))
     return deg.join(tcount, "doc_id", "left").select(
         "doc_id",
@@ -215,15 +206,11 @@ def graph_triangles(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-_JACCARD_SUGGEST_ORACLE = _LSH_PAIRS_CTE + """
-    , e AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), deg AS (
-      SELECT u AS node, COUNT(*) AS degree FROM e GROUP BY u
+_JACCARD_SUGGEST_ORACLE = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + """, deg AS (
+      SELECT src AS node, COUNT(*) AS degree FROM edges GROUP BY src
     ), common AS (
-      SELECT e1.u AS a, e2.v AS b, COUNT(*) AS n_common
-      FROM e e1 JOIN e e2 ON e1.v = e2.u AND e1.u < e2.v
+      SELECT e1.src AS a, e2.dst AS b, COUNT(*) AS n_common
+      FROM edges e1 JOIN edges e2 ON e1.dst = e2.src AND e1.src < e2.dst
       GROUP BY 1, 2
     ), nonedge AS (
       SELECT c.a, c.b, c.n_common
@@ -259,21 +246,17 @@ def graph_jaccard_suggest(spark: SparkSession, d: str) -> DataFrame:
     known-edge exclusion is one anti-join on the canonical pair list.
     All joins key on node ids — co-located under node bucketing at
     100 TB."""
-    pairs = dedup_minhash_lsh(spark, d).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    e = pairs.unionAll(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = e.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("degree"))
-    e2 = e.select(F.col("u").alias("mid"), F.col("v").alias("b"))
+    pairs = dedup_minhash_lsh(spark, d)
+    e = sym_edges(pairs)
+    deg = e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("degree"))
+    e2 = e.select(F.col("src").alias("mid"), F.col("dst").alias("b"))
     common = (
-        e.join(e2, (F.col("v") == F.col("mid")) & (F.col("u") < F.col("b")))
-        .groupBy(F.col("u").alias("a"), "b")
+        e.join(e2, (F.col("dst") == F.col("mid")) & (F.col("src") < F.col("b")))
+        .groupBy(F.col("src").alias("a"), "b")
         .agg(F.count("*").alias("n_common"))
     )
     nonedge = common.join(
-        pairs.select(F.col("u").alias("a"), F.col("v").alias("b")),
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
         ["a", "b"],
         "left_anti",
     )
@@ -342,31 +325,19 @@ def graph_kcore(spark: SparkSession, d: str) -> DataFrame:
     plus two semi-joins keyed on node ids — Σ|E| work per round, no
     driver materialization; the surviving-core edge list shrinks
     monotonically."""
-    edges = dedup_minhash_lsh(spark, d).select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    )
+    edges = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
     for _ in range(KCORE_ROUNDS):
-        deg = (
-            edges.select(F.col("a").alias("node"))
-            .unionAll(edges.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+        deg = endpoint_degree(edges, degree="deg")
         keep = deg.where(F.col("deg") >= KCORE_K).select("node")
         edges = edges.join(
-            keep.withColumnRenamed("node", "a"), "a", "left_semi"
-        ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
+            keep.withColumnRenamed("node", "doc_a"), "doc_a", "left_semi"
+        ).join(keep.withColumnRenamed("node", "doc_b"), "doc_b", "left_semi")
         # truncate lineage per round (the dedup_clusters discipline):
         # each round's deg re-derives the previous round's edge list,
         # so without the checkpoint the join DAG re-expands ~3× per
         # round — measured minutes instead of seconds by round 3
         edges = edges.localCheckpoint(eager=True)
-    return (
-        edges.select(F.col("a").alias("doc_id"))
-        .unionAll(edges.select(F.col("b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("core_degree"))
-    )
+    return endpoint_degree(edges, "doc_id", "core_degree")
 
 
 LPA_ROUNDS = 3
@@ -417,16 +388,7 @@ def graph_label_propagation(spark: SparkSession, d: str) -> DataFrame:
     (node, label) count and a per-node MIN(STRUCT) argmax — both hash
     aggregates with map-side partials, no per-node sort. Lineage is
     truncated per round (the ``dedup_clusters`` discipline)."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -436,13 +398,11 @@ def graph_label_propagation(spark: SparkSession, d: str) -> DataFrame:
         ).select(F.col("dst").alias("node"), "label")
         counts = cand.groupBy("node", "label").agg(F.count("*").alias("cnt"))
         # most-frequent-neighbor-label pick: MIN(STRUCT(-cnt, label))
-        # is the identical deterministic (cnt DESC, label ASC)
-        # tie-break computed as a hash aggregate with map-side partials
-        # on the same node-keyed exchange — the former
-        # `row_number() OVER (PARTITION BY node ORDER BY ...)` paid a
-        # full sort of every (node, label) cell per round (guide §2.3
-        # "aggregate before you shuffle"). Values unchanged (the
-        # oracle keeps the ROW_NUMBER form; same winner per node).
+        # is the deterministic (cnt DESC, label ASC) tie-break computed
+        # as a hash aggregate with map-side partials on the same
+        # node-keyed exchange, where a row_number() window would sort
+        # every (node, label) cell per round. The oracle keeps the
+        # ROW_NUMBER form; the winner per node is the same.
         labels = (
             counts.groupBy("node")
             .agg(
@@ -471,8 +431,7 @@ def _bfs_oracle() -> str:
     BFS_SEEDS smallest node ids)."""
     sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + f""", d0 AS MATERIALIZED (
       SELECT node, 0 AS dist FROM (
-        SELECT DISTINCT src AS node FROM edges ORDER BY node
-        LIMIT {BFS_SEEDS}
+        {_smallest_nodes_sql(BFS_SEEDS)}
       )
     )"""
     for i in range(1, BFS_ROUNDS + 1):
@@ -505,23 +464,8 @@ def graph_bfs_distances(spark: SparkSession, d: str) -> DataFrame:
     Scale: per round one keyed shuffle (frontier ⋈ edges + per-node
     MIN) exactly like ``graph_pagerank``'s update; the frontier table
     only ever holds reached nodes. Lineage truncated per round."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(BFS_SEEDS)
-        .select("node", F.lit(0).alias("dist"))
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
+    dist = smallest_nodes(edges, BFS_SEEDS).select("node", F.lit(0).alias("dist"))
     for _ in range(BFS_ROUNDS):
         relaxed = edges.join(
             dist, edges["src"] == dist["node"], "inner"
@@ -538,12 +482,8 @@ def graph_bfs_distances(spark: SparkSession, d: str) -> DataFrame:
 
 
 def _degree_oracle() -> str:
-    sql = _LSH_PAIRS_CTE + """
-    , deg AS (
-      SELECT node, COUNT(*) AS degree FROM (
-        SELECT doc_a AS node, doc_b FROM pairs
-        UNION ALL SELECT doc_b, doc_a FROM pairs
-      ) GROUP BY node
+    sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + """, deg AS (
+      SELECT src AS node, COUNT(*) AS degree FROM edges GROUP BY src
     )
     SELECT CAST(degree AS BIGINT) AS degree,
            CAST(COUNT(*) AS BIGINT) AS n_nodes
@@ -564,13 +504,7 @@ def graph_degree_distribution(spark: SparkSession, d: str) -> DataFrame:
 
     Scale: edge table shuffles once on node, the histogram aggregate
     is map-side combinable on a tiny key space; no joins, no windows."""
-    pairs = dedup_minhash_lsh(spark, d)
-    deg = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .unionAll(pairs.select(F.col("doc_b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+    deg = endpoint_degree(dedup_minhash_lsh(spark, d))
     return deg.groupBy(F.col("degree").cast("long").alias("degree")).agg(
         F.count("*").cast("long").alias("n_nodes")
     )
@@ -590,8 +524,7 @@ def _ppr_oracle() -> str:
       SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src
     ), seeds AS (
       SELECT node FROM (
-        SELECT DISTINCT src AS node FROM edges ORDER BY node
-        LIMIT {BFS_SEEDS}
+        {_smallest_nodes_sql(BFS_SEEDS)}
       )
     ), m0 AS MATERIALIZED (
       SELECT node, CAST(1000000 // {BFS_SEEDS} AS BIGINT) AS m FROM seeds
@@ -637,24 +570,11 @@ def graph_personalized_pagerank(spark: SparkSession, d: str) -> DataFrame:
     plus an O(1)-row total — the touched node set stays proportional
     to the seed neighborhood, not the corpus. Lineage truncated per
     round."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint(eager=False)
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("deg")
     )
-    seeds = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(BFS_SEEDS)
-        .localCheckpoint(eager=True)
-    )
+    seeds = smallest_nodes(edges, BFS_SEEDS).localCheckpoint(eager=True)
     m = seeds.select(
         "node", F.lit(1000000 // BFS_SEEDS).cast("long").alias("m")
     )
@@ -756,12 +676,7 @@ def graph_modularity(spark: SparkSession, d: str) -> DataFrame:
     pairs = dedup_minhash_lsh(spark, d)
     lpa = graph_label_propagation(spark, d).select("doc_id", "community")
     m_df = pairs.agg(F.count("*").alias("m"))
-    deg = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .unionAll(pairs.select(F.col("doc_b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = endpoint_degree(pairs, degree="deg")
     comm = (
         lpa.join(deg, lpa["doc_id"] == deg["node"])
         .groupBy("community")
@@ -856,10 +771,7 @@ def graph_assortativity(spark: SparkSession, d: str) -> DataFrame:
     table is |nodes|, tiny next to the corpus); the moment aggregate
     is a single global row. No all-pairs anything — cost is bounded by
     the pair table the LSH stage already materialized."""
-    pairs = dedup_minhash_lsh(spark, d).select("doc_a", "doc_b")
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
-    )
+    edges = sym_edges(dedup_minhash_lsh(spark, d))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("d")
     )
@@ -895,7 +807,6 @@ def graph_assortativity(spark: SparkSession, d: str) -> DataFrame:
 
 
 HITS_ROUNDS = 3
-_DEC30H = "decimal(38,30)"
 
 
 def _hits_oracle() -> str:
@@ -981,15 +892,12 @@ def graph_hits(spark: SparkSession, d: str) -> DataFrame:
         # each half-round's neighbor-sum frame is consumed TWICE (the
         # 1-row L1 normalizer aggregate and the per-node projection);
         # without a lineage barrier the unrolled subtree DOUBLES per
-        # half-round — 2^(2·rounds) copies of the LSH-pair derivation,
-        # measured as a 704 KB plan with 1,130 Exchanges at r12.
-        # A lazy localCheckpoint per half-round pins it (guide §3.3
-        # "materialise an intermediate to truncate the plan"): 5 KB,
-        # 14 Exchanges, values untouched.
+        # half-round — 2^(2·rounds) copies of the LSH-pair derivation.
+        # A lazy localCheckpoint per half-round keeps the plan linear.
         ad = (
             e.join(h, e.src == h.node)
             .groupBy(F.col("dst").alias("anode"))
-            .agg(F.sum(F.col("h").cast(_DEC30H)).alias("s"))
+            .agg(F.sum(F.col("h").cast(_DEC30)).alias("s"))
             .localCheckpoint(eager=False)
         )
         at = ad.agg(F.sum("s").alias("t"))
@@ -1002,7 +910,7 @@ def graph_hits(spark: SparkSession, d: str) -> DataFrame:
         hd = (
             e.join(a, e.dst == a.node)
             .groupBy(F.col("src").alias("hnode"))
-            .agg(F.sum(F.col("a").cast(_DEC30H)).alias("s"))
+            .agg(F.sum(F.col("a").cast(_DEC30)).alias("s"))
             .localCheckpoint(eager=False)
         )
         ht = hd.agg(F.sum("s").alias("t"))
@@ -1037,8 +945,7 @@ def _closeness_oracle() -> str:
     1/d floor-quantized to integer micros."""
     sql = _LSH_PAIRS_CTE + _SYM_EDGES_CTE + f""", d0 AS MATERIALIZED (
       SELECT node AS lm, node, 0 AS dist FROM (
-        SELECT DISTINCT src AS node FROM edges ORDER BY node
-        LIMIT {CLOSENESS_LANDMARKS}
+        {_smallest_nodes_sql(CLOSENESS_LANDMARKS)}
       )
     )"""
     for i in range(1, CLOSENESS_ROUNDS + 1):
@@ -1085,22 +992,9 @@ def graph_closeness_landmarks(spark: SparkSession, d: str) -> DataFrame:
     per-(lm, node) MIN), lineage truncated per round. L and the hop
     horizon are constants, so the whole job is O(rounds · |E| · L /
     cluster)."""
-    pairs = dedup_minhash_lsh(spark, d)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(CLOSENESS_LANDMARKS)
-        .select(F.col("node").alias("lm"), "node", F.lit(0).alias("dist"))
+    edges = sym_edges(dedup_minhash_lsh(spark, d)).localCheckpoint(eager=False)
+    dist = smallest_nodes(edges, CLOSENESS_LANDMARKS).select(
+        F.col("node").alias("lm"), "node", F.lit(0).alias("dist")
     )
     for _ in range(CLOSENESS_ROUNDS):
         relaxed = edges.join(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql.functions import pandas_udf
 
 from pro_etl_spark.io import dataset_memo, load
-from pro_etl_spark.ops.dedup import _LSH_PAIRS_CTE
+from pro_etl_spark.ops.dedup import _CLUSTERS_CTE, _LSH_PAIRS_CTE
 from pro_etl_spark.ops.hashing import DUCK_HASH60, hash60  # noqa: F401 (re-export)
 from pro_etl_spark.registry import register
 
@@ -243,25 +243,15 @@ MIN_TOKENS = 30
 
 @register(
     "pipeline_clean_corpus",
-    oracle=_LSH_PAIRS_CTE
+    oracle=_CLUSTERS_CTE
     + rf"""
-    , edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL SELECT doc_b, doc_a FROM pairs
-    ), comp AS (
-      WITH RECURSIVE reach(node, label) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.dst, reach.label FROM reach JOIN edges e ON reach.node = e.src
-      )
-      SELECT node, MIN(label) AS cluster_id FROM reach GROUP BY node
-    ), q AS (
+    , q AS (
       SELECT doc_id,
              len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens
       FROM documents
     )
     SELECT q.doc_id, CAST(q.n_tokens AS BIGINT) AS n_tokens
-    FROM q LEFT JOIN comp ON q.doc_id = comp.node
+    FROM q LEFT JOIN lp comp ON q.doc_id = comp.node
     WHERE q.n_tokens >= {MIN_TOKENS}
       AND (comp.node IS NULL OR comp.node = comp.cluster_id)
     """,

@@ -19,6 +19,18 @@ order of first appearance. So are AQE query-stage ids (the
 ``TableCacheQueryStage`` or ``ResultQueryStage``), which a plan executed
 during construction numbers in stage completion order. Two captures of
 the same plan are then byte-identical whatever ran before them.
+
+What a capture cannot prove: a key whose DataFrame ends in a
+``localCheckpoint`` captures only its ``Scan ExistingRDD`` tail (a few
+hundred bytes for LPA), so for BFS, PPR, LPA, landmark closeness and
+the connected-components keys the proof of an unchanged result is the
+digest of the sorted rows and the oracle, not this file. Executed plans
+read back from the SQL status store cannot stand in: AQE re-plans
+stages at run time, so two runs of unchanged code in fresh sessions
+differ even with the listener bus drained and stage and codegen ids
+renumbered (at sf0.01, the executed plans of all of a key's jobs
+differed in 305 lines for ``dedup_clusters`` and in 28 for
+``dedup_shingle_clusters``).
 """
 
 import os

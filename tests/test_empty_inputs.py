@@ -314,6 +314,10 @@ REPRESENTATIVES = [
     "mm_audio_vad_segments",
     "supplier_scorecard",
     "events_poisson_rate_ci",
+    # the two graph keys not covered above, so every graph operator
+    # runs on an empty pair graph
+    "graph_triangles",
+    "graph_closeness_landmarks",
 ]
 
 

@@ -830,6 +830,67 @@ def test_top_k_ranking_contract(spark):
             ]
 
 
+def test_pair_graph_contract(spark):
+    """The pair graph every graph operator and connected components
+    share (``sym_edges``, ``smallest_nodes``, ``endpoint_degree``), on
+    a hand-built pair table: both directions of every pair, the k
+    smallest ids as seeds, endpoint degree equal to the edge list's
+    out-degree — and each Python helper returns the rows of its SQL
+    twin in DuckDB."""
+    import collections
+
+    import duckdb
+
+    from pro_etl_spark.ops.dedup import (
+        _SYM_EDGES_CTE,
+        _smallest_nodes_sql,
+        endpoint_degree,
+        smallest_nodes,
+        sym_edges,
+    )
+
+    # a triangle, a star around 9, a lone pair and a two-hop chain
+    pairs = [
+        (1, 2), (2, 3), (1, 3), (5, 9), (7, 9), (9, 12), (4, 11), (20, 30), (30, 40),
+    ]
+    nodes = sorted({n for p in pairs for n in p})
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+
+    edges = sym_edges(df)
+    assert edges.columns == ["src", "dst"]
+    got_edges = sorted(tuple(r) for r in edges.collect())
+    assert len(got_edges) == 2 * len(pairs)
+    assert got_edges == sorted(pairs + [(b, a) for a, b in pairs])
+
+    for k in (1, 3, len(nodes), len(nodes) + 5):
+        got = smallest_nodes(edges, k)
+        assert got.columns == ["node"]
+        assert sorted(r.node for r in got.collect()) == nodes[:k], k
+
+    deg = endpoint_degree(df)
+    assert deg.columns == ["node", "degree"]
+    got_deg = sorted(tuple(r) for r in deg.collect())
+    assert got_deg == sorted(tuple(r) for r in edges.groupBy("src").count().collect())
+    counts = collections.Counter(n for p in pairs for n in p)
+    assert got_deg == sorted(counts.items())
+    assert endpoint_degree(df, "doc_id", "deg").columns == ["doc_id", "deg"]
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE p (doc_a BIGINT, doc_b BIGINT)")
+        con.executemany("INSERT INTO p VALUES (?, ?)", pairs)
+        with_edges = "WITH pairs AS (SELECT doc_a, doc_b FROM p)" + _SYM_EDGES_CTE
+        sql = with_edges + " SELECT src, dst FROM edges"
+        assert sorted(con.execute(sql).fetchall()) == got_edges
+        for k in (3, len(nodes) + 5):
+            sql = with_edges + f" SELECT node FROM ({_smallest_nodes_sql(k)})"
+            assert sorted(r[0] for r in con.execute(sql).fetchall()) == nodes[:k], k
+        sql = with_edges + " SELECT src, COUNT(*) FROM edges GROUP BY src"
+        assert sorted(con.execute(sql).fetchall()) == got_deg
+    finally:
+        con.close()
+
+
 def test_rolling_corr_bounds_and_warmup(spark):
     """corr_w must be NULL for warm-up rows (n_win < CORR_WIN) and in
     [-1, 1] (+rounding slack) otherwise; n_win never exceeds the
