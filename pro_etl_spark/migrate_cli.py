@@ -10,10 +10,12 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
 
 1. mapping CSV with an **explicit schema** (no inference — fixes
    migrate.py:79), first-row-wins dedup on the join key (J4)
-2. customer XML via Spark's native XML source with an **explicit
-   schema** (arrays stay arrays even for single elements), normalized
-   to the canonical nested shape of SURVEY §1.5 — parsed **once** per
-   run and persisted, so steps 3 and 4 read the same scan
+2. customer XML split at record boundaries (the text source cut at
+   ``</customer>``, one task per split) and parsed per record with
+   ``from_xml`` and an **explicit schema** (arrays stay arrays even for
+   single elements), normalized to the canonical nested shape of
+   SURVEY §1.5 — parsed **once** per run and persisted, so steps 3 and
+   4 read the same scan
 3. validation (delivery-day regex + '-3D' default, null checks) and
    the OK / Not OK / Not-found reconciliation log (migrate.py:103-270)
 4. ``apply_migration`` — the full nested-document rewrite
@@ -26,8 +28,17 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
 
 Scale: the mapping broadcasts; the corpus never shuffles; the document
 rewrite and XML record serialization are narrow Column expressions.
-The export is parsed once per run: the persisted scan trades memory
-for a second parse, and at corpus scale it spills to local disk
+The export is read in record-boundary splits, so the parse, the
+rewrite and the serialization run on as many tasks as Spark's file
+sizing gives the export (Spark's native XML source reads one file in
+one task). Each split's text is cut at the ``</customer>`` end tags,
+which is exact for well-formed XML outside comments, CDATA sections,
+DOCTYPEs and processing instructions; the read fails, naming the file
+and the construct, on any ``<!``, on a ``<?`` after the XML
+declaration, on a self-closing ``<customer/>``, on an end tag written
+``</customer >`` and on two ``<customer`` start tags before one end
+tag. The export is parsed once per run: the persisted scan trades
+memory for a second parse, and at corpus scale it spills to local disk
 (MEMORY_AND_DISK) rather than failing.
 """
 
@@ -88,7 +99,7 @@ def _attr_st() -> ArrayType:
 
 
 #: explicit read schema for the customer XML (field names follow the
-#: native XML source's attribute conventions: attributes are
+#: Spark XML parser's attribute conventions: attributes are
 #: ``_``-prefixed, element text is ``_VALUE``); declaring it keeps
 #: single-element collections as arrays
 XML_SCHEMA = StructType(
@@ -169,15 +180,23 @@ def _canon_attrs(c: F.Column) -> F.Column:
 
 
 def read_customers_xml(spark: SparkSession, path: str) -> DataFrame:
-    """Native XML scan with the explicit schema, normalized to the
-    canonical nested shape (SURVEY §1.5) that ``apply_migration`` and
-    ``xml_io.customer_xml`` operate on."""
-    raw = (
-        spark.read.format("xml")
-        .option("rowTag", "customer")
-        .schema(XML_SCHEMA)
-        .load(path)
+    """The export's ``<customer>`` records, split at record boundaries
+    (``xml_io.record_fragments``, one task per text split) and parsed
+    with ``from_xml`` under the explicit schema, normalized by
+    ``canonical_customers``. The rows and their order are those of the
+    native XML source read with ``rowTag="customer"`` and the same
+    schema, which reads the whole file in one task; an export the split
+    cannot read exactly fails the read instead."""
+    raw = xml_io.record_fragments(spark, path, "customer").select(
+        F.from_xml("xml", XML_SCHEMA).alias("r")
     )
+    return canonical_customers(raw.select("r.*"))
+
+
+def canonical_customers(raw: DataFrame) -> DataFrame:
+    """Rows of ``XML_SCHEMA`` normalized to the canonical nested shape
+    (SURVEY §1.5) that ``apply_migration`` and ``xml_io.customer_xml``
+    operate on."""
     users = F.transform(
         F.coalesce(F.col("user"), F.array().cast(XML_SCHEMA["user"].dataType)),
         lambda u: F.struct(

@@ -26,14 +26,19 @@ Split of labor:
   handed to `compose_manifest` as a callable. `read_manifest_document`
   consumes the file set directly, so most readers never compose.
 
-Reading uses Spark's native XML source, which handles namespaced
-attributes fine (``dt:dt`` → struct field ``_dt:dt``).
+Reading splits the text at record boundaries (`record_fragments`) and
+parses each record with ``from_xml``: the text source splits one large
+file across tasks, where Spark's native XML source reads a file as one
+split. Both parsers handle namespaced attributes fine (``dt:dt`` →
+struct field ``_dt:dt``). `read_xml_document` keeps the native source
+for whole documents.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 
 import pyspark.sql.functions as F
@@ -259,6 +264,80 @@ def compose_manifest(manifest_path: str, out_file: str, concat=None) -> str:
     return out_file
 
 
+def record_fragments(
+    spark: SparkSession, paths: str | list[str], row_tag: str = "customer"
+) -> DataFrame:
+    """One-record XML strings (column ``xml``) cut out of XML text at
+    the ``</row_tag>`` end tags, in file order.
+
+    The text source reads with ``lineSep = "</row_tag>"``. It is
+    splittable, and its record reader gives each chunk to exactly one
+    split even when a split boundary falls inside the chunk or the
+    delimiter, so a large file parses on many tasks. Each chunk keeps
+    the text from its first ``<row_tag`` start tag on and gets the end
+    tag back; chunks without a start tag (the envelope's tail) are
+    dropped.
+
+    The cut is exact for well-formed XML: ``<`` is escaped in text and
+    attribute values, so a literal end tag is a real one unless it sits
+    in a comment, CDATA section or DOCTYPE (``<!``) or a processing
+    instruction (``<?``). Those, a self-closing ``<row_tag/>``, an end
+    tag with whitespace before ``>``, and a second start tag in one
+    chunk fail the read with ``raise_error`` naming the file and the
+    construct. The gate is part of the filter that drops the empty
+    chunks, so it costs no extra pass."""
+    close = f"</{row_tag}>"
+    tag = re.escape(row_tag)
+    start = f"<{tag}[\\s>/]"
+    start_tag = (
+        f"<{tag}(?:\\s+[^\\s=/>]+\\s*=\\s*(?:\"[^\"]*\"|'[^']*'))*\\s*(/?)>"
+    )
+    v = F.col("value")
+    declaration = F.when(v.rlike("\\A\\uFEFF?\\s*<\\?xml\\s"), 1).otherwise(0)
+    # literal tests guard the <? and end-tag regexes, which then run
+    # only on the chunks that could hold the construct
+    unsafe = (
+        F.when(v.contains("<!"), F.lit("a comment, CDATA section or DOCTYPE (<!)"))
+        .when(
+            v.contains("<?") & (F.regexp_count(v, F.lit("<\\?")) > declaration),
+            F.lit("a processing instruction (<?) after the XML declaration"),
+        )
+        .when(
+            F.regexp_extract(v, start_tag, 1) == "/",
+            F.lit(f"a self-closing <{row_tag}/> element"),
+        )
+        .when(
+            v.contains(f"</{row_tag}") & v.rlike(f"</{tag}\\s"),
+            F.lit(f"an end tag with whitespace before '>' (</{row_tag} >)"),
+        )
+        .when(
+            F.regexp_count(v, F.lit(start)) > 1,
+            F.lit(f"more than one <{row_tag}> start tag before one {close}"),
+        )
+    )
+    keep = F.when(unsafe.isNull(), v.rlike(start)).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit("XML record split: "),
+                F.col("_metadata.file_path"),
+                F.lit(" holds "),
+                unsafe,
+                F.lit(f", which a split on {close} cannot read"),
+            )
+        )
+    )
+    return (
+        spark.read.option("lineSep", close)
+        .text(paths)
+        .where(keep)
+        .select(
+            F.concat(
+                F.substr(v, F.regexp_instr(v, F.lit(start))), F.lit(close)
+            ).alias("xml")
+        )
+    )
+
+
 def read_manifest_document(
     spark: SparkSession,
     manifest_path: str,
@@ -272,14 +351,13 @@ def read_manifest_document(
     source can't read root-less fragments (one root per file — it
     corrupt-records everything after the first element; measured), so
     the fragment read is built from two JVM-side primitives instead:
-    the text source splits record boundaries with ``lineSep =
-    "</row_tag>\\n"`` (escaped content can never contain a literal
-    ``<``, so the boundary is unambiguous), and ``from_xml`` parses
-    each record under a synthetic wrapper that re-binds the envelope's
-    namespace declarations (fragments inherit them from the root at
-    compose time; standalone they'd be undeclared). Fully distributed,
-    no Python in the row path, and the single physical file never
-    exists — this is the consumption path at scale.
+    ``record_fragments`` cuts the parts at the record end tags, and
+    ``from_xml`` parses each record under a synthetic wrapper that
+    re-binds the envelope's namespace declarations (fragments inherit
+    them from the root at compose time; standalone they'd be
+    undeclared). Fully distributed, no Python in the row path, and the
+    single physical file never exists — this is the consumption path
+    at scale.
 
     Schema: pass ``schema`` (DDL string or StructType of ONE record's
     fields) for production reads — heterogeneous corpora REQUIRE it
@@ -297,23 +375,14 @@ def read_manifest_document(
 
     Returns (root_tag, root_attrs, records) with the record fields
     under their parsed struct columns."""
-    import re
-
     with open(manifest_path, "r", encoding="utf-8") as r:
         paths = [ln.strip() for ln in r if ln.strip()]
     root_tag, root_attrs = read_root_attrs(paths[0])
     with open(paths[0], "r", encoding="utf-8") as r:
         ns = " ".join(re.findall(r'xmlns:[^\s=]+="[^"]*"', r.read()))
-    close = f"</{row_tag}>"
-    frags = (
-        spark.read.option("lineSep", close + "\n")
-        .text(paths[1:-1])
-        .where(F.trim(F.col("value")) != "")
-    )
+    frags = record_fragments(spark, paths[1:-1], row_tag)
     wrapped = frags.select(
-        F.concat(
-            F.lit(f"<w {ns}>"), F.col("value"), F.lit(close), F.lit("</w>")
-        ).alias("xml")
+        F.concat(F.lit(f"<w {ns}>"), F.col("xml"), F.lit("</w>")).alias("xml")
     )
     if schema is not None:
         from pyspark.sql import types as T
@@ -332,18 +401,14 @@ def read_manifest_document(
     # call: with >=2 records under the wrapper the inferencer unions
     # field shapes across records AND sees repetition, so a child that
     # repeats anywhere in the sample becomes an array for every record
-    sample_rows = frags.select("value").head(infer_sample_records)
+    sample_rows = frags.head(infer_sample_records)
     if not sample_rows:
         raise ValueError(
             f"manifest {manifest_path} has no {row_tag} records to "
             "infer a schema from — pass an explicit schema= for "
             "empty documents"
         )
-    merged = (
-        f"<w {ns}>"
-        + "".join(r[0] + close for r in sample_rows)
-        + "</w>"
-    )
+    merged = f"<w {ns}>" + "".join(r[0] for r in sample_rows) + "</w>"
     ddl = spark.range(1).select(
         F.schema_of_xml(F.lit(merged)).alias("s")
     ).first()[0]

@@ -436,3 +436,94 @@ def test_degenerate_inputs(spark, tmp_path, xml_text, csv_text, found_total, rea
     log = spark.read.option("header", True).csv(out["log"]).collect()
     assert [r["reason"] for r in log] == reasons
     assert ET.parse(out["xml"]).getroot().findall("customer") == []
+
+
+MAX_SPLIT_BYTES = "spark.sql.files.maxPartitionBytes"
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+@pytest.mark.parametrize("newline", ["\n", "\r\n"], ids=["lf", "crlf"])
+def test_export_scan_splits_at_record_boundaries(spark, tmp_path, newline):
+    """The export scan is split across tasks and still returns exactly
+    the native XML source's rows, in order, when split boundaries fall
+    inside records, inside the ``</customer>`` delimiter and between
+    the two bytes of an ``Ö`` in the ids, and the file ends without a
+    newline."""
+    import re
+
+    head, rest = FIXTURE_XML.split("  <customer ", 1)
+    records, _tail = ("  <customer " + rest).rsplit("</enfinity>", 1)
+    copies = [
+        re.sub(r'<customer id="(\d+)">', rf'<customer id="Ö{k}-\1">', records)
+        for k in range(100)
+    ]
+    text = head + "".join(copies) + "</enfinity>"
+    data = text.replace("\n", newline).encode("utf-8")
+    xml = tmp_path / "export.xml"
+    xml.write_bytes(data)
+    # splits are cut every split_bytes bytes: the first cut falls
+    # between the bytes of the first Ö, and some later cut inside a
+    # delimiter
+    split_bytes = data.index("Ö".encode("utf-8")) + 1
+    close = b"</customer>"
+    assert any(
+        c - len(close) < data.rfind(close, 0, c + len(close) - 1)
+        for c in range(split_bytes, len(data), split_bytes)
+    )
+
+    saved = {k: spark.conf.get(k) for k in (MAX_SPLIT_BYTES, OPEN_COST)}
+    try:
+        spark.conf.set(MAX_SPLIT_BYTES, str(split_bytes))
+        spark.conf.set(OPEN_COST, "0")
+        split = migrate_cli.read_customers_xml(spark, str(xml))
+        assert split.rdd.getNumPartitions() > 1
+        got = split.collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    native = migrate_cli.canonical_customers(
+        spark.read.format("xml")
+        .option("rowTag", "customer")
+        .schema(migrate_cli.XML_SCHEMA)
+        .load(str(xml))
+    ).collect()
+    assert len(native) == 400
+    assert got == native
+
+
+@pytest.mark.parametrize(
+    "edit, construct",
+    [
+        (
+            ('  <customer id="1002">', '  <!-- <customer id="9"><custom-attributes/>'
+             '</customer> -->\n  <customer id="1002">'),
+            "comment, CDATA section or DOCTYPE",
+        ),
+        (
+            (">yes</custom-attribute>", "><![CDATA[yes</customer>]]></custom-attribute>"),
+            "comment, CDATA section or DOCTYPE",
+        ),
+        (
+            ('  <customer id="1002">', '  <customer id="x"/>\n  <customer id="1002">'),
+            "self-closing <customer/>",
+        ),
+        (("</customer>", "</customer >"), "</customer >"),
+    ],
+    ids=["comment", "cdata", "self_closing", "end_tag_space"],
+)
+def test_export_split_refuses_unsafe_constructs(spark, tmp_path, edit, construct):
+    """An export whose ``</customer>`` cut could misplace a record
+    boundary fails the run with an error naming the file and the
+    construct, instead of yielding a phantom record or dropping one."""
+    old, new = edit
+    xml = tmp_path / "export.xml"
+    csv = tmp_path / "mapping.csv"
+    xml.write_text(FIXTURE_XML.replace(old, new, 1), encoding="utf-8")
+    csv.write_text(FIXTURE_CSV, encoding="utf-8")
+    from pyspark.errors import SparkRuntimeException
+
+    with pytest.raises(SparkRuntimeException) as err:
+        migrate_cli.run(spark, str(xml), str(csv), str(tmp_path / "out"))
+    assert err.value.getCondition() == "USER_RAISED_EXCEPTION"
+    assert construct in str(err.value)
+    assert str(xml) in str(err.value)
