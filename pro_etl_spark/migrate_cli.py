@@ -299,22 +299,12 @@ def run(
     out_dir = f"{output_dir}/{run_date}"
     # envelope fidelity: carry the input document's root attributes
     # (xsi:schemaLocation, version attrs — migrate.py:274-284) forward
-    _tag, root_attrs = xml_io.read_root_attrs(xml_path)
-    nsmap = dict(xml_io.ENFINITY_NSMAP)
-    attrs_out = {}
-    for k, v in root_attrs.items():
-        if k.startswith("{"):
-            uri, local = k[1:].split("}")
-            pfx = next((p for p, u in nsmap.items() if u == uri), None)
-            if pfx:
-                attrs_out[f"{pfx}:{local}"] = v
-        else:
-            attrs_out[k] = v
+    root_attrs = xml_io.read_root_attrs(xml_path)[1]
 
     # reference file layout: output/<YYYY-MM-DD>/output-<uuid>.xml as a
-    # FLAT file (migrate.py:286-293) — the XML sink is a driver-side
-    # single-document write, so no Spark part-directory is needed; the
-    # row-wise log (no reference counterpart) lands in a sibling dir
+    # FLAT file (migrate.py:286-293) — the XML sink removes its Spark
+    # staging directory once the file is written; the row-wise log (no
+    # reference counterpart) lands in a sibling dir
     import os
 
     os.makedirs(out_dir, exist_ok=True)
@@ -341,13 +331,13 @@ def run(
         if scale:
             xml_out = xml_io.write_xml_document_manifest(
                 xml_io.customer_xml(migrated), f"{out_dir}/output-{run_id}-xml",
-                root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
+                root_tag="enfinity", root_attrs=root_attrs, nsmap=xml_io.ENFINITY_NSMAP,
             )
         else:
             xml_out = f"{out_dir}/output-{run_id}.xml"
             xml_io.write_xml_document(
                 xml_io.customer_xml(migrated), xml_out,
-                root_tag="enfinity", root_attrs=attrs_out, nsmap=nsmap,
+                root_tag="enfinity", root_attrs=root_attrs, nsmap=xml_io.ENFINITY_NSMAP,
             )
         # found/total ride on the log's one write instead of two more
         # jobs. They are exact under task retry: CollectMetrics sits in

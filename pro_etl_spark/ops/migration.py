@@ -73,44 +73,24 @@ def mapping_df(spark: SparkSession, d: str) -> DataFrame:
     return known.unionByName(unknown).unionByName(dups)
 
 
-#: oracle-side reconstruction of mapping_df (kept in lockstep)
+#: oracle-side reconstruction of mapping_df (kept in lockstep): one row
+#: shape over the (step, key_offset, ord) spec of its three branches —
+#: known keys, unknown keys, duplicate keys
 MAPPING_SQL = """
 WITH raw_mapping AS (
-  SELECT CAST(c_custkey AS VARCHAR) AS current_customer_id,
-         'X' || CAST(c_custkey AS VARCHAR) AS new_customer_id,
+  SELECT CAST(c_custkey + s.key_offset AS VARCHAR) AS current_customer_id,
+         'X' || CAST(c_custkey + s.key_offset AS VARCHAR) AS new_customer_id,
          'SRC' || CAST(c_custkey % 3 AS VARCHAR) AS new_source_id,
-         'ST' || CAST(c_custkey % 7 AS VARCHAR) AS new_store_id,
-         'Store ' || CAST(c_custkey % 7 AS VARCHAR) AS new_store_name,
+         'ST' || CAST(c_custkey % 7 + s.ord AS VARCHAR) AS new_store_id,
+         'Store ' || CAST(c_custkey % 7 + s.ord AS VARCHAR) AS new_store_name,
          CASE c_custkey % 4 WHEN 0 THEN 'true' WHEN 1 THEN 'false'
                             WHEN 2 THEN NULL ELSE 'TRUE' END AS mandatory_reference,
          CASE c_custkey % 7 WHEN 0 THEN NULL WHEN 1 THEN '-12D'
                             WHEN 2 THEN '-9D' ELSE '-3D' END AS delivery_day,
-         0 AS ord
-  FROM customer WHERE c_custkey % 3 = 0
-  UNION ALL
-  SELECT CAST(c_custkey + 1000000 AS VARCHAR),
-         'X' || CAST(c_custkey + 1000000 AS VARCHAR),
-         'SRC' || CAST(c_custkey % 3 AS VARCHAR),
-         'ST' || CAST(c_custkey % 7 AS VARCHAR),
-         'Store ' || CAST(c_custkey % 7 AS VARCHAR),
-         CASE c_custkey % 4 WHEN 0 THEN 'true' WHEN 1 THEN 'false'
-                            WHEN 2 THEN NULL ELSE 'TRUE' END,
-         CASE c_custkey % 7 WHEN 0 THEN NULL WHEN 1 THEN '-12D'
-                            WHEN 2 THEN '-9D' ELSE '-3D' END,
-         0
-  FROM customer WHERE c_custkey % 15 = 0
-  UNION ALL
-  SELECT CAST(c_custkey AS VARCHAR),
-         'X' || CAST(c_custkey AS VARCHAR),
-         'SRC' || CAST(c_custkey % 3 AS VARCHAR),
-         'ST' || CAST(c_custkey % 7 + 1 AS VARCHAR),
-         'Store ' || CAST(c_custkey % 7 + 1 AS VARCHAR),
-         CASE c_custkey % 4 WHEN 0 THEN 'true' WHEN 1 THEN 'false'
-                            WHEN 2 THEN NULL ELSE 'TRUE' END,
-         CASE c_custkey % 7 WHEN 0 THEN NULL WHEN 1 THEN '-12D'
-                            WHEN 2 THEN '-9D' ELSE '-3D' END,
-         1
-  FROM customer WHERE c_custkey % 9 = 0
+         s.ord
+  FROM customer
+  JOIN (VALUES (3, 0, 0), (15, 1000000, 0), (9, 0, 1)) AS s(step, key_offset, ord)
+    ON c_custkey % s.step = 0
 )
 """
 

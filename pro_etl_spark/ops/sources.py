@@ -319,10 +319,9 @@ def sink_xml_sharded(spark: SparkSession, d: str) -> DataFrame:
             rendered.select("value", "_id"),
             out,
             XML_SHARDS,
-            shard_key=F.col("_id"),
+            shard=F.pmod(F.col("_id").cast("long"), F.lit(XML_SHARDS)),
             root_tag="enfinity",
             nsmap=xml_io.ENFINITY_NSMAP,
-            shard_assign=F.pmod(F.col("_id").cast("long"), F.lit(XML_SHARDS)),
         ),
     )
     back = (

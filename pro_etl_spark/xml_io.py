@@ -14,17 +14,23 @@ Split of labor:
   Column expressions — escape, concat, array_join; whole-stage-codegen
   friendly, zero Python in the hot path — written with the text sink
   (one part file per partition, no driver materialization).
-- **envelope (the O(1) side)**: `write_xml_document` streams part
-  files between a hand-built header/footer through the driver — fine
-  for the reference-parity single document, a single-writer ceiling at
-  100 TB. `write_xml_document_manifest` is the scale mode: the
-  document is an ordered file set (header part, record parts, footer
-  part) plus a manifest; envelope assembly writes O(1) bytes + one
-  manifest line per part (no record byte touches the driver), and the
-  final stitch — when one physical file is truly needed — is the
-  storage layer's primitive (`hdfs concat` / S3 multipart compose),
-  handed to `compose_manifest` as a callable. `read_manifest_document`
-  consumes the file set directly, so most readers never compose.
+- **envelope (the O(1) side)**: one renderer, `_envelope`, writes the
+  declaration, the root start tag (nsmap, then the root attributes:
+  prefixed keys or ``read_root_attrs``' Clark keys, values escaped) and
+  the end tag for all three writers. The document is an ordered file
+  set: header part, record parts, footer part.
+  `write_xml_document_manifest` is the scale mode: the file set plus a
+  manifest; envelope assembly writes O(1) bytes + one manifest line per
+  part (no record byte touches the driver), and the final stitch — when
+  one physical file is truly needed — is the storage layer's primitive
+  (`hdfs concat` / S3 multipart compose), handed to `compose_manifest`
+  as a callable. `read_manifest_document` consumes the file set
+  directly, so most readers never compose. `write_xml_document` is the
+  reference-parity single file: the same file set, stream-concatenated
+  through the driver by `compose_manifest`'s default and then deleted —
+  a single-writer ceiling at 100 TB. `write_xml_document_sharded` emits
+  the header and footer as rows around each shard's records, so every
+  shard is a complete document written executor-side.
 
 Reading splits the text at record boundaries (`record_fragments`) and
 parses each record with ``from_xml``: the text source splits one large
@@ -43,6 +49,7 @@ import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: the reference's namespace map (migrate.py:72-75)
 ENFINITY_NSMAP = {
@@ -50,6 +57,9 @@ ENFINITY_NSMAP = {
     "dt": "http://www.intershop.com/xml/ns/enfinity/6.5/core/impex-dt",
     "xsi": "http://www.w3.org/2001/XMLSchema-instance",
 }
+
+#: records ``read_manifest_document`` samples to infer a record schema
+INFER_SAMPLE_RECORDS = 64
 
 
 def xml_escape(c: Column) -> Column:
@@ -169,6 +179,66 @@ def customer_xml(df: DataFrame) -> DataFrame:
     return df.select(rec.alias("value"))
 
 
+def _envelope(
+    root_tag: str, root_attrs: dict[str, str] | None, nsmap: dict[str, str] | None
+) -> tuple[str, str]:
+    """The document's header (declaration and root start tag) and
+    footer (root end tag), neither newline-terminated. Root attribute
+    keys are either already prefixed (``xsi:schemaLocation``) or Clark
+    keys as ``read_root_attrs`` returns them (``{uri}local``), which map
+    to ``prefix:local`` through ``nsmap``; a Clark key whose namespace
+    ``nsmap`` does not bind is left out. Attribute values are escaped."""
+    nsmap = nsmap or {}
+    attrs = [f' xmlns:{p}="{u}"' for p, u in nsmap.items()]
+    for k, v in (root_attrs or {}).items():
+        if k.startswith("{"):
+            uri, local = k[1:].split("}")
+            pfx = next((p for p, u in nsmap.items() if u == uri), None)
+            if not pfx:
+                continue
+            k = f"{pfx}:{local}"
+        v = v.replace("&", "&amp;").replace("<", "&lt;").replace('"', "&quot;")
+        attrs.append(f' {k}="{v}"')
+    header = f'<?xml version="1.0" encoding="UTF-8"?>\n<{root_tag}{"".join(attrs)}>'
+    return header, f"</{root_tag}>"
+
+
+def _write_file_set(
+    records: DataFrame,
+    out_dir: str,
+    root_tag: str,
+    root_attrs: dict[str, str] | None,
+    nsmap: dict[str, str] | None,
+) -> list[str]:
+    """Write the document as its ordered file set under ``out_dir``:
+    ``00_header.xml``, the record parts exactly as the text sink wrote
+    them to ``parts/``, and ``zz_footer.xml``. Returns the paths in
+    document order."""
+    records.write.mode("overwrite").text(os.path.join(out_dir, "parts"))
+    header, footer = _envelope(root_tag, root_attrs, nsmap)
+    first = os.path.join(out_dir, "00_header.xml")
+    last = os.path.join(out_dir, "zz_footer.xml")
+    for path, text in ((first, header), (last, footer)):
+        with open(path, "w", encoding="utf-8") as w:
+            w.write(text + "\n")
+    parts = sorted(glob.glob(os.path.join(out_dir, "parts", "part-*")))
+    return [first, *parts, last]
+
+
+def _concat(paths: list[str], out_file: str) -> None:
+    """Stream-copy ``paths`` into ``out_file`` in order through this
+    process."""
+    with open(out_file, "w", encoding="utf-8") as w:
+        for p in paths:
+            with open(p, "r", encoding="utf-8") as r:
+                shutil.copyfileobj(r, w)
+
+
+def _manifest_paths(manifest_path: str) -> list[str]:
+    with open(manifest_path, "r", encoding="utf-8") as r:
+        return [ln.strip() for ln in r if ln.strip()]
+
+
 def write_xml_document(
     records: DataFrame,
     out_file: str,
@@ -176,21 +246,15 @@ def write_xml_document(
     root_attrs: dict[str, str] | None = None,
     nsmap: dict[str, str] | None = None,
 ) -> str:
-    """Write a single enveloped XML document: distributed text write of
-    the record column, then stream-concatenate the parts between the
-    envelope header/footer (O(1) driver memory; migrate.py:274-298
-    fidelity — declaration, nsmap, root attrs, pretty records)."""
-    parts_dir = out_file + ".parts"
-    records.write.mode("overwrite").text(parts_dir)
-    ns = "".join(f' xmlns:{p}="{u}"' for p, u in (nsmap or {}).items())
-    ra = "".join(f' {k}="{v}"' for k, v in (root_attrs or {}).items())
-    with open(out_file, "w", encoding="utf-8") as w:
-        w.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        w.write(f"<{root_tag}{ns}{ra}>\n")
-        for part in sorted(glob.glob(os.path.join(parts_dir, "part-*"))):
-            with open(part, "r", encoding="utf-8") as r:
-                shutil.copyfileobj(r, w)
-        w.write(f"</{root_tag}>\n")
+    """Write a single enveloped XML document: the manifest document's
+    file set, staged in ``<out_file>.parts/``, stream-concatenated
+    through the driver into ``out_file`` (O(1) driver memory;
+    migrate.py:274-298 fidelity — declaration, nsmap, root attrs,
+    pretty records). The staging directory is removed once
+    ``out_file`` is written."""
+    staging = out_file + ".parts"
+    _concat(_write_file_set(records, staging, root_tag, root_attrs, nsmap), out_file)
+    shutil.rmtree(staging)
     return out_file
 
 
@@ -221,25 +285,10 @@ def write_xml_document_manifest(
     off the parts and envelope attrs off the header.
 
     Returns the manifest path."""
-    parts_dir = os.path.join(out_dir, "parts")
-    records.write.mode("overwrite").text(parts_dir)
-    ns = "".join(f' xmlns:{p}="{u}"' for p, u in (nsmap or {}).items())
-    ra = "".join(f' {k}="{v}"' for k, v in (root_attrs or {}).items())
-    header = os.path.join(out_dir, "00_header.xml")
-    footer = os.path.join(out_dir, "zz_footer.xml")
-    with open(header, "w", encoding="utf-8") as w:
-        w.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        w.write(f"<{root_tag}{ns}{ra}>\n")
-    with open(footer, "w", encoding="utf-8") as w:
-        w.write(f"</{root_tag}>\n")
+    paths = _write_file_set(records, out_dir, root_tag, root_attrs, nsmap)
     manifest = os.path.join(out_dir, "MANIFEST")
-    ordered = (
-        [header]
-        + sorted(glob.glob(os.path.join(parts_dir, "part-*")))
-        + [footer]
-    )
     with open(manifest, "w", encoding="utf-8") as w:
-        w.write("\n".join(ordered) + "\n")
+        w.write("\n".join(paths) + "\n")
     return manifest
 
 
@@ -252,15 +301,7 @@ def compose_manifest(manifest_path: str, out_file: str, concat=None) -> str:
     without streaming them through any single node. The default is a
     local stream-copy fallback (the only primitive a plain local FS
     offers); at scale, pass the real one."""
-    with open(manifest_path, "r", encoding="utf-8") as r:
-        paths = [ln.strip() for ln in r if ln.strip()]
-    if concat is not None:
-        concat(paths, out_file)
-        return out_file
-    with open(out_file, "w", encoding="utf-8") as w:
-        for p in paths:
-            with open(p, "r", encoding="utf-8") as src:
-                shutil.copyfileobj(src, w)
+    (concat or _concat)(_manifest_paths(manifest_path), out_file)
     return out_file
 
 
@@ -343,7 +384,6 @@ def read_manifest_document(
     manifest_path: str,
     row_tag: str = "customer",
     schema=None,
-    infer_sample_records: int = 64,
 ) -> tuple[str, dict[str, str], DataFrame]:
     """Read a manifest document WITHOUT composing it: root tag +
     envelope attrs come from the O(1) header part; records come
@@ -362,8 +402,8 @@ def read_manifest_document(
     Schema: pass ``schema`` (DDL string or StructType of ONE record's
     fields) for production reads — heterogeneous corpora REQUIRE it
     for guaranteed fidelity. Without it, the record schema is inferred
-    from a bounded MULTI-record sample (``infer_sample_records``,
-    default 64) merged through one ``schema_of_xml`` call, so a child
+    from a bounded MULTI-record sample (``INFER_SAMPLE_RECORDS``)
+    merged through one ``schema_of_xml`` call, so a child
     element that repeats in ANY sampled record (the real corpus has
     1-user and 2-user customers) infers as an array and single-child
     records parse as 1-element arrays — uniform, lossless. (The r11
@@ -375,8 +415,7 @@ def read_manifest_document(
 
     Returns (root_tag, root_attrs, records) with the record fields
     under their parsed struct columns."""
-    with open(manifest_path, "r", encoding="utf-8") as r:
-        paths = [ln.strip() for ln in r if ln.strip()]
+    paths = _manifest_paths(manifest_path)
     root_tag, root_attrs = read_root_attrs(paths[0])
     with open(paths[0], "r", encoding="utf-8") as r:
         ns = " ".join(re.findall(r'xmlns:[^\s=]+="[^"]*"', r.read()))
@@ -385,8 +424,6 @@ def read_manifest_document(
         F.concat(F.lit(f"<w {ns}>"), F.col("xml"), F.lit("</w>")).alias("xml")
     )
     if schema is not None:
-        from pyspark.sql import types as T
-
         if isinstance(schema, T.StructType):
             wrapper_schema = T.StructType(
                 [T.StructField(row_tag, schema)]
@@ -401,7 +438,7 @@ def read_manifest_document(
     # call: with >=2 records under the wrapper the inferencer unions
     # field shapes across records AND sees repetition, so a child that
     # repeats anywhere in the sample becomes an array for every record
-    sample_rows = frags.head(infer_sample_records)
+    sample_rows = frags.head(INFER_SAMPLE_RECORDS)
     if not sample_rows:
         raise ValueError(
             f"manifest {manifest_path} has no {row_tag} records to "
@@ -413,8 +450,6 @@ def read_manifest_document(
         F.schema_of_xml(F.lit(merged)).alias("s")
     ).first()[0]
     parsed = wrapped.select(F.from_xml("xml", ddl).alias("w"))
-    from pyspark.sql import types as T
-
     field = parsed.schema["w"].dataType[row_tag].dataType
     if isinstance(field, T.ArrayType):
         # multi-record inference wraps the row tag itself in an array;
@@ -431,11 +466,10 @@ def write_xml_document_sharded(
     records: DataFrame,
     out_dir: str,
     shards: int,
-    shard_key,
+    shard: Column,
     root_tag: str = "enfinity",
     root_attrs: dict[str, str] | None = None,
     nsmap: dict[str, str] | None = None,
-    shard_assign=None,
 ) -> DataFrame:
     """Sharded XML sink — the 100 TB escape from the single-writer
     ceiling of ``write_xml_document`` (which stream-concatenates every
@@ -443,58 +477,42 @@ def write_xml_document_sharded(
     single-document contract, a bottleneck for a corpus-sized export).
 
     Each shard becomes one complete well-formed XML document written
-    entirely executor-side: records are hashed to a shard, the envelope
-    header and footer are emitted as ordinary ROWS (ord 0 / 2 around
-    the records at ord 1), and a ``repartition(shards, shard)`` +
-    ``sortWithinPartitions`` + ``partitionBy(shard)`` text write makes
-    each shard directory hold exactly one part file whose line order is
-    header → records → footer. No collect, no driver concatenation —
-    the write parallelism IS the shard count.
+    entirely executor-side: each record lands in the shard ``shard``
+    names, the envelope header and footer are emitted as ordinary ROWS
+    (ord 0 / 2 around the records at ord 1), and a
+    ``repartition(shards, shard)`` + ``sortWithinPartitions`` +
+    ``partitionBy(shard)`` text write makes each shard directory hold
+    exactly one part file whose line order is header → records →
+    footer. No collect, no driver concatenation — the write
+    parallelism IS the shard count.
 
     Returns the per-shard manifest (shard, n_records) — O(shards)
     rows, the same model-state-sized commit record
     ``sink_manifest_commit`` uses (a reader lists shard dirs, not
     in-flight files).
 
-    ``shard_key`` is the Column the shard assignment hashes; callers
-    pick a stable id so re-runs land records in the same shard.
-    ``shard_assign``, when given, is used VERBATIM as the shard number
-    (must already be in [0, shards)) instead of hashing ``shard_key`` —
-    callers that need a cross-engine-reproducible placement (e.g. a
-    value oracle recomputing ``id % shards`` in another SQL engine,
-    where Spark's Murmur3 ``hash()`` has no twin) pass an explicit
-    arithmetic assignment here."""
-    import pyspark.sql.functions as F
-
-    ns = "".join(f' xmlns:{p}="{u}"' for p, u in (nsmap or {}).items())
-    ra = "".join(f' {k}="{v}"' for k, v in (root_attrs or {}).items())
-    header = f'<?xml version="1.0" encoding="UTF-8"?>\n<{root_tag}{ns}{ra}>'
-    footer = f"</{root_tag}>"
-
+    ``shard`` is the Column giving each record's shard number, which
+    must lie in [0, shards): a null or out-of-range value fails the
+    write. Callers derive it from a stable id so re-runs land records
+    in the same shard — ``F.pmod(F.hash(id), F.lit(shards))``, or
+    plain arithmetic such as ``id % shards`` where another SQL engine
+    must recompute the placement (Spark's Murmur3 ``hash()`` has no
+    twin there)."""
+    header, footer = _envelope(root_tag, root_attrs, nsmap)
     col = records.columns[0]
-    if shard_assign is not None:
-        # loud range gate (ADVICE_r11): a null or out-of-range caller
-        # assignment (e.g. a non-numeric id cast to int -> NULL) must
-        # fail the job, not silently land records in bogus partition
-        # dirs the manifest never accounts for
-        a = shard_assign.cast("int")
-        assign = F.when(
-            a.isNotNull() & (a >= 0) & (a < shards), a
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"write_xml_document_sharded: shard_assign "
-                        f"outside [0, {shards}): "
-                    ),
-                    F.coalesce(
-                        shard_assign.cast("string"), F.lit("NULL")
-                    ),
-                )
+    # loud range gate (ADVICE_r11): a null or out-of-range assignment
+    # (e.g. a non-numeric id cast to int -> NULL) must fail the job,
+    # not silently land records in bogus partition dirs the manifest
+    # never accounts for
+    a = shard.cast("int")
+    assign = F.when(a.isNotNull() & (a >= 0) & (a < shards), a).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"write_xml_document_sharded: shard outside [0, {shards}): "),
+                F.coalesce(shard.cast("string"), F.lit("NULL")),
             )
         )
-    else:
-        assign = F.pmod(F.hash(shard_key), F.lit(shards))
+    )
     body = records.select(
         assign.alias("shard"),
         F.lit(1).alias("ord"),

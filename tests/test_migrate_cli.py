@@ -137,6 +137,54 @@ def test_output_layout_matches_reference(cli_out):
     assert re.fullmatch(r"output-[0-9a-f]{12}\.xml", p.name)
     assert re.fullmatch(r"\d{4}-\d{2}-\d{2}", p.parent.name)
     assert cli_out["run_ts"].startswith(p.parent.name)
+    # the writer's staging directory is gone: the delta is on disk once
+    assert {q.name for q in p.parent.iterdir()} == {p.name, f"{p.stem}-log"}
+    assert Path(cli_out["log"]).is_dir()
+
+
+def test_delta_envelope_bytes(cli_out):
+    """The flat delta's envelope byte for byte: the declaration, the
+    root start tag (nsmap in ``ENFINITY_NSMAP`` order, then the export's
+    root attributes in document order, ``xsi:schemaLocation`` mapped
+    back from its Clark key) and the end tag."""
+    doc = Path(cli_out["xml"]).read_text(encoding="utf-8")
+    assert doc.startswith(
+        '<?xml version="1.0" encoding="UTF-8"?>\n'
+        '<enfinity'
+        ' xmlns:i="http://www.intershop.com/xml/ns/intershop/customer/impex/7.3"'
+        ' xmlns:dt="http://www.intershop.com/xml/ns/enfinity/6.5/core/impex-dt"'
+        ' xmlns:xsi="http://www.w3.org/2001/XMLSchema-instance"'
+        ' xsi:schemaLocation="http://www.intershop.com/xml/ns/intershop/customer/impex/7.3 customer.xsd"'
+        ' major="7" minor="3">\n'
+        '<customer id="'
+    )
+    assert doc.endswith("</customer>\n</enfinity>\n")
+
+
+@pytest.mark.parametrize("scale", [False, True], ids=["flat", "scale"])
+def test_root_attribute_values_are_escaped(spark, tmp_path, scale):
+    """A root attribute value holding ``&``, ``"`` and ``<`` is escaped
+    when the envelope is written back: the delta parses and carries the
+    export's value, in the flat document and in the composed manifest
+    document."""
+    root_end = ' minor="3">'
+    assert FIXTURE_XML.count(root_end) == 1
+    export = FIXTURE_XML.replace(
+        root_end, ' minor="3" note="A &amp; B &quot;q&quot; &lt;x&gt;">'
+    )
+    (tmp_path / "export.xml").write_text(export, encoding="utf-8")
+    (tmp_path / "mapping.csv").write_text(FIXTURE_CSV, encoding="utf-8")
+    out = migrate_cli.run(
+        spark,
+        str(tmp_path / "export.xml"),
+        str(tmp_path / "mapping.csv"),
+        str(tmp_path / "out"),
+        scale=scale,
+    )
+    doc = out["xml"]
+    if scale:
+        doc = xml_io.compose_manifest(doc, str(tmp_path / "composed.xml"))
+    assert ET.parse(doc).getroot().attrib["note"] == 'A & B "q" <x>'
 
 
 def test_scale_mode_writes_manifest_document(spark, tmp_path, cli_out):

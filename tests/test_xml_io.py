@@ -4,7 +4,6 @@ mandatory")."""
 
 from __future__ import annotations
 
-import tempfile
 import xml.etree.ElementTree as ET
 
 import pyspark.sql.functions as F
@@ -142,7 +141,7 @@ def test_sharded_write_round_trips_every_document(spark, tmp_path):
             rendered.select("value", "_id"),
             out,
             shards,
-            shard_key=F.col("_id"),
+            shard=F.pmod(F.hash("_id"), F.lit(shards)),
             nsmap=xml_io.ENFINITY_NSMAP,
         ).collect()
     }
@@ -169,8 +168,8 @@ def test_sharded_write_round_trips_every_document(spark, tmp_path):
 
 
 def test_sharded_manifest_matches_rescan_census(spark, tmp_path):
-    """Explicit ``shard_assign`` path (the oracle-reproducible
-    placement sink_xml_sharded uses): the writer's manifest counts
+    """Arithmetic placement (the oracle-reproducible one
+    sink_xml_sharded uses): the writer's manifest counts
     must equal the per-shard census of a native-XML rescan, and file
     placement (partition discovery on shard=N) must agree with the
     arithmetic assignment for every record."""
@@ -186,9 +185,8 @@ def test_sharded_manifest_matches_rescan_census(spark, tmp_path):
             rendered.select("value", "_id"),
             out,
             shards,
-            shard_key=F.col("_id"),
+            shard=F.pmod(F.col("_id").cast("long"), F.lit(shards)),
             nsmap=xml_io.ENFINITY_NSMAP,
-            shard_assign=F.pmod(F.col("_id").cast("long"), F.lit(shards)),
         ).collect()
     }
     back = (
