@@ -26,8 +26,10 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
    found/total summary on stdout (migrate.py:272), observed on the log
    write rather than counted by jobs of its own
 
-Scale: the mapping broadcasts; the corpus never shuffles; the document
-rewrite and XML record serialization are narrow Column expressions.
+Scale: the mapping broadcasts; the corpus never shuffles; the record
+normalization, the document rewrite and the XML record serialization
+are narrow per-row expressions, written as SQL text so that building
+each projection is one JVM call (``pro_etl_spark.sqltext``).
 The export is read in record-boundary splits, so the parse, the
 rewrite and the serialization run on as many tasks as Spark's file
 sizing gives the export (Spark's native XML source reads one file in
@@ -64,6 +66,7 @@ from pro_etl_spark.ops.migration import (
     apply_migration,
     reconcile,
 )
+from pro_etl_spark.sqltext import quote
 
 def run_ts_text() -> str:
     """Run timestamp written into profile/creation-date — the
@@ -167,15 +170,13 @@ XML_SCHEMA = StructType(
 )
 
 
-def _canon_attrs(c: F.Column) -> F.Column:
-    arr = F.coalesce(c["custom-attribute"], F.array().cast(_attr_st()))
-    return F.transform(
-        arr,
-        lambda a: F.struct(
-            a["_name"].alias("name"),
-            F.coalesce(a["_dt:dt"], F.lit("string")).alias("dt"),
-            F.coalesce(a["_VALUE"], F.lit("")).alias("value"),
-        ),
+def _canon_attrs(c: str) -> str:
+    """SQL text: the ``custom-attribute`` array under ``c`` as
+    array<struct<name,dt,value>>, empty when absent."""
+    return (
+        f"transform(coalesce({c}.`custom-attribute`, array()), _a -> struct(_a._name AS name, "
+        f"coalesce(_a.`_dt:dt`, {quote('string')}) AS dt, "
+        f"coalesce(_a._VALUE, {quote('')}) AS value))"
     )
 
 
@@ -187,48 +188,31 @@ def read_customers_xml(spark: SparkSession, path: str) -> DataFrame:
     native XML source read with ``rowTag="customer"`` and the same
     schema, which reads the whole file in one task; an export the split
     cannot read exactly fails the read instead."""
-    raw = xml_io.record_fragments(spark, path, "customer").select(
-        F.from_xml("xml", XML_SCHEMA).alias("r")
+    raw = xml_io.record_fragments(spark, path, "customer").selectExpr(
+        f"from_xml(xml, {quote(XML_SCHEMA.json())}) AS r"
     )
-    return canonical_customers(raw.select("r.*"))
+    return canonical_customers(raw.selectExpr("r.*"))
 
 
 def canonical_customers(raw: DataFrame) -> DataFrame:
     """Rows of ``XML_SCHEMA`` normalized to the canonical nested shape
     (SURVEY §1.5) that ``apply_migration`` and ``xml_io.customer_xml``
     operate on."""
-    users = F.transform(
-        F.coalesce(F.col("user"), F.array().cast(XML_SCHEMA["user"].dataType)),
-        lambda u: F.struct(
-            F.coalesce(u["_business-partner-no"], F.lit("")).alias(
-                "business_partner_no"
-            ),
-            F.coalesce(u["default-customer"], F.lit("")).alias("default_customer"),
-            F.struct(
-                F.coalesce(u["profile"]["creation-date"], F.lit("")).alias(
-                    "creation_date"
-                )
-            ).alias("profile"),
-            F.struct(
-                u["credentials"]["login"].alias("login"),
-                u["credentials"]["last-logged-in"].alias("last_logged_in"),
-            ).alias("credentials"),
-            F.transform(
-                F.coalesce(
-                    u["user-groups"]["user-group"],
-                    F.array().cast(
-                        ArrayType(StructType([StructField("_id", StringType())]))
-                    ),
-                ),
-                lambda g: g["_id"],
-            ).alias("user_groups"),
-            _canon_attrs(u["custom-attributes"]).alias("custom_attributes"),
-        ),
+    empty = quote("")
+    user = (
+        f"struct(coalesce(_u.`_business-partner-no`, {empty}) AS business_partner_no, "
+        f"coalesce(_u.`default-customer`, {empty}) AS default_customer, "
+        f"struct(coalesce(_u.profile.`creation-date`, {empty}) AS creation_date) AS profile, "
+        "struct(_u.credentials.login AS login, "
+        "_u.credentials.`last-logged-in` AS last_logged_in) AS credentials, "
+        "transform(coalesce(_u.`user-groups`.`user-group`, array()), _g -> _g._id) "
+        "AS user_groups, "
+        f"{_canon_attrs('_u.`custom-attributes`')} AS custom_attributes)"
     )
-    return raw.select(
-        F.col("_id").alias("id"),
-        _canon_attrs(F.col("custom-attributes")).alias("custom_attributes"),
-        users.alias("users"),
+    return raw.selectExpr(
+        "_id AS id",
+        f"{_canon_attrs('`custom-attributes`')} AS custom_attributes",
+        f"transform(coalesce(user, array()), _u -> {user}) AS users",
     )
 
 

@@ -3,7 +3,7 @@
 The reference's inner loop (migrate.py:116-257) mutates a nested XML
 customer document: conditional attribute-array rewrites, upserts,
 element deletion, struct-field overwrite/delete, and a subtree key
-rewrite. Here the same semantics are pure Column expressions over the
+rewrite. Here the same semantics are JVM-side expressions over the
 canonical nested schema (SURVEY §1.5):
 
     id string,
@@ -18,10 +18,17 @@ Because the driver's testdata has no nested table, ``nested_customers``
 builds one *deterministically* from the flat ``customer`` table (pure
 projection — no shuffle, no UDF), and every query flattens its result
 back to relational rows so the DuckDB oracle can recompute it from
-first principles. All transforms are `F.transform`/`F.filter`/
-`F.exists`/`withField`/`dropFields` — JVM-side, zero Python UDFs,
-single narrow stage: at 100 TB this runs embarrassingly parallel with
-no shuffle at all.
+first principles. All transforms are higher-order functions and struct
+updates (transform, filter, exists, struct field set and drop) —
+JVM-side, zero Python UDFs, single narrow stage: at 100 TB this runs
+embarrassingly parallel with no shuffle at all.
+
+``attr_upsert``, which ``apply_migration`` shares, builds SQL text
+rather than Columns: the migrate pass writes each projection as text
+because the text costs one JVM call (``selectExpr`` / ``F.expr``),
+where the Column DSL pays a py4j round trip per function, alias, field
+access and lambda variable, and Catalyst parses both spellings to the
+same tree.
 """
 
 from __future__ import annotations
@@ -31,6 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from pro_etl_spark.io import load
 from pro_etl_spark.registry import register
+from pro_etl_spark.sqltext import quote
 
 
 def _attr(name: str, dt: str, value: Column) -> Column:
@@ -40,24 +48,21 @@ def _attr(name: str, dt: str, value: Column) -> Column:
 
 
 def attr_upsert(
-    arr: Column, name: str, dt: str, on_update: Column, on_insert: Column
-) -> Column:
-    """F11 combinator — update the named attribute in place when it
+    arr: str, name: str, dt: str, on_update: str, on_insert: str
+) -> str:
+    """F11 combinator, as SQL text over the array<struct<name,dt,value>>
+    expression ``arr`` — update the named attribute in place when it
     exists (value := on_update, dt retagged), append
     ``(name, dt, on_insert)`` otherwise (migrate.py:186-216). Shared by
     the standalone ``arr_upsert`` operator and ``apply_migration``."""
-    updated = F.transform(
-        arr,
-        lambda a: F.struct(
-            a["name"].alias("name"),
-            F.when(a["name"] == name, F.lit(dt)).otherwise(a["dt"]).alias("dt"),
-            F.when(a["name"] == name, on_update).otherwise(a["value"]).alias("value"),
-        ),
+    n, t = quote(name), quote(dt)
+    updated = (
+        f"transform({arr}, _a -> struct(_a.name AS name, "
+        f"CASE WHEN _a.name = {n} THEN {t} ELSE _a.dt END AS dt, "
+        f"CASE WHEN _a.name = {n} THEN {on_update} ELSE _a.value END AS value))"
     )
-    appended = F.concat(arr, F.array(_attr(name, dt, on_insert)))
-    return F.when(F.exists(arr, lambda a: a["name"] == name), updated).otherwise(
-        appended
-    )
+    appended = f"concat({arr}, array(struct({n} AS name, {t} AS dt, {on_insert} AS value)))"
+    return f"CASE WHEN exists({arr}, _a -> _a.name = {n}) THEN {updated} ELSE {appended} END"
 
 
 def nested_customers(spark: SparkSession, d: str) -> DataFrame:
@@ -258,21 +263,14 @@ def arr_upsert(spark: SparkSession, d: str) -> DataFrame:
     with lower-cased text (migrate.py:210-216)."""
     n = nested_customers(spark, d)
     arr = attr_upsert(
-        F.col("custom_attributes"),
-        "MEK_DefaultDeliveryday",
-        "string",
-        F.lit("-2D"),
-        F.lit("-3D"),
+        "custom_attributes", "MEK_DefaultDeliveryday", "string", quote("-2D"), quote("-3D")
     )
+    mandatory = f"lower({quote('TRUE')})"
     arr = attr_upsert(
-        arr,
-        "MEK_CustomerOrderNumberMandatory",
-        "boolean",
-        F.lower(F.lit("TRUE")),
-        F.lower(F.lit("TRUE")),
+        arr, "MEK_CustomerOrderNumberMandatory", "boolean", mandatory, mandatory
     )
     return (
-        n.select("id", F.explode(arr).alias("attr"))
+        n.select("id", F.explode(F.expr(arr)).alias("attr"))
         .select("id", "attr.name", "attr.dt", "attr.value")
     )
 

@@ -10,34 +10,44 @@ and it writes one root per part file rather than a single enveloped
 document.
 
 Split of labor:
-- **records (the 100 TB side)**: serialized executor-side as pure
-  Column expressions — escape, concat, array_join; whole-stage-codegen
-  friendly, zero Python in the hot path — written with the text sink
-  (one part file per partition, no driver materialization).
+- **records (the 100 TB side)**: serialized executor-side by one
+  projection, `customer_xml` — escape, concat, array_join;
+  whole-stage-codegen friendly, zero Python in the hot path — written
+  with the text sink (one part file per partition, no driver
+  materialization). The record expression is SQL text built from the
+  schema: a projection spelled as text costs one JVM call, where the
+  Column DSL paid a py4j round trip for every function, alias, field
+  access and lambda variable (about 1,100 for this renderer), and
+  Catalyst parses both spellings to the same tree. Attribute values
+  also escape tab, newline and carriage return, so they read back
+  exactly.
 - **envelope (the O(1) side)**: one renderer, `_envelope`, writes the
   declaration, the root start tag (nsmap, then the root attributes:
-  prefixed keys or ``read_root_attrs``' Clark keys, values escaped) and
-  the end tag for all three writers. The document is an ordered file
-  set: header part, record parts, footer part.
-  `write_xml_document_manifest` is the scale mode: the file set plus a
-  manifest; envelope assembly writes O(1) bytes + one manifest line per
-  part (no record byte touches the driver), and the final stitch — when
-  one physical file is truly needed — is the storage layer's primitive
-  (`hdfs concat` / S3 multipart compose), handed to `compose_manifest`
-  as a callable. `read_manifest_document` consumes the file set
-  directly, so most readers never compose. `write_xml_document` is the
+  prefixed keys or ``read_root_attrs``' Clark keys, values escaped;
+  ``xml:`` and the export's own ``xmlns:*`` declarations bind the
+  namespaces nsmap lacks) and the end tag for all three writers. The
+  document is an ordered file set: header part, record parts, footer
+  part. `write_xml_document_manifest` is the scale mode: the file set
+  plus a manifest listing the parts relative to its own directory, so
+  the document can move; envelope assembly writes O(1) bytes + one
+  manifest line per part (no record byte touches the driver), and the
+  final stitch — when one physical file is truly needed — is the
+  storage layer's primitive (`hdfs concat` / S3 multipart compose),
+  handed to `compose_manifest` as a callable. `read_manifest_document`
+  consumes the file set directly, so most readers never compose.
+  `write_xml_document` is the
   reference-parity single file: the same file set, stream-concatenated
   through the driver by `compose_manifest`'s default and then deleted —
   a single-writer ceiling at 100 TB. `write_xml_document_sharded` emits
   the header and footer as rows around each shard's records, so every
   shard is a complete document written executor-side.
 
-Reading splits the text at record boundaries (`record_fragments`) and
-parses each record with ``from_xml``: the text source splits one large
-file across tasks, where Spark's native XML source reads a file as one
-split. Both parsers handle namespaced attributes fine (``dt:dt`` →
-struct field ``_dt:dt``). `read_xml_document` keeps the native source
-for whole documents.
+Reading splits the text at record boundaries (`record_fragments`, its
+gate SQL text too) and parses each record with ``from_xml``: the text
+source splits one large file across tasks, where Spark's native XML
+source reads a file as one split. Both parsers handle namespaced
+attributes fine (``dt:dt`` → struct field ``_dt:dt``).
+`read_xml_document` keeps the native source for whole documents.
 """
 
 from __future__ import annotations
@@ -51,6 +61,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from pro_etl_spark.sqltext import ident, quote
+
 #: the reference's namespace map (migrate.py:72-75)
 ENFINITY_NSMAP = {
     "i": "http://www.intershop.com/xml/ns/intershop/customer/impex/7.3",
@@ -58,97 +70,89 @@ ENFINITY_NSMAP = {
     "xsi": "http://www.w3.org/2001/XMLSchema-instance",
 }
 
+#: the namespace the ``xml`` prefix is bound to without a declaration
+XML_NS = "http://www.w3.org/XML/1998/namespace"
+
 #: records ``read_manifest_document`` samples to infer a record schema
 INFER_SAMPLE_RECORDS = 64
 
 
-def xml_escape(c: Column) -> Column:
-    """XML 1.0 text/attribute escaping as Column expressions (&, <, >,
-    \", in that order so ampersands escape first)."""
-    c = F.replace(c, F.lit("&"), F.lit("&amp;"))
-    c = F.replace(c, F.lit("<"), F.lit("&lt;"))
-    c = F.replace(c, F.lit(">"), F.lit("&gt;"))
-    c = F.replace(c, F.lit('"'), F.lit("&quot;"))
-    return c
+#: XML 1.0 escapes for element text, in the order applied (ampersands
+#: first). Attribute values also escape tab, newline and carriage
+#: return, which a parser would otherwise normalize to spaces.
+_TEXT_ENTITIES = (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ('"', "&quot;"))
+_ATTR_ENTITIES = _TEXT_ENTITIES + (("\t", "&#9;"), ("\n", "&#10;"), ("\r", "&#13;"))
+
+_NL = quote("\n")
 
 
-def _attrs_xml(arr: Column, indent: str) -> Column:
+def xml_escape(expr: str, entities=_TEXT_ENTITIES) -> str:
+    """SQL text escaping the string expression ``expr`` for XML element
+    text, or with ``_ATTR_ENTITIES`` for an attribute value."""
+    for ch, ent in entities:
+        expr = f"replace({expr}, {quote(ch)}, {quote(ent)})"
+    return expr
+
+
+def _cat(*parts: str) -> str:
+    return f"concat({', '.join(parts)})"
+
+
+def _attrs_xml(arr: str, indent: str) -> str:
     """<custom-attributes> block for an array<struct<name,dt,value>>
     (attribute shape per migrate.py:161,195,211: name + dt:dt + text)."""
-    inner = F.array_join(
-        F.transform(
-            arr,
-            lambda a: F.concat(
-                F.lit(f'{indent}  <custom-attribute name="'),
-                xml_escape(a["name"]),
-                F.lit('" dt:dt="'),
-                xml_escape(a["dt"]),
-                F.lit('">'),
-                xml_escape(a["value"]),
-                F.lit("</custom-attribute>"),
-            ),
-        ),
-        "\n",
+    item = _cat(
+        quote(f'{indent}  <custom-attribute name="'),
+        xml_escape("_a.name", _ATTR_ENTITIES),
+        quote('" dt:dt="'),
+        xml_escape("_a.dt", _ATTR_ENTITIES),
+        quote('">'),
+        xml_escape("_a.value"),
+        quote("</custom-attribute>"),
     )
-    return F.when(F.size(arr) > 0, F.concat(
-        F.lit(f"{indent}<custom-attributes>\n"),
-        inner,
-        F.lit(f"\n{indent}</custom-attributes>"),
-    )).otherwise(F.lit(f"{indent}<custom-attributes/>"))
+    block = _cat(
+        quote(f"{indent}<custom-attributes>\n"),
+        f"array_join(transform({arr}, _a -> {item}), {_NL})",
+        quote(f"\n{indent}</custom-attributes>"),
+    )
+    empty = quote(f"{indent}<custom-attributes/>")
+    return f"CASE WHEN size({arr}) > 0 THEN {block} ELSE {empty} END"
 
 
-def _user_xml(u: Column, cred_fields: tuple[str, ...]) -> Column:
+def _user_xml(u: str, cred_fields: tuple[str, ...]) -> str:
     """<user> block for the canonical users element (SURVEY §1.2):
     business-partner-no attribute, user-groups set, custom-attributes,
     credentials (whatever fields survive the migration — the reference
     deletes only last-logged-in, keeping siblings, migrate.py:242-247),
     profile."""
-    groups = F.array_join(
-        F.transform(
-            u["user_groups"],
-            lambda g: F.concat(
-                F.lit('      <user-group id="'), xml_escape(g), F.lit('"/>')
-            ),
-        ),
-        "\n",
+    group = _cat(
+        quote('      <user-group id="'), xml_escape("_g", _ATTR_ENTITIES), quote('"/>')
     )
-    creds: list[Column] = []
+    creds = []
     for f in cred_fields:
+        c = f"{u}.credentials.{ident(f)}"
         el = f.replace("_", "-")
-        creds.append(
-            F.when(
-                u["credentials"][f].isNotNull(),
-                F.concat(
-                    F.lit(f"      <{el}>"),
-                    xml_escape(u["credentials"][f]),
-                    F.lit(f"</{el}>\n"),
-                ),
-            ).otherwise(F.lit(""))
-        )
-    cred_block = (
-        F.when(
-            F.concat(*creds) != "",
-            F.concat(F.lit("    <credentials>\n"), F.concat(*creds), F.lit("    </credentials>\n")),
-        ).otherwise(F.lit(""))
-        if creds
-        else F.lit("")
-    )
-    return F.concat(
-        F.lit('  <user business-partner-no="'),
-        xml_escape(u["business_partner_no"]),
-        F.lit('">\n'),
-        F.lit("    <default-customer>"),
-        xml_escape(u["default_customer"]),
-        F.lit("</default-customer>\n"),
-        F.lit("    <user-groups>\n"),
-        groups,
-        F.lit("\n    </user-groups>\n"),
-        _attrs_xml(u["custom_attributes"], "    "),
-        F.lit("\n"),
+        text = _cat(quote(f"      <{el}>"), xml_escape(c), quote(f"</{el}>\n"))
+        creds.append(f"CASE WHEN {c} IS NOT NULL THEN {text} ELSE {quote('')} END")
+    cred_block = quote("")
+    if creds:
+        cat = _cat(*creds)
+        block = _cat(quote("    <credentials>\n"), cat, quote("    </credentials>\n"))
+        cred_block = f"CASE WHEN {cat} != {quote('')} THEN {block} ELSE {quote('')} END"
+    return _cat(
+        quote('  <user business-partner-no="'),
+        xml_escape(f"{u}.business_partner_no", _ATTR_ENTITIES),
+        quote('">\n    <default-customer>'),
+        xml_escape(f"{u}.default_customer"),
+        quote("</default-customer>\n    <user-groups>\n"),
+        f"array_join(transform({u}.user_groups, _g -> {group}), {_NL})",
+        quote("\n    </user-groups>\n"),
+        _attrs_xml(f"{u}.custom_attributes", "    "),
+        _NL,
         cred_block,
-        F.lit("    <profile>\n      <creation-date>"),
-        xml_escape(u["profile"]["creation_date"]),
-        F.lit("</creation-date>\n    </profile>\n  </user>"),
+        quote("    <profile>\n      <creation-date>"),
+        xml_escape(f"{u}.profile.creation_date"),
+        quote("</creation-date>\n    </profile>\n  </user>"),
     )
 
 
@@ -165,18 +169,16 @@ def customer_xml(df: DataFrame) -> DataFrame:
             for f in users_t["credentials"].dataType.fields
             if f.dataType.simpleString() == "string"
         )
-    rec = F.concat(
-        F.lit('<customer id="'),
-        xml_escape(F.col("id")),
-        F.lit('">\n'),
-        _attrs_xml(F.col("custom_attributes"), "  "),
-        F.lit("\n"),
-        F.array_join(
-            F.transform(F.col("users"), lambda u: _user_xml(u, cred_fields)), "\n"
-        ),
-        F.lit("\n</customer>"),
+    rec = _cat(
+        quote('<customer id="'),
+        xml_escape("id", _ATTR_ENTITIES),
+        quote('">\n'),
+        _attrs_xml("custom_attributes", "  "),
+        _NL,
+        f"array_join(transform(users, _u -> {_user_xml('_u', cred_fields)}), {_NL})",
+        quote("\n</customer>"),
     )
-    return df.select(rec.alias("value"))
+    return df.selectExpr(f"{rec} AS value")
 
 
 def _envelope(
@@ -186,18 +188,30 @@ def _envelope(
     footer (root end tag), neither newline-terminated. Root attribute
     keys are either already prefixed (``xsi:schemaLocation``) or Clark
     keys as ``read_root_attrs`` returns them (``{uri}local``), which map
-    to ``prefix:local`` through ``nsmap``; a Clark key whose namespace
-    ``nsmap`` does not bind is left out. Attribute values are escaped."""
+    to ``prefix:local`` through ``nsmap``, the implicit ``xml`` prefix
+    or a ``xmlns:prefix`` declaration among the root attributes; a
+    declaration for a prefix ``nsmap`` binds is written once, from
+    ``nsmap``, and a Clark key whose namespace nothing binds is left
+    out. Attribute values are escaped."""
     nsmap = nsmap or {}
+    root_attrs = root_attrs or {}
+    # nsmap first: its prefix wins when a namespace has two
+    bound = {**nsmap, "xml": XML_NS}
+    for k, u in root_attrs.items():
+        if k.startswith("xmlns:"):
+            bound.setdefault(k[6:], u)
     attrs = [f' xmlns:{p}="{u}"' for p, u in nsmap.items()]
-    for k, v in (root_attrs or {}).items():
+    for k, v in root_attrs.items():
+        if k.startswith("xmlns:") and k[6:] in nsmap:
+            continue
         if k.startswith("{"):
             uri, local = k[1:].split("}")
-            pfx = next((p for p, u in nsmap.items() if u == uri), None)
+            pfx = next((p for p, u in bound.items() if u == uri), None)
             if not pfx:
                 continue
             k = f"{pfx}:{local}"
-        v = v.replace("&", "&amp;").replace("<", "&lt;").replace('"', "&quot;")
+        for ch, ent in _ATTR_ENTITIES:
+            v = v.replace(ch, ent)
         attrs.append(f' {k}="{v}"')
     header = f'<?xml version="1.0" encoding="UTF-8"?>\n<{root_tag}{"".join(attrs)}>'
     return header, f"</{root_tag}>"
@@ -235,8 +249,11 @@ def _concat(paths: list[str], out_file: str) -> None:
 
 
 def _manifest_paths(manifest_path: str) -> list[str]:
+    """The manifest's parts in document order; a relative entry is
+    resolved against the manifest's own directory."""
+    base = os.path.dirname(manifest_path)
     with open(manifest_path, "r", encoding="utf-8") as r:
-        return [ln.strip() for ln in r if ln.strip()]
+        return [os.path.join(base, ln.strip()) for ln in r if ln.strip()]
 
 
 def write_xml_document(
@@ -270,7 +287,8 @@ def write_xml_document_manifest(
     document is materialized as an ORDERED FILE SET: an O(1)-byte
     header part (declaration + root open tag), the distributed record
     parts exactly as the text sink wrote them, and an O(1)-byte footer
-    part — plus a MANIFEST file listing the parts in document order.
+    part — plus a MANIFEST file listing the parts in document order,
+    relative to the manifest's directory.
     NO record byte moves through the driver: envelope assembly is two
     tiny files and one manifest line per part, flat in data volume by
     construction (and measured so — see tests/test_xml_io.py).
@@ -288,7 +306,7 @@ def write_xml_document_manifest(
     paths = _write_file_set(records, out_dir, root_tag, root_attrs, nsmap)
     manifest = os.path.join(out_dir, "MANIFEST")
     with open(manifest, "w", encoding="utf-8") as w:
-        w.write("\n".join(paths) + "\n")
+        w.write("\n".join(os.path.relpath(p, out_dir) for p in paths) + "\n")
     return manifest
 
 
@@ -333,48 +351,42 @@ def record_fragments(
     start_tag = (
         f"<{tag}(?:\\s+[^\\s=/>]+\\s*=\\s*(?:\"[^\"]*\"|'[^']*'))*\\s*(/?)>"
     )
-    v = F.col("value")
-    declaration = F.when(v.rlike("\\A\\uFEFF?\\s*<\\?xml\\s"), 1).otherwise(0)
+    declaration = quote("\\A\\uFEFF?\\s*<\\?xml\\s")
+    pi, spaced_end = quote("<\\?"), quote(f"</{tag}\\s")
     # literal tests guard the <? and end-tag regexes, which then run
     # only on the chunks that could hold the construct
-    unsafe = (
-        F.when(v.contains("<!"), F.lit("a comment, CDATA section or DOCTYPE (<!)"))
-        .when(
-            v.contains("<?") & (F.regexp_count(v, F.lit("<\\?")) > declaration),
-            F.lit("a processing instruction (<?) after the XML declaration"),
-        )
-        .when(
-            F.regexp_extract(v, start_tag, 1) == "/",
-            F.lit(f"a self-closing <{row_tag}/> element"),
-        )
-        .when(
-            v.contains(f"</{row_tag}") & v.rlike(f"</{tag}\\s"),
-            F.lit(f"an end tag with whitespace before '>' (</{row_tag} >)"),
-        )
-        .when(
-            F.regexp_count(v, F.lit(start)) > 1,
-            F.lit(f"more than one <{row_tag}> start tag before one {close}"),
-        )
-    )
-    keep = F.when(unsafe.isNull(), v.rlike(start)).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("XML record split: "),
-                F.col("_metadata.file_path"),
-                F.lit(" holds "),
-                unsafe,
-                F.lit(f", which a split on {close} cannot read"),
-            )
-        )
+    rules = [
+        (f"contains(value, {quote('<!')})", "a comment, CDATA section or DOCTYPE (<!)"),
+        (
+            f"contains(value, {quote('<?')}) AND regexp_count(value, {pi}) > "
+            f"CASE WHEN value RLIKE {declaration} THEN 1 ELSE 0 END",
+            "a processing instruction (<?) after the XML declaration",
+        ),
+        (
+            f"regexp_extract(value, {quote(start_tag)}, 1) = {quote('/')}",
+            f"a self-closing <{row_tag}/> element",
+        ),
+        (
+            f"contains(value, {quote('</' + row_tag)}) AND value RLIKE {spaced_end}",
+            f"an end tag with whitespace before '>' (</{row_tag} >)",
+        ),
+        (
+            f"regexp_count(value, {quote(start)}) > 1",
+            f"more than one <{row_tag}> start tag before one {close}",
+        ),
+    ]
+    unsafe = "CASE " + " ".join(f"WHEN {c} THEN {quote(m)}" for c, m in rules) + " END"
+    keep = (
+        f"CASE WHEN {unsafe} IS NULL THEN value RLIKE {quote(start)} "
+        f"ELSE raise_error(concat({quote('XML record split: ')}, _metadata.file_path, "
+        f"{quote(' holds ')}, {unsafe}, {quote(f', which a split on {close} cannot read')})) END"
     )
     return (
         spark.read.option("lineSep", close)
         .text(paths)
         .where(keep)
-        .select(
-            F.concat(
-                F.substr(v, F.regexp_instr(v, F.lit(start))), F.lit(close)
-            ).alias("xml")
+        .selectExpr(
+            f"concat(substr(value, regexp_instr(value, {quote(start)})), {quote(close)}) AS xml"
         )
     )
 
@@ -549,10 +561,18 @@ def read_xml_document(spark: SparkSession, path: str, row_tag: str = "customer")
 
 
 def read_root_attrs(path: str) -> tuple[str, dict[str, str]]:
-    """Driver-side peek at the envelope: root tag + attributes
-    (namespace-expanded keys), without loading the document body."""
+    """Driver-side peek at the envelope, without loading the document
+    body: the root tag and its attributes, namespace-expanded keys,
+    after the prefixed namespaces the root declares as ``xmlns:prefix``
+    keys."""
     import xml.etree.ElementTree as ET
 
-    for _event, elem in ET.iterparse(path, events=("start",)):
-        return elem.tag, dict(elem.attrib)
+    declared = {}
+    for event, item in ET.iterparse(path, events=("start-ns", "start")):
+        if event == "start-ns":
+            prefix, uri = item
+            if prefix:
+                declared[f"xmlns:{prefix}"] = uri
+            continue
+        return item.tag, {**declared, **item.attrib}
     raise ValueError(f"no root element in {path}")

@@ -187,6 +187,39 @@ def test_root_attribute_values_are_escaped(spark, tmp_path, scale):
     assert ET.parse(doc).getroot().attrib["note"] == 'A & B "q" <x>'
 
 
+@pytest.mark.parametrize("scale", [False, True], ids=["flat", "scale"])
+def test_root_attributes_in_undeclared_namespaces_are_kept(spark, tmp_path, scale):
+    """Root attributes whose namespace ``ENFINITY_NSMAP`` does not bind
+    survive into the delta: ``xml:`` needs no declaration, and a prefix
+    the export declares itself is declared again."""
+    start = FIXTURE_XML.index("<enfinity ")
+    end = FIXTURE_XML.index(">", start) + 1
+    export = (
+        FIXTURE_XML[:start]
+        + '<enfinity xmlns:x="urn:other" xml:lang="sv" x:tenant="t1" major="7">'
+        + FIXTURE_XML[end:]
+    )
+    (tmp_path / "export.xml").write_text(export, encoding="utf-8")
+    (tmp_path / "mapping.csv").write_text(FIXTURE_CSV, encoding="utf-8")
+    out = migrate_cli.run(
+        spark,
+        str(tmp_path / "export.xml"),
+        str(tmp_path / "mapping.csv"),
+        str(tmp_path / "out"),
+        scale=scale,
+    )
+    doc = out["xml"]
+    if scale:
+        doc = xml_io.compose_manifest(doc, str(tmp_path / "composed.xml"))
+    root = ET.parse(doc).getroot()
+    assert root.attrib == {
+        "{http://www.w3.org/XML/1998/namespace}lang": "sv",
+        "{urn:other}tenant": "t1",
+        "major": "7",
+    }
+    assert len(root.findall("customer")) == 3
+
+
 def test_scale_mode_writes_manifest_document(spark, tmp_path, cli_out):
     """--scale swaps the driver-streamed single file for the manifest
     document (VERDICT r11 #8): the CLI's 100x story must match the
@@ -260,6 +293,36 @@ def test_reconcile_flags_missing_values(spark):
         "3": ("Not OK", REASON_MISSING),
         "9": ("Not OK", migrate_cli.REASON_NOT_FOUND),
     }
+
+
+def test_record_plan_jvm_round_trip_budget(spark, tmp_path, monkeypatch):
+    """Building the migrate pass's record plan (``apply_migration``,
+    ``customer_xml`` and ``reconcile`` over the parsed export) costs a
+    few dozen py4j round trips: each projection is SQL text handed to
+    the JVM in one call. Spelled in the Column DSL, one call per
+    function, alias, field access and lambda variable, it cost about
+    4,600."""
+    from py4j.java_gateway import GatewayClient
+
+    from pro_etl_spark.ops.migration import apply_migration, reconcile
+
+    (tmp_path / "export.xml").write_text(FIXTURE_XML, encoding="utf-8")
+    (tmp_path / "mapping.csv").write_text(FIXTURE_CSV, encoding="utf-8")
+    customers = migrate_cli.read_customers_xml(spark, str(tmp_path / "export.xml"))
+    mapping = migrate_cli.read_mapping_csv(spark, str(tmp_path / "mapping.csv"))
+
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    xml_io.customer_xml(apply_migration(customers, mapping))
+    reconcile(mapping, customers)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 300, f"{len(calls)} py4j round trips"
 
 
 def test_delta_xml_document(spark, cli_out):

@@ -121,6 +121,136 @@ def test_escaping_special_chars(spark, tmp_path):
     assert attr.text == 'va<l"ue'
 
 
+def _nested_ddl(credentials: str) -> str:
+    """The canonical nested customer shape with the given credentials
+    fields."""
+    return (
+        "id string, custom_attributes array<struct<name:string,dt:string,value:string>>, "
+        "users array<struct<business_partner_no:string, default_customer:string, "
+        "profile:struct<creation_date:string>, "
+        f"credentials:struct<{credentials}>, user_groups:array<string>, "
+        "custom_attributes:array<struct<name:string,dt:string,value:string>>>>"
+    )
+
+
+MAPPING_DDL = (
+    "current_customer_id string, new_customer_id string, new_source_id string, "
+    "new_store_id string, new_store_name string, mandatory_reference string, "
+    "delivery_day string"
+)
+
+
+@pytest.mark.parametrize(
+    "credentials, old_credentials, credential_element",
+    [
+        ("login:string,last_logged_in:string", ("7", "2023-06-01T08:00:00"), "login"),
+        ("last_logged_in:string,last_ip:string", ("2023-06-01T08:00:00", "7"), "last-ip"),
+    ],
+    ids=["cli", "ops"],
+)
+def test_migrated_records_render_exactly(
+    spark, credentials, old_credentials, credential_element
+):
+    """The delta records of ``customer_xml(apply_migration(...))`` byte
+    for byte, on the CLI export's credentials (login) and the ops
+    corpus's (``nested_customers``: last_ip). Covered: a customer
+    without attributes (both upserts append) and one without users, a
+    user with null credentials and no attributes, and a login or
+    last_ip, default-customer, business-partner-no and attribute value
+    equal to the old id, which become the new id, beside a user-group
+    id and an attribute name and dt:dt equal to it, which stay."""
+    user_attrs = [
+        ("Foo", "string", "7"), ("LastOrderDate", "string", "2023-12-24"), ("7", "7", "x")
+    ]
+    nested = spark.createDataFrame(
+        [
+            ("7", [], [
+                ("7", "7", ("2020-01-01T00:00:00+00:00",), old_credentials,
+                 ["7", "CG_Other"], user_attrs),
+                ("BP7", "other", ("2020-01-01T00:00:00+00:00",), None, [], []),
+            ]),
+            ("8", [("MEK_Store_Id", "string", "8"), ("MEK_Store_Name", "string", "Old")], []),
+        ],
+        _nested_ddl(credentials),
+    )
+    mapping = spark.createDataFrame(
+        [
+            ("7", "N7", "S1", "ST1", "Store One", "TRUE", "-2D"),
+            ("8", "N8", "S1", "ST1", "Store One", None, ""),
+        ],
+        MAPPING_DDL,
+    )
+    migrated = apply_migration(nested, mapping, run_ts=RUN_TS)
+    got = sorted(r.value for r in xml_io.customer_xml(migrated).collect())
+    cd = "      <creation-date>2026-08-13T00:00:00+00:00</creation-date>\n"
+    assert got == [
+        '<customer id="N7">\n'
+        "  <custom-attributes>\n"
+        '    <custom-attribute name="MEK_DefaultDeliveryday" dt:dt="string">-2D</custom-attribute>\n'
+        '    <custom-attribute name="MEK_CustomerOrderNumberMandatory" dt:dt="boolean">true</custom-attribute>\n'
+        "  </custom-attributes>\n"
+        '  <user business-partner-no="N7">\n'
+        "    <default-customer>N7</default-customer>\n"
+        "    <user-groups>\n"
+        '      <user-group id="7"/>\n'
+        '      <user-group id="CG_Other"/>\n'
+        '      <user-group id="CG_Mekonomen"/>\n'
+        "    </user-groups>\n"
+        "    <custom-attributes>\n"
+        '      <custom-attribute name="Foo" dt:dt="string">N7</custom-attribute>\n'
+        '      <custom-attribute name="7" dt:dt="7">x</custom-attribute>\n'
+        "    </custom-attributes>\n"
+        "    <credentials>\n"
+        f"      <{credential_element}>N7</{credential_element}>\n"
+        "    </credentials>\n"
+        f"    <profile>\n{cd}    </profile>\n"
+        "  </user>\n"
+        '  <user business-partner-no="BP7">\n'
+        "    <default-customer>other</default-customer>\n"
+        "    <user-groups>\n"
+        '      <user-group id="CG_Mekonomen"/>\n'
+        "    </user-groups>\n"
+        "    <custom-attributes/>\n"
+        f"    <profile>\n{cd}    </profile>\n"
+        "  </user>\n"
+        "</customer>",
+        '<customer id="N8">\n'
+        "  <custom-attributes>\n"
+        '    <custom-attribute name="MEK_Store_Id" dt:dt="string">ST1</custom-attribute>\n'
+        '    <custom-attribute name="MEK_Store_Name" dt:dt="string">Store One</custom-attribute>\n'
+        '    <custom-attribute name="MEK_DefaultDeliveryday" dt:dt="string">-3D</custom-attribute>\n'
+        "  </custom-attributes>\n"
+        "\n"
+        "</customer>",
+    ]
+
+
+def test_attribute_whitespace_round_trips(spark, tmp_path):
+    """Tab, newline and carriage return in attribute values are written
+    as character references, so a parser reads them back exactly
+    instead of normalizing them to spaces: in a record id, a
+    business-partner-no, a user-group id, a custom-attribute name and a
+    root attribute of the flat delta."""
+    df = spark.createDataFrame(
+        [("1\n2", [], [("BP\t1", "c", ("2026-01-01T00:00:00+00:00",), None,
+                        ["G\r1"], [("N\tm", "string", "v")])])],
+        _nested_ddl("login:string"),
+    )
+    out = str(tmp_path / "ws.xml")
+    xml_io.write_xml_document(
+        xml_io.customer_xml(df), out,
+        root_attrs={"note": "a\tb"}, nsmap=xml_io.ENFINITY_NSMAP,
+    )
+    root = ET.parse(out).getroot()
+    assert root.attrib["note"] == "a\tb"
+    cust = root.find("customer")
+    assert cust.attrib["id"] == "1\n2"
+    user = cust.find("user")
+    assert user.attrib["business-partner-no"] == "BP\t1"
+    assert user.find("user-groups/user-group").attrib["id"] == "G\r1"
+    assert user.find("custom-attributes/custom-attribute").attrib["name"] == "N\tm"
+
+
 def test_sharded_write_round_trips_every_document(spark, tmp_path):
     """Sharded sink value test: every shard directory holds exactly one
     well-formed XML DOCUMENT (strict ET parse — declaration, envelope
@@ -280,6 +410,37 @@ def test_manifest_reads_without_compose_and_hands_off_concat(spark, tmp_path):
     assert middle == sorted(middle) and len(middle) >= 1
     import os
     assert not os.path.exists(out)  # the primitive owns the stitch
+
+
+def test_manifest_document_is_relocatable(spark, tmp_path):
+    """MANIFEST lists its parts relative to its own directory: after the
+    directory moves, the document still composes and reads from the
+    new place. An absolute entry is still read."""
+    import os
+    import shutil
+
+    n = nested_customers(spark, SF).drop("key")
+    manifest = xml_io.write_xml_document_manifest(
+        xml_io.customer_xml(n).repartition(2), str(tmp_path / "a"),
+        root_attrs=ROOT_ATTRS, nsmap=xml_io.ENFINITY_NSMAP,
+    )
+    assert not any(os.path.isabs(p) for p in open(manifest).read().split())
+    shutil.move(str(tmp_path / "a"), str(tmp_path / "b"))
+    moved = str(tmp_path / "b" / "MANIFEST")
+    want = {r.id for r in n.select("id").collect()}
+
+    composed = xml_io.compose_manifest(moved, str(tmp_path / "doc.xml"))
+    assert {c.attrib["id"] for c in ET.parse(composed).getroot()} == want
+    root_tag, attrs, records = xml_io.read_manifest_document(spark, moved)
+    assert (root_tag, attrs["major"]) == ("enfinity", "7")
+    assert {r[0] for r in records.select(F.col("_id").cast("string")).collect()} == want
+
+    # a manifest written with absolute entries reads the same parts
+    entries = open(moved).read().split()
+    with open(moved, "w") as w:
+        w.write("".join(os.path.join(str(tmp_path / "b"), e) + "\n" for e in entries))
+    again = xml_io.compose_manifest(moved, str(tmp_path / "abs.xml"))
+    assert open(again, "rb").read() == open(composed, "rb").read()
 
 
 def test_manifest_envelope_assembly_is_flat_in_data_volume(spark, tmp_path):
