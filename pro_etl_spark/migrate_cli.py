@@ -10,12 +10,13 @@ Pipeline (mirrors SURVEY §3.1's trace, set-based):
 
 1. mapping CSV with an **explicit schema** (no inference — fixes
    migrate.py:79), first-row-wins dedup on the join key (J4)
-2. customer XML split at record boundaries (the text source cut at
-   ``</customer>``, one task per split) and parsed per record with
-   ``from_xml`` and an **explicit schema** (arrays stay arrays even for
-   single elements), normalized to the canonical nested shape of
-   SURVEY §1.5 — parsed **once** per run and persisted, so steps 3 and
-   4 read the same scan
+2. customer XML through ``xml_io.read_records``, the one record parse
+   the manifest reader shares: split at record boundaries (the text
+   source cut at ``</customer>``, one task per split) and parsed per
+   record with ``from_xml`` and an **explicit schema** (arrays stay
+   arrays even for single elements), normalized to the canonical
+   nested shape of SURVEY §1.5 — parsed **once** per run and
+   persisted, so steps 3 and 4 read the same scan
 3. validation (delivery-day regex + '-3D' default, null checks) and
    the OK / Not OK / Not-found reconciliation log (migrate.py:103-270)
 4. ``apply_migration`` — the full nested-document rewrite
@@ -51,7 +52,7 @@ import datetime
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     StringType,
@@ -61,9 +62,11 @@ from pyspark.sql.types import (
 
 from pro_etl_spark import xml_io
 from pro_etl_spark.ops.migration import (
+    CSV_SCHEMA,
     REASON_INVALID,  # noqa: F401 (part of this module's log vocabulary)
     REASON_NOT_FOUND,
     apply_migration,
+    first_wins,
     reconcile,
 )
 from pro_etl_spark.sqltext import quote
@@ -74,20 +77,6 @@ def run_ts_text() -> str:
     computed per run() (not at import) so long-lived drivers crossing
     midnight stamp the actual run date."""
     return datetime.date.today().isoformat() + "T00:00:00+00:00"
-
-#: CSV contract of the reference (README.md:16-24 of the reference)
-CSV_SCHEMA = StructType(
-    [
-        StructField("current_customer_id", StringType(), True),
-        StructField("new_customer_id", StringType(), True),
-        StructField("new_source_id", StringType(), True),
-        StructField("new_store_id", StringType(), True),
-        StructField("new_store_name", StringType(), True),
-        StructField("mandatory_reference", StringType(), True),
-        StructField("delivery_day", StringType(), True),
-    ]
-)
-
 
 def _attr_st() -> ArrayType:
     return ArrayType(
@@ -188,10 +177,7 @@ def read_customers_xml(spark: SparkSession, path: str) -> DataFrame:
     native XML source read with ``rowTag="customer"`` and the same
     schema, which reads the whole file in one task; an export the split
     cannot read exactly fails the read instead."""
-    raw = xml_io.record_fragments(spark, path, "customer").selectExpr(
-        f"from_xml(xml, {quote(XML_SCHEMA.json())}) AS r"
-    )
-    return canonical_customers(raw.selectExpr("r.*"))
+    return canonical_customers(xml_io.read_records(spark, path, XML_SCHEMA))
 
 
 def canonical_customers(raw: DataFrame) -> DataFrame:
@@ -223,7 +209,8 @@ def read_mapping_csv(spark: SparkSession, path: str) -> DataFrame:
     Normalization happens HERE, once: ids and delivery_day are trimmed
     at ingestion (the reference strips ids before matching,
     migrate.py:110,120) so the log, the transform join, and strict-mode
-    filtering all see identical keys. First-wins order is
+    filtering all see identical keys. The dedup is the engine's one
+    first-wins window (``ops.migration.first_wins``), ordered by
     (file path, in-partition row id): exact row order within each file
     for unsplit small files — the mapping contract — and deterministic
     file order if a glob ever matches several. Quoting is RFC 4180, as
@@ -242,12 +229,7 @@ def read_mapping_csv(spark: SparkSession, path: str) -> DataFrame:
     m = m.withColumn("current_customer_id", F.trim("current_customer_id")).withColumn(
         "delivery_day", F.trim("delivery_day")
     )
-    w = Window.partitionBy("current_customer_id").orderBy("_file", "ord")
-    return (
-        m.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .drop("rn", "ord", "_file")
-    )
+    return first_wins(m, "_file, ord").drop("_file")
 
 
 def run(
@@ -272,7 +254,7 @@ def run(
     manifest document: records stay in distributed part files, the
     envelope is two O(1)-byte parts, and a manifest lists the parts in
     document order. Consumers either read the file set directly
-    (``xml_io.read_manifest_document``) or hand the manifest to the
+    (``xml_io.read_manifest_document`` with ``XML_SCHEMA``) or hand the manifest to the
     storage layer's concat primitive (``xml_io.compose_manifest`` —
     hdfs concat / S3 multipart compose) for a physical single file; no
     record byte ever moves through the driver.
@@ -409,7 +391,7 @@ def main(argv: list[str] | None = None) -> None:
         "part files + O(1) envelope + ordered manifest) instead of a "
         "driver-streamed single file; stitch with the storage layer's "
         "concat primitive via xml_io.compose_manifest, or read the "
-        "file set directly with xml_io.read_manifest_document",
+        "file set directly with xml_io.read_manifest_document and XML_SCHEMA",
     )
     a = p.parse_args(argv)
     xml_path = a.xml or latest_file(a.input_dir, ".xml")

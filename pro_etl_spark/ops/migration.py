@@ -28,9 +28,11 @@ lambda variable (about 1,700 for ``apply_migration``, 540 for
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import ArrayType, DataType, StringType, StructType
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, StringType, StructField, StructType
 
 from pro_etl_spark.io import load
 from pro_etl_spark.registry import register
@@ -43,8 +45,50 @@ REASON_NOT_FOUND = "Not found in source XML"
 REASON_MISSING = "Missing values! Please check CSV input file"
 
 
+#: CSV contract of the reference (README.md:16-24 of the reference)
+CSV_SCHEMA = StructType(
+    [
+        StructField(name, StringType(), True)
+        for name in (
+            "current_customer_id",
+            "new_customer_id",
+            "new_source_id",
+            "new_store_id",
+            "new_store_name",
+            "mandatory_reference",
+            "delivery_day",
+        )
+    ]
+)
+
+#: the mapping stand-in's branches as (step, key_offset, ord): every
+#: step-th custkey, shifted by key_offset, at first-wins rank ord
+MAPPING_SPEC = ((3, 0, 0), (15, 1000000, 0), (9, 0, 1))
+
+#: one mapping row over ``customer``, for ``mapping_df`` (Spark) and
+#: ``MAPPING_SQL`` (DuckDB) alike; ``{key_offset}`` and ``{ord}`` stand
+#: for the spec row's values
+_MAPPING_COLUMNS = (
+    "CAST(c_custkey + {key_offset} AS STRING) AS current_customer_id",
+    "'X' || CAST(c_custkey + {key_offset} AS STRING) AS new_customer_id",
+    "'SRC' || CAST(c_custkey % 3 AS STRING) AS new_source_id",
+    "'ST' || CAST(c_custkey % 7 + {ord} AS STRING) AS new_store_id",
+    "'Store ' || CAST(c_custkey % 7 + {ord} AS STRING) AS new_store_name",
+    "CASE c_custkey % 4 WHEN 0 THEN 'true' WHEN 1 THEN 'false' "
+    "WHEN 2 THEN NULL ELSE 'TRUE' END AS mandatory_reference",
+    "CASE c_custkey % 7 WHEN 0 THEN NULL WHEN 1 THEN '-12D' "
+    "WHEN 2 THEN '-9D' ELSE '-3D' END AS delivery_day",
+    "{ord} AS ord",
+)
+
+
+def _mapping_columns(key_offset: int | str, ord_: int | str) -> list[str]:
+    return [c.format(key_offset=key_offset, ord=ord_) for c in _MAPPING_COLUMNS]
+
+
 def mapping_df(spark: SparkSession, d: str) -> DataFrame:
-    """Deterministic migration-list stand-in (FIXTURES.md A1).
+    """Deterministic migration-list stand-in (FIXTURES.md A1), one
+    branch per ``MAPPING_SPEC`` row:
 
     - known keys:    every 3rd custkey
     - unknown keys:  every 15th custkey shifted by +1_000_000 (anti path)
@@ -53,75 +97,46 @@ def mapping_df(spark: SparkSession, d: str) -> DataFrame:
     - mandatory_reference: 'true' / 'false' / NULL / 'TRUE' (lower-cased later)
     """
     c = load(spark, d, "customer")
-    k = F.col("c_custkey")
-
-    def row(cur, ord_):
-        return [
-            cur.cast("string").alias("current_customer_id"),
-            F.concat(F.lit("X"), cur.cast("string")).alias("new_customer_id"),
-            F.concat(F.lit("SRC"), (k % 3).cast("string")).alias("new_source_id"),
-            F.concat(F.lit("ST"), ((k % 7) + ord_).cast("string")).alias("new_store_id"),
-            F.concat(F.lit("Store "), ((k % 7) + ord_).cast("string")).alias("new_store_name"),
-            F.when(k % 4 == 0, "true")
-            .when(k % 4 == 1, "false")
-            .when(k % 4 == 2, F.lit(None).cast("string"))
-            .otherwise("TRUE")
-            .alias("mandatory_reference"),
-            F.when(k % 7 == 0, F.lit(None).cast("string"))
-            .when(k % 7 == 1, "-12D")
-            .when(k % 7 == 2, "-9D")
-            .otherwise("-3D")
-            .alias("delivery_day"),
-            F.lit(ord_).alias("ord"),
-        ]
-
-    known = c.where(k % 3 == 0).select(*row(k, 0))
-    unknown = c.where(k % 15 == 0).select(*row(k + 1000000, 0))
-    dups = c.where(k % 9 == 0).select(*row(k, 1))
-    return known.unionByName(unknown).unionByName(dups)
+    branches = [
+        c.where(f"c_custkey % {step} = 0").selectExpr(
+            *_mapping_columns(key_offset, ord_)
+        )
+        for step, key_offset, ord_ in MAPPING_SPEC
+    ]
+    return reduce(DataFrame.unionByName, branches)
 
 
-#: oracle-side reconstruction of mapping_df (kept in lockstep): one row
-#: shape over the (step, key_offset, ord) spec of its three branches —
-#: known keys, unknown keys, duplicate keys
-MAPPING_SQL = """
+#: the DuckDB twin of ``mapping_df``: the spec joined as VALUES around
+#: the same row
+_SELECT_SEP = ",\n         "
+MAPPING_SQL = f"""
 WITH raw_mapping AS (
-  SELECT CAST(c_custkey + s.key_offset AS VARCHAR) AS current_customer_id,
-         'X' || CAST(c_custkey + s.key_offset AS VARCHAR) AS new_customer_id,
-         'SRC' || CAST(c_custkey % 3 AS VARCHAR) AS new_source_id,
-         'ST' || CAST(c_custkey % 7 + s.ord AS VARCHAR) AS new_store_id,
-         'Store ' || CAST(c_custkey % 7 + s.ord AS VARCHAR) AS new_store_name,
-         CASE c_custkey % 4 WHEN 0 THEN 'true' WHEN 1 THEN 'false'
-                            WHEN 2 THEN NULL ELSE 'TRUE' END AS mandatory_reference,
-         CASE c_custkey % 7 WHEN 0 THEN NULL WHEN 1 THEN '-12D'
-                            WHEN 2 THEN '-9D' ELSE '-3D' END AS delivery_day,
-         s.ord
+  SELECT {_SELECT_SEP.join(_mapping_columns("s.key_offset", "s.ord"))}
   FROM customer
-  JOIN (VALUES (3, 0, 0), (15, 1000000, 0), (9, 0, 1)) AS s(step, key_offset, ord)
+  JOIN (VALUES {", ".join(str(r) for r in MAPPING_SPEC)}) AS s(step, key_offset, ord)
     ON c_custkey % s.step = 0
 )
 """
 
-MAPPING_DEDUP_SQL = """
+#: first-wins order of the mapping stand-in (J4)
+MAPPING_ORDER = "ord, new_store_id"
+
+MAPPING_DEDUP_SQL = f"""
 , mapping AS (
   SELECT * FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY current_customer_id
-                                 ORDER BY ord, new_store_id) AS rn
+                                 ORDER BY {MAPPING_ORDER}) AS rn
     FROM raw_mapping
   ) WHERE rn = 1
 )
 """
 
 
-def first_wins(m: DataFrame) -> DataFrame:
-    """One mapping row per ``current_customer_id``: the first by
-    ``(ord, new_store_id)`` (J4)."""
-    w = Window.partitionBy("current_customer_id").orderBy("ord", "new_store_id")
-    return (
-        m.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn", "ord")
-    )
+def first_wins(m: DataFrame, order: str = MAPPING_ORDER) -> DataFrame:
+    """One mapping row per ``current_customer_id``: the first by the SQL
+    ORDER BY list ``order`` (J4). Drops the rank column ``ord``."""
+    rank = f"row_number() OVER (PARTITION BY current_customer_id ORDER BY {order})"
+    return m.withColumn("rn", F.expr(rank)).where("rn = 1").drop("rn", "ord")
 
 
 def reconcile(mapping: DataFrame, customers: DataFrame) -> DataFrame:
@@ -166,9 +181,7 @@ def reconcile(mapping: DataFrame, customers: DataFrame) -> DataFrame:
 def reconciliation(spark: SparkSession, d: str) -> DataFrame:
     """mapping → dedup first-wins → ``reconcile`` against the customer
     ids (the whole of migrate.py:108-270 as one plan)."""
-    corpus = load(spark, d, "customer").select(
-        F.col("c_custkey").cast("string").alias("id")
-    )
+    corpus = load(spark, d, "customer").selectExpr("CAST(c_custkey AS STRING) AS id")
     return reconcile(first_wins(mapping_df(spark, d)), corpus)
 
 

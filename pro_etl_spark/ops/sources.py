@@ -18,24 +18,10 @@ import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.types import StringType, StructField, StructType
 
 from pro_etl_spark.io import dataset_memo, load
-from pro_etl_spark.ops.migration import MAPPING_SQL, mapping_df, reconciliation
+from pro_etl_spark.ops.migration import CSV_SCHEMA, MAPPING_SQL, mapping_df, reconciliation
 from pro_etl_spark.registry import register
-
-MAPPING_SCHEMA = StructType(
-    [
-        StructField("current_customer_id", StringType(), False),
-        StructField("new_customer_id", StringType(), False),
-        StructField("new_source_id", StringType(), False),
-        StructField("new_store_id", StringType(), False),
-        StructField("new_store_name", StringType(), False),
-        StructField("mandatory_reference", StringType(), True),
-        StructField("delivery_day", StringType(), True),
-        StructField("ord", StringType(), True),
-    ]
-)
 
 
 def _tmp(sub: str) -> str:
@@ -79,21 +65,18 @@ def scan_csv(spark: SparkSession, d: str) -> DataFrame:
     pandas infer, migrate.py:78-79 — SURVEY §1.5 fixes that). Write the
     mapping to CSV, read it back schema-first; the oracle recomputes
     the same rows from the parquet base, proving a lossless round-trip
-    (nulls included)."""
+    (nulls included). The file holds the CSV contract's columns, not
+    the stand-in's first-wins rank ``ord``."""
     path = _tmp(f"scan_csv_{dataset_suffix(d)}")
     _write_once(
         path,
         lambda: mapping_df(spark, d)
+        .drop("ord")
         .write.mode("overwrite")
         .option("header", True)
         .csv(path),
     )
-    return (
-        spark.read.schema(MAPPING_SCHEMA)
-        .option("header", True)
-        .csv(path)
-        .drop("ord")
-    )
+    return spark.read.schema(CSV_SCHEMA).option("header", True).csv(path)
 
 
 @register("scan_latest_files")  # rows-only: file mtimes are run-dependent
@@ -104,7 +87,7 @@ def scan_latest_files(spark: SparkSession, d: str) -> DataFrame:
     a file scan gives per-row file path + modification time; order and
     limit on the distinct file set."""
     path = _tmp(f"latest_{dataset_suffix(d)}")
-    m = mapping_df(spark, d)
+    m = mapping_df(spark, d).drop("ord")
     for i in range(3):  # several distinct files, as in the reference's input dir
         _write_once(
             f"{path}/f{i}",
@@ -113,7 +96,7 @@ def scan_latest_files(spark: SparkSession, d: str) -> DataFrame:
             .option("header", True)
             .csv(f"{path}/f{i}"),
         )
-    df = spark.read.schema(MAPPING_SCHEMA).option("header", True).csv(f"{path}/f*")
+    df = spark.read.schema(CSV_SCHEMA).option("header", True).csv(f"{path}/f*")
     return (
         df.select(
             F.col("_metadata.file_path").alias("file_path"),

@@ -42,12 +42,15 @@ Split of labor:
   the header and footer as rows around each shard's records, so every
   shard is a complete document written executor-side.
 
-Reading splits the text at record boundaries (`record_fragments`, its
-gate SQL text too) and parses each record with ``from_xml``: the text
+Reading is one record parse, `read_records`: the text is split at
+record boundaries (`record_fragments`, its gate SQL text too) and each
+record parsed with ``from_xml`` under an explicit schema. The text
 source splits one large file across tasks, where Spark's native XML
-source reads a file as one split. Both parsers handle namespaced
-attributes fine (``dt:dt`` → struct field ``_dt:dt``).
-`read_xml_document` keeps the native source for whole documents.
+source reads a file as one split. The CLI's export scan and
+`read_manifest_document` both read through it. A record's namespaced
+attributes parse without the envelope's declarations (``dt:dt`` →
+struct field ``_dt:dt``). `read_xml_document` keeps the native source
+for whole documents.
 """
 
 from __future__ import annotations
@@ -72,9 +75,6 @@ ENFINITY_NSMAP = {
 
 #: the namespace the ``xml`` prefix is bound to without a declaration
 XML_NS = "http://www.w3.org/XML/1998/namespace"
-
-#: records ``read_manifest_document`` samples to infer a record schema
-INFER_SAMPLE_RECORDS = 64
 
 
 #: XML 1.0 escapes for element text, in the order applied (ampersands
@@ -391,87 +391,45 @@ def record_fragments(
     )
 
 
+def read_records(
+    spark: SparkSession,
+    paths: str | list[str],
+    schema: T.StructType,
+    row_tag: str = "customer",
+) -> DataFrame:
+    """The ``<row_tag>`` records of XML text, one row per record with
+    ``schema``'s fields as columns, in file order: ``record_fragments``
+    cuts the text at the end tags and ``from_xml`` parses each record
+    under ``schema``. A record's prefixed attributes (``dt:dt``) need no
+    namespace binding; they parse to ``_``-prefixed fields
+    (``_dt:dt``)."""
+    return (
+        record_fragments(spark, paths, row_tag)
+        .selectExpr(f"from_xml(xml, {quote(schema.json())}) AS r")
+        .selectExpr("r.*")
+    )
+
+
 def read_manifest_document(
     spark: SparkSession,
     manifest_path: str,
+    schema: T.StructType,
     row_tag: str = "customer",
-    schema=None,
 ) -> tuple[str, dict[str, str], DataFrame]:
     """Read a manifest document WITHOUT composing it: root tag +
     envelope attrs come from the O(1) header part; records come
-    straight off the distributed fragment parts. The native XML
-    source can't read root-less fragments (one root per file — it
-    corrupt-records everything after the first element; measured), so
-    the fragment read is built from two JVM-side primitives instead:
-    ``record_fragments`` cuts the parts at the record end tags, and
-    ``from_xml`` parses each record under a synthetic wrapper that
-    re-binds the envelope's namespace declarations (fragments inherit
-    them from the root at compose time; standalone they'd be
-    undeclared). Fully distributed, no Python in the row path, and the
-    single physical file never exists — this is the consumption path
-    at scale.
+    straight off the distributed record parts through ``read_records``
+    under ``schema``, the fields of ONE record (the native XML source
+    can't read root-less fragments: one root per file, it
+    corrupt-records everything after the first element). Fully
+    distributed, no Python in the row path, and the single physical
+    file never exists — this is the consumption path at scale. A
+    document without records reads as zero rows.
 
-    Schema: pass ``schema`` (DDL string or StructType of ONE record's
-    fields) for production reads — heterogeneous corpora REQUIRE it
-    for guaranteed fidelity. Without it, the record schema is inferred
-    from a bounded MULTI-record sample (``INFER_SAMPLE_RECORDS``)
-    merged through one ``schema_of_xml`` call, so a child
-    element that repeats in ANY sampled record (the real corpus has
-    1-user and 2-user customers) infers as an array and single-child
-    records parse as 1-element arrays — uniform, lossless. (The r11
-    head(1) form let the first record's shape decide: a 1-user sample
-    inferred ``user`` as a struct and silently mangled 2-user records,
-    ADVICE_r11.) Residual inference risk: a field that repeats ONLY in
-    records outside the sample still infers as a lone struct — that is
-    inherent to bounded sampling, which is why ``schema`` exists.
-
-    Returns (root_tag, root_attrs, records) with the record fields
-    under their parsed struct columns."""
+    Returns (root_tag, root_attrs, records)."""
     paths = _manifest_paths(manifest_path)
     root_tag, root_attrs = read_root_attrs(paths[0])
-    with open(paths[0], "r", encoding="utf-8") as r:
-        ns = " ".join(re.findall(r'xmlns:[^\s=]+="[^"]*"', r.read()))
-    frags = record_fragments(spark, paths[1:-1], row_tag)
-    wrapped = frags.select(
-        F.concat(F.lit(f"<w {ns}>"), F.col("xml"), F.lit("</w>")).alias("xml")
-    )
-    if schema is not None:
-        if isinstance(schema, T.StructType):
-            wrapper_schema = T.StructType(
-                [T.StructField(row_tag, schema)]
-            )
-        else:
-            wrapper_schema = f"STRUCT<{row_tag}: {schema}>"
-        return root_tag, root_attrs, wrapped.select(
-            F.from_xml("xml", wrapper_schema).alias("w")
-        ).select(f"w.{row_tag}.*")
-
-    # bounded MULTI-record sample merged through ONE schema_of_xml
-    # call: with >=2 records under the wrapper the inferencer unions
-    # field shapes across records AND sees repetition, so a child that
-    # repeats anywhere in the sample becomes an array for every record
-    sample_rows = frags.head(INFER_SAMPLE_RECORDS)
-    if not sample_rows:
-        raise ValueError(
-            f"manifest {manifest_path} has no {row_tag} records to "
-            "infer a schema from — pass an explicit schema= for "
-            "empty documents"
-        )
-    merged = f"<w {ns}>" + "".join(r[0] for r in sample_rows) + "</w>"
-    ddl = spark.range(1).select(
-        F.schema_of_xml(F.lit(merged)).alias("s")
-    ).first()[0]
-    parsed = wrapped.select(F.from_xml("xml", ddl).alias("w"))
-    field = parsed.schema["w"].dataType[row_tag].dataType
-    if isinstance(field, T.ArrayType):
-        # multi-record inference wraps the row tag itself in an array;
-        # each fragment holds exactly one record, so [0] unwraps it
-        records = parsed.select(
-            F.col(f"w.{row_tag}").getItem(0).alias("_r")
-        ).select("_r.*")
-    else:
-        records = parsed.select(f"w.{row_tag}.*")
-    return root_tag, root_attrs, records
+    return root_tag, root_attrs, read_records(spark, paths[1:-1], schema, row_tag)
 
 
 def write_xml_document_sharded(

@@ -244,12 +244,17 @@ def test_scale_mode_writes_manifest_document(spark, tmp_path, cli_out):
         open(composed, "rb").read() == open(cli_out["xml"], "rb").read()
     )
     root_tag, attrs, records = xml_io.read_manifest_document(
-        spark, str(manifest)
+        spark, str(manifest), migrate_cli.XML_SCHEMA
     )
     assert root_tag == "enfinity"
     assert attrs["major"] == "7"
     got = {r[0] for r in records.select("_id").collect()}
     assert got == {"N1001", "N1002", "N1003"}
+    # the manifest's records are the flat delta's, in document order,
+    # through the one record parse
+    flat = xml_io.read_records(spark, cli_out["xml"], migrate_cli.XML_SCHEMA)
+    assert records.schema == flat.schema
+    assert records.collect() == flat.collect()
 
 
 def test_log_statuses(spark, cli_out):
@@ -323,6 +328,59 @@ def test_record_plan_jvm_round_trip_budget(spark, tmp_path, monkeypatch):
     reconcile(mapping, customers)
     monkeypatch.undo()
     assert 0 < len(calls) <= 300, f"{len(calls)} py4j round trips"
+
+
+def test_reconciliation_jvm_round_trip_budget(spark, monkeypatch):
+    """Building ``migration_reconciliation``'s plan (the mapping
+    stand-in, its first-wins window and ``reconcile`` against the
+    corpus) costs a few hundred py4j round trips: each mapping branch is
+    one SQL-text projection. Spelled in the Column DSL it cost about
+    1,750."""
+    from py4j.java_gateway import GatewayClient
+
+    from pro_etl_spark.ops.migration import reconciliation
+
+    sf = "/root/testdata/sf0.001"
+    reconciliation(spark, sf)  # memoizes the dataset's parquet schema
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    reconciliation(spark, sf)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 400, f"{len(calls)} py4j round trips"
+
+
+def test_first_wins_across_mapping_files(spark, tmp_path):
+    """A glob matching two mapping files keeps, per key, the row of the
+    path-sorted first file, and within one file the earlier row. The
+    second file is the larger one, so Spark reads it first and row ids
+    alone would pick its rows."""
+    header = FIXTURE_CSV.splitlines()[0] + "\n"
+    (tmp_path / "a.csv").write_text(
+        header
+        + "K1,A1,S,ST,Store,true,-2D\n"
+        + "K2,A2,S,ST,Store,true,-2D\n"
+        + "K2,A2-late,S,ST,Store,true,-2D\n",
+        encoding="utf-8",
+    )
+    (tmp_path / "b.csv").write_text(
+        header
+        + "K1,B1,S,ST,Store,true,-2D\n"
+        + "K3,B3,S,ST,Store,true,-2D\n"
+        + "K3,B3-late,S,ST,Store,true,-2D\n"
+        + "".join(f"P{i},BP{i},S,ST,Store,true,-2D\n" for i in range(50)),
+        encoding="utf-8",
+    )
+    m = migrate_cli.read_mapping_csv(spark, str(tmp_path / "*.csv"))
+    got = {r.current_customer_id: r.new_customer_id for r in m.collect()}
+    assert (got["K1"], got["K2"], got["K3"]) == ("A1", "A2", "B3")
+    assert len(got) == 3 + 50
+    assert m.columns == migrate_cli.CSV_SCHEMA.fieldNames()
 
 
 def test_delta_xml_document(spark, cli_out):

@@ -11,7 +11,7 @@ import pyspark.sql.functions as F
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from pro_etl_spark.ops.migration import apply_migration
+from pro_etl_spark.ops.migration import CSV_SCHEMA, apply_migration
 
 RUN_TS = "2026-08-13T00:00:00+00:00"
 
@@ -23,11 +23,6 @@ NESTED_SCHEMA = (
     "credentials:struct<login:string,last_logged_in:string>, "
     "user_groups:array<string>, "
     "custom_attributes:array<struct<name:string,dt:string,value:string>>>>"
-)
-MAPPING_SCHEMA = (
-    "current_customer_id string, new_customer_id string, new_source_id string, "
-    "new_store_id string, new_store_name string, mandatory_reference string, "
-    "delivery_day string"
 )
 
 attr_name = st.sampled_from(
@@ -91,7 +86,7 @@ def test_migration_invariants(spark, docs, mrows):
     mapping = spark.createDataFrame(
         [(cid, f"X{cid}", "S1", "ST1", "Store One", mand, dd)
          for cid, dd, mand in mrows],
-        MAPPING_SCHEMA,
+        CSV_SCHEMA,
     )
     out = apply_migration(nested, mapping, run_ts=RUN_TS).collect()
 

@@ -10,9 +10,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from pro_etl_spark import xml_io
-from pro_etl_spark.ops.migration import RUN_TS, apply_migration, mapping_df
+from pro_etl_spark.migrate_cli import XML_SCHEMA
+from pro_etl_spark.ops.migration import RUN_TS, apply_migration, first_wins, mapping_df
 from pro_etl_spark.ops.nested import nested_customers
-from pyspark.sql import Window
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,10 +29,7 @@ ROOT_ATTRS = {
 @pytest.fixture(scope="module")
 def migrated(spark):
     nested = nested_customers(spark, SF).drop("key")
-    m = mapping_df(spark, SF)
-    w = Window.partitionBy("current_customer_id").orderBy("ord", "new_store_id")
-    m = m.withColumn("rn", F.row_number().over(w)).where("rn = 1").drop("rn", "ord")
-    return apply_migration(nested, m)
+    return apply_migration(nested, first_wins(mapping_df(spark, SF)))
 
 
 @pytest.fixture(scope="module")
@@ -366,7 +363,7 @@ def test_manifest_reads_without_compose_and_hands_off_concat(spark, tmp_path):
     manifest = xml_io.write_xml_document_manifest(
         rendered, mdir, root_attrs=ROOT_ATTRS, nsmap=xml_io.ENFINITY_NSMAP
     )
-    root_tag, attrs, records = xml_io.read_manifest_document(spark, manifest)
+    root_tag, attrs, records = xml_io.read_manifest_document(spark, manifest, XML_SCHEMA)
     assert root_tag == "enfinity"
     assert attrs["major"] == "7"
     got = {
@@ -376,11 +373,8 @@ def test_manifest_reads_without_compose_and_hands_off_concat(spark, tmp_path):
         ).collect()
     }
     assert got == {r.id for r in n.select("id").collect()}
-    # heterogeneity fidelity (ADVICE_r11 medium): the corpus mixes
-    # 1-user and 2-user customers; head(1) inference let the first
-    # record's shape decide and silently dropped the second user. The
-    # merged multi-record inference must surface `user` as an array
-    # and round-trip the exact multiplicity for EVERY customer.
+    # heterogeneity fidelity: the corpus mixes 1-user and 2-user
+    # customers, and every customer's user count must round-trip
     from pyspark.sql import types as T
 
     assert isinstance(records.schema["user"].dataType, T.ArrayType)
@@ -431,7 +425,7 @@ def test_manifest_document_is_relocatable(spark, tmp_path):
 
     composed = xml_io.compose_manifest(moved, str(tmp_path / "doc.xml"))
     assert {c.attrib["id"] for c in ET.parse(composed).getroot()} == want
-    root_tag, attrs, records = xml_io.read_manifest_document(spark, moved)
+    root_tag, attrs, records = xml_io.read_manifest_document(spark, moved, XML_SCHEMA)
     assert (root_tag, attrs["major"]) == ("enfinity", "7")
     assert {r[0] for r in records.select(F.col("_id").cast("string")).collect()} == want
 
@@ -475,8 +469,8 @@ def test_manifest_of_empty_record_set_composes_valid_empty_document(
     spark, tmp_path
 ):
     """Zero records is a legal document (envelope only): the manifest
-    still composes to well-formed XML, and the fragment reader refuses
-    loudly (no schema to infer) instead of returning garbage."""
+    still composes to well-formed XML and reads back as zero rows under
+    the record schema."""
     empty = xml_io.customer_xml(
         nested_customers(spark, SF).drop("key")
     ).limit(0)
@@ -488,5 +482,7 @@ def test_manifest_of_empty_record_set_composes_valid_empty_document(
     root = ET.parse(composed).getroot()  # strict: raises if malformed
     assert root.tag == "enfinity"
     assert len(root) == 0
-    with pytest.raises(ValueError, match="no customer records"):
-        xml_io.read_manifest_document(spark, manifest)
+    root_tag, _attrs, records = xml_io.read_manifest_document(spark, manifest, XML_SCHEMA)
+    assert root_tag == "enfinity"
+    assert records.count() == 0
+    assert records.columns == XML_SCHEMA.fieldNames()
